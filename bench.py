@@ -350,10 +350,30 @@ def _suite_spread(totals):
     """max/min of the TIMED steady suite totals — the dispersion gate over
     the measured quantity itself (see CONTENTION_SUITE_SPREAD: child wall
     includes fixed priming, which dilutes suite-level dispersion)."""
-    vals = [t for t in totals if t]
+    vals = [t for t in totals if t is not None]
     if len(vals) < 2:
         return None
+    if min(vals) == 0:
+        # a zero total beside a nonzero one is unbounded dispersion: the
+        # gate must trip, not divide by zero
+        return 1.0 if max(vals) == 0 else float("inf")
     return round(max(vals) / min(vals), 2)
+
+
+def _detail_path():
+    """Where this run writes its detail record.  Explicit env wins; the
+    DEFAULT is a per-run suffixed name in the cwd (r15 ADVICE/VERDICT item
+    #2: the old cwd default `bench_detail.json` silently clobbered the
+    committed certified artifact whenever a run was launched from the repo
+    root — attempts d/e lost provenance mid-round and a later r15 run
+    overwrote attempt t's detail post-certification).  The committed copy
+    is refreshed deliberately by copying a chosen run's file in."""
+    path = os.environ.get("SPARK_GRAFT_BENCH_DETAIL")
+    if path:
+        return path
+    stamp = time.strftime("%Y%m%dT%H%M%S", time.gmtime())
+    return os.path.join(os.getcwd(),
+                        f"bench_detail.{stamp}-{os.getpid()}.json")
 
 
 def _spawn_with_telemetry(extra_argv):
@@ -476,18 +496,7 @@ def main():
               "in-guest busy regime; read this record on the per-query-min "
               "basis (README 'Series basis')", file=sys.stderr)
 
-    # Detail path: explicit env wins; the DEFAULT is a per-run suffixed
-    # name in the cwd (r15 ADVICE/VERDICT item #2: the old cwd default
-    # `bench_detail.json` silently clobbered the committed certified
-    # artifact whenever a run was launched from the repo root — attempts
-    # d/e lost provenance mid-round and the r15 driver run overwrote
-    # attempt t's detail post-certification).  The committed copy is
-    # refreshed deliberately by copying a chosen run's file in.
-    detail_path = os.environ.get("SPARK_GRAFT_BENCH_DETAIL")
-    if not detail_path:
-        stamp = time.strftime("%Y%m%dT%H%M%S", time.gmtime())
-        detail_path = os.path.join(
-            os.getcwd(), f"bench_detail.{stamp}-{os.getpid()}.json")
+    detail_path = _detail_path()
     tracked = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            "bench_detail.json")
     if os.path.abspath(detail_path) == tracked:
@@ -535,7 +544,7 @@ def main():
             "warmup_failures_max": _max_present(
                 steady_tel, lambda t: t.get("warmup_failures")),
         },
-        "detail": os.path.basename(detail_path),
+        "detail": os.path.abspath(detail_path),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
     detail = dict(line)

@@ -22,7 +22,7 @@ from typing import List, Optional
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf, PandasUDFType
+from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BinaryType, DoubleType, StructField, StructType
 
 _BIN = BinaryType()
@@ -35,18 +35,18 @@ from ..geom.model import Geometry
 
 
 # ---------------------------------------------------------------------------
-# SQL-facing grouped-agg UDFs
+# SQL-facing grouped-agg UDFs (Series -> scalar type hints: GROUPED_AGG)
 # ---------------------------------------------------------------------------
 
-@pandas_udf(_BIN, PandasUDFType.GROUPED_AGG)
-def st_union_aggr(wkb: pd.Series):
+@pandas_udf(_BIN)
+def st_union_aggr(wkb: pd.Series) -> Optional[bytes]:
     geoms = [from_wkb(b) for b in wkb if b is not None]
     u = A.union_all(geoms)
     return None if u is None else to_wkb(u)
 
 
-@pandas_udf(_BIN, PandasUDFType.GROUPED_AGG)
-def st_envelope_aggr(wkb: pd.Series):
+@pandas_udf(_BIN)
+def st_envelope_aggr(wkb: pd.Series) -> Optional[bytes]:
     import math
     xmin = ymin = math.inf
     xmax = ymax = -math.inf
@@ -68,8 +68,8 @@ def st_envelope_aggr(wkb: pd.Series):
     return to_wkb(Geometry.box(xmin, ymin, xmax, ymax))
 
 
-@pandas_udf(_BIN, PandasUDFType.GROUPED_AGG)
-def st_intersection_aggr(wkb: pd.Series):
+@pandas_udf(_BIN)
+def st_intersection_aggr(wkb: pd.Series) -> Optional[bytes]:
     acc: Optional[Geometry] = None
     for b in wkb:
         if b is None:
@@ -81,8 +81,8 @@ def st_intersection_aggr(wkb: pd.Series):
     return None if acc is None else to_wkb(acc)
 
 
-@pandas_udf(_BIN, PandasUDFType.GROUPED_AGG)
-def st_centroid_aggr(wkb: pd.Series):
+@pandas_udf(_BIN)
+def st_centroid_aggr(wkb: pd.Series) -> Optional[bytes]:
     buf = A.centroid_buffer_zero()
     for b in wkb:
         if b is not None:

@@ -4,12 +4,13 @@ The reference injects a Sedona planner strategy that plans
 ``Join ... ON ST_pred(l.geo, r.geo)`` as ``BroadcastIndexJoin`` or
 ``RangeJoin`` (``SedonaIcebergExtensions.scala:47``,
 ``TestSedonaIcebergExtension.scala:122,137``).  This engine plans at the API
-level instead (SURVEY.md §4.2) and emits plain DataFrame operations Catalyst
-and AQE can keep optimizing:
+level instead (SURVEY.md §4.2): every join is ONE ``spark.sql`` statement
+over the two input DataFrames (passed as named args), which Catalyst and AQE
+keep optimizing:
 
-- **broadcast strategy** (small side): native broadcast join on envelope
-  conjuncts, then exact refinement — Spark plans a BroadcastNestedLoopJoin /
-  BroadcastHashJoin; the analogue of Sedona's BroadcastIndexJoin.
+- **broadcast strategy** (small side): a ``BROADCAST``-hinted theta join on
+  envelope conjuncts plus exact refinement — Spark plans a
+  BroadcastNestedLoopJoin; the analogue of Sedona's BroadcastIndexJoin.
 - **grid strategy** (both sides large): each row is assigned the grid cells
   its envelope overlaps (native ``sequence``+``explode`` — no Python), the
   join becomes a cell-id **equi-join** (sort-merge/shuffled-hash + AQE skew
@@ -27,89 +28,38 @@ from __future__ import annotations
 
 from typing import Optional, Tuple
 
-from pyspark.sql import Column, DataFrame, functions as F
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, functions as F
 
 from ..functions import udfs
+from ..functions.api import add_geometry
 
-# exact-refinement UDF per predicate name
-_PRED_UDFS = {
-    "intersects": udfs.st_intersects,
-    "contains": udfs.st_contains,
-    "within": udfs.st_within,
-    "covers": udfs.st_covers,
-    "covered_by": udfs.st_coveredby,
-    "touches": udfs.st_touches,
-    "crosses": udfs.st_crosses,
-    "overlaps": udfs.st_overlaps,
-    "equals": udfs.st_equals,
+# exact refinement per predicate: the registered SQL name the statement
+# calls, and the UDF registered under that name if the session lacks it
+_PRED_FUNCS = {
+    "intersects": ("ST_Intersects", udfs.st_intersects),
+    "contains": ("ST_Contains", udfs.st_contains),
+    "within": ("ST_Within", udfs.st_within),
+    "covers": ("ST_Covers", udfs.st_covers),
+    "covered_by": ("ST_CoveredBy", udfs.st_coveredby),
+    "touches": ("ST_Touches", udfs.st_touches),
+    "crosses": ("ST_Crosses", udfs.st_crosses),
+    "overlaps": ("ST_Overlaps", udfs.st_overlaps),
+    "equals": ("ST_Equals", udfs.st_equals),
+    "dwithin": ("ST_Distance", udfs.st_distance),
 }
 
-_SYM = {"intersects", "touches", "crosses", "overlaps", "equals", "dwithin"}
-
-
-def _ensure_env(df: DataFrame, geom_col: str, prefix: str) -> Tuple[DataFrame, str]:
-    """Attach envelope fields <prefix>_xmin.. (native if an _env struct exists)."""
-    env_struct = f"{geom_col}_env"
-    cols = set(df.columns)
-    if env_struct in cols:
-        src = F.col(env_struct)
-        df = df.select(
-            "*",
-            src["xmin"].alias(f"{prefix}_xmin"), src["ymin"].alias(f"{prefix}_ymin"),
-            src["xmax"].alias(f"{prefix}_xmax"), src["ymax"].alias(f"{prefix}_ymax"),
-        )
-        return df, prefix
-    from ..functions.api import add_geometry
-    df = add_geometry(df, geom_col, f"_tmp_env_{prefix}")
-    src = F.col(f"_tmp_env_{prefix}")
-    df = df.select(
-        "*",
-        src["xmin"].alias(f"{prefix}_xmin"), src["ymin"].alias(f"{prefix}_ymin"),
-        src["xmax"].alias(f"{prefix}_xmax"), src["ymax"].alias(f"{prefix}_ymax"),
-    ).drop(f"_tmp_env_{prefix}")
-    return df, prefix
-
-
-def _env_join_cond(lp: str, rp: str, predicate: str, d: float) -> Column:
-    """Envelope-level (relaxed) join condition — superset filter, exact
-    refinement retained, mirroring SedonaPredicatePushDown.scala:77,138-144."""
-    if predicate in ("contains", "covers"):
-        return (
-            (F.col(f"{lp}_xmin") <= F.col(f"{rp}_xmin")) & (F.col(f"{lp}_xmax") >= F.col(f"{rp}_xmax"))
-            & (F.col(f"{lp}_ymin") <= F.col(f"{rp}_ymin")) & (F.col(f"{lp}_ymax") >= F.col(f"{rp}_ymax"))
-        )
-    if predicate in ("within", "covered_by"):
-        return (
-            (F.col(f"{rp}_xmin") <= F.col(f"{lp}_xmin")) & (F.col(f"{rp}_xmax") >= F.col(f"{lp}_xmax"))
-            & (F.col(f"{rp}_ymin") <= F.col(f"{lp}_ymin")) & (F.col(f"{rp}_ymax") >= F.col(f"{lp}_ymax"))
-        )
-    pad = float(d) if predicate == "dwithin" else 0.0
-    return (
-        (F.col(f"{lp}_xmax") + pad >= F.col(f"{rp}_xmin")) & (F.col(f"{rp}_xmax") >= F.col(f"{lp}_xmin") - pad)
-        & (F.col(f"{lp}_ymax") + pad >= F.col(f"{rp}_ymin")) & (F.col(f"{rp}_ymax") >= F.col(f"{lp}_ymin") - pad)
-    )
-
-
-def _exact_cond(lg: str, rg: str, predicate: str, d: float,
-                rect_l: bool, rect_r: bool) -> Optional[Column]:
-    """Exact refinement; None when the envelope condition is already exact —
-    both operands are their own envelopes (points or axis-aligned rects), so
-    the relaxed predicate IS the exact predicate and no UDF enters the plan."""
-    if predicate == "dwithin":
-        return udfs.st_distance(F.col(lg), F.col(rg)) <= F.lit(float(d))
-    if rect_l and rect_r and predicate in (
-            "intersects", "contains", "covers", "within", "covered_by"):
-        return None
-    return _PRED_UDFS[predicate](F.col(lg), F.col(rg))
+_HOW_SQL = {"inner": "JOIN", "left": "LEFT OUTER JOIN",
+            "left_semi": "LEFT SEMI JOIN", "left_anti": "LEFT ANTI JOIN"}
 
 
 def _resolve_auto_strategy(right: DataFrame,
                            broadcast_threshold_rows: int) -> str:
     """broadcast-vs-grid resolution for ``strategy="auto"``, probed on the
-    RAW right side so the stmt and operator constructions resolve
-    identically (r12 ADVICE: Project nodes RESCALE Catalyst's sizeInBytes
-    by row width, so probing a renamed/env-flattened projection could flip
-    a borderline join under one construction but not the other).
+    RAW right side: Project nodes RESCALE Catalyst's sizeInBytes by row
+    width, so probing the env-attached or renamed projection could flip a
+    borderline join.
 
     Catalyst plan statistics (file-size-derived for parquet scans,
     filter-estimated, computed WITHOUT running a job) decide; the
@@ -120,14 +70,38 @@ def _resolve_auto_strategy(right: DataFrame,
         size = int(right._jdf.queryExecution().optimizedPlan()
                    .stats().sizeInBytes())
         return "broadcast" if size <= 64 * 1024 * 1024 else "grid"
-    except Exception:
+    except Py4JJavaError:
+        # a plan whose statistics cannot be computed: fall to the probe
         pass
     try:
         r_small = (right.limit(broadcast_threshold_rows).count()
                    < broadcast_threshold_rows)
-    except Exception:
+    except Py4JJavaError:
+        # the probe job failed; grid is correct for any size, and the join
+        # itself surfaces the input's failure when it runs
         r_small = False
     return "broadcast" if r_small else "grid"
+
+
+def _shape_hint(df: DataFrame, col: str) -> Optional[str]:
+    """The ``geom_shape`` column metadata stamped by the geometry builders
+    (with_point_geometry/with_box_geometry) — it travels through selects,
+    views, and parquet, so SQL-text joins get the Python-free
+    exact-envelope plan without the caller passing flags."""
+    try:
+        md = df.schema[col].metadata or {}
+    except KeyError:
+        return None          # no such column: the statement reports it
+    return md.get("geom_shape")
+
+
+def _with_env(df: DataFrame, geom_col: str, tmp: str) -> Tuple[DataFrame, str]:
+    """(frame, envelope struct column): the persisted ``<geom>_env`` struct
+    when present, else one attached under ``tmp`` by the envelope UDF."""
+    env = f"{geom_col}_env"
+    if env in df.columns:
+        return df, env
+    return add_geometry(df, geom_col, tmp), tmp
 
 
 def spatial_join(
@@ -144,309 +118,227 @@ def spatial_join(
     right_is_points: bool = False,
     left_is_rects: bool = False,
     right_is_rects: bool = False,
-    construction: str = "auto",
 ) -> DataFrame:
     """Join two DataFrames on a spatial predicate between WKB columns.
 
     ``how``: inner | left (outer, right side null-extended) | left_semi |
     left_anti.  Columns of both inputs are kept (right's prefixed with
-    ``r_`` on collision) for inner/left joins.
+    ``r_`` on collision) for inner/left joins; semi/anti keep the left's.
 
-    ``left_is_points`` / ``right_is_points`` / ``right_is_rects`` are
-    optional exactness hints: when a side is known to be all points (or the
-    right side all axis-aligned rectangles), the envelope algebra is already
-    the exact predicate and the refinement UDF is dropped from the plan.
+    ``left_is_points`` / ``right_is_points`` / ``left_is_rects`` /
+    ``right_is_rects`` are optional exactness hints: when a side is known to
+    be all points (or all axis-aligned rectangles), the envelope algebra is
+    already the exact predicate and the refinement UDF is dropped from the
+    plan.  Without them the envelope prefilter is refined by the registered
+    ``ST_*`` function.
 
-    ``construction``: "auto" (default) emits the grid join as ONE
-    ``spark.sql`` statement when the shape allows it — inner join, grid
-    strategy, persisted ``<geom>_env`` structs on both sides, and a fully
-    native (hint-exact) condition; everything else takes the operator
-    path.  "operator" forces the classic Dataset-op chain (the
-    differential gates compare the two); "stmt" forces the statement and
-    raises when the shape is ineligible.  Results and physical plan shape
-    are identical by construction — the statement exists because
-    classic-mode PySpark analyzes EAGERLY per Dataset op, so the
-    operator chain re-analyzes its growing subtree each step (measured
-    r11: ~0.26–0.30 s of pure construction per declared spatial join, of
-    a 2.05 s suite-wide construction total); one statement = one parse,
-    one analysis (the exact-Jaccard precedent, pipeline/dedup.py).
+    Every shape — both strategies, every ``how``, hint-exact or
+    UDF-refined, with or without persisted ``<geom>_env`` structs — is
+    built as ONE ``spark.sql`` statement over the inputs passed as
+    DataFrame named args (no temp views): one parse, one analysis, where
+    a chain of eager Dataset ops re-analyzes its growing subtree at every
+    step.  An input without a ``<geom>_env`` struct gets one from the
+    envelope UDF; it stays out of the output columns.
     """
-    if predicate not in _PRED_UDFS and predicate != "dwithin":
+    if predicate not in _PRED_FUNCS:
         raise ValueError(f"unsupported predicate {predicate!r}")
+    if how not in _HOW_SQL:
+        raise ValueError(f"unsupported join type {how!r}")
     lg, rg = on
-
-    # shape hints can also arrive as column metadata stamped by the geometry
-    # builders (with_point_geometry/with_box_geometry) — it travels through
-    # selects, views, and parquet, so SQL-text joins get the Python-free
-    # exact-envelope plan without the caller passing flags
-    def _shape_hint(df: DataFrame, col: str) -> Optional[str]:
-        try:
-            md = df.schema[col].metadata or {}
-        except Exception:
-            return None
-        return md.get("geom_shape")
-
     if not (left_is_points or left_is_rects):
         h = _shape_hint(left, lg)
         left_is_points, left_is_rects = h == "points", h == "rects"
     if not (right_is_points or right_is_rects):
         h = _shape_hint(right, rg)
         right_is_points, right_is_rects = h == "points", h == "rects"
-
-    # ---- single-statement fast path (round 12; see ``construction``) ----
-    if construction not in ("auto", "operator", "stmt"):
-        raise ValueError(f"unsupported construction {construction!r}")
-    if construction != "operator":
-        native_sql = _native_cond_sql(predicate, d, left_is_points,
-                                      left_is_rects, right_is_points,
-                                      right_is_rects)
-        stmt_ok = (how == "inner" and native_sql is not None
-                   and f"{lg}_env" in left.columns
-                   and f"{rg}_env" in right.columns)
-        if stmt_ok and strategy == "auto":
-            # THE auto resolution — one helper, probed on the raw right
-            # side in both constructions (r12 ADVICE)
-            strategy = _resolve_auto_strategy(right, broadcast_threshold_rows)
-        stmt_ok = stmt_ok and strategy == "grid"
-        if construction == "stmt" and not stmt_ok:
-            raise ValueError(
-                "construction='stmt' requires an inner grid join with "
-                "persisted <geom>_env structs and a hint-exact condition")
-        if stmt_ok:
-            if grid_size is None:
-                grid_size = _grid_size_from_env(left, right, lg, rg, d)
-            return _stmt_grid_join(left, right, lg, rg, native_sql,
-                                   float(grid_size), d)
-
     if strategy == "auto":
-        # same helper, same RAW-right probe frame as the stmt fast path
-        # above — resolved BEFORE _ensure_env/rename so neither
-        # construction's projections can flip a borderline join (r12
-        # ADVICE: Project rescales Catalyst's size estimate by row width)
         strategy = _resolve_auto_strategy(right, broadcast_threshold_rows)
+    if strategy not in ("grid", "broadcast"):
+        raise ValueError(f"unsupported strategy {strategy!r}")
 
-    left, lp = _ensure_env(left, lg, "_l")
-    right, rp = _ensure_env(right, rg, "_r")
+    cond, reads_geom = _cond_sql(predicate, d, left_is_points, left_is_rects,
+                                 right_is_points, right_is_rects)
+    spark = left.sparkSession
+    if reads_geom:
+        name, fn = _PRED_FUNCS[predicate]
+        if not spark.catalog.functionExists(name):
+            spark.udf.register(name, fn)
 
-    # resolve collisions before join — ONE projection (toDF aliases every
-    # column in a single plan node, keeping column metadata/shape hints),
-    # not a withColumnRenamed per collision: each of those is a separate
-    # driver round-trip + plan rewrite, and this builder runs on the
-    # interactive path (measured ~0.1s of per-join construction time)
+    left_in, lenv = _with_env(left, lg, "_l_env")
+    right_in, renv = _with_env(right, rg, "_r_env")
+    # the r_ collision rename plan_spatial_join_sql reads back
     common = set(left.columns) & set(right.columns)
-    if common:
-        right_renamed = right.toDF(
-            *[f"r_{c}" if c in common else c for c in right.columns])
-    else:
-        right_renamed = right
-    rg2 = f"r_{rg}" if rg in common else rg
+    rname = {c: (f"r_{c}" if c in common else c) for c in right_in.columns}
+    cond = cond.format(
+        lx0=f"l.`{lenv}`.`xmin`", ly0=f"l.`{lenv}`.`ymin`",
+        lx1=f"l.`{lenv}`.`xmax`", ly1=f"l.`{lenv}`.`ymax`",
+        rx0=f"r.`{rname[renv]}`.`xmin`", ry0=f"r.`{rname[renv]}`.`ymin`",
+        rx1=f"r.`{rname[renv]}`.`xmax`", ry1=f"r.`{rname[renv]}`.`ymax`",
+        lg=f"l.`{lg}`", rg=f"r.`{rname[rg]}`")
+    lout = [f"l.`{c}`" for c in left.columns]
+    rout = ([f"r.`{rname[c]}`" for c in right.columns]
+            if how in ("inner", "left") else [])
 
-    env_cond = _env_join_cond(lp, rp, predicate, d)
-
-    rect_l = left_is_points or left_is_rects  # side == its own envelope
-    rect_r = right_is_points or right_is_rects
-
-    # does the final join condition ever read the RAW geometry columns?
-    # (False for every hint-exact branch, where envelope algebra IS the
-    # predicate — lets the outer/semi/anti row-id hash skip the geometry
-    # column so Catalyst can still prune a UDF-built geometry away)
-    cond_reads_geom = True
-    if predicate == "dwithin" and left_is_points and right_is_points:
-        # fully native distance join: (x1-x2)² + (y1-y2)² ≤ d²
-        dx = F.col(f"{lp}_xmin") - F.col(f"{rp}_xmin")
-        dy = F.col(f"{lp}_ymin") - F.col(f"{rp}_ymin")
-        exact: Optional[Column] = (dx * dx + dy * dy) <= F.lit(float(d) * float(d))
-        cond_reads_geom = False
-    elif predicate == "contains" and right_is_points and not left_is_points:
-        # OGC contains over a point right side: the point must be in the left
-        # interior → strict envelope bounds (exact when left rows are rects,
-        # a superset prefilter refined by the UDF otherwise)
-        env_cond = (
-            (F.col(f"{lp}_xmin") < F.col(f"{rp}_xmin")) & (F.col(f"{lp}_xmax") > F.col(f"{rp}_xmax"))
-            & (F.col(f"{lp}_ymin") < F.col(f"{rp}_ymin")) & (F.col(f"{lp}_ymax") > F.col(f"{rp}_ymax"))
-        )
-        exact = None if left_is_rects else _PRED_UDFS[predicate](F.col(lg), F.col(rg2))
-    elif predicate == "within" and left_is_points and not right_is_points:
-        env_cond = (
-            (F.col(f"{rp}_xmin") < F.col(f"{lp}_xmin")) & (F.col(f"{rp}_xmax") > F.col(f"{lp}_xmax"))
-            & (F.col(f"{rp}_ymin") < F.col(f"{lp}_ymin")) & (F.col(f"{rp}_ymax") > F.col(f"{lp}_ymax"))
-        )
-        exact = None if right_is_rects else _PRED_UDFS[predicate](F.col(lg), F.col(rg2))
-    else:
-        exact = _exact_cond(lg, rg2, predicate, d, rect_l, rect_r)
-    if exact is None:
-        cond_reads_geom = False
-
-    cond = env_cond if exact is None else (env_cond & exact)
-    # geometry-free condition ⇒ rows identical outside the geometry column
-    # are interchangeable in match/unmatch reconciliation, so the content
-    # hash may exclude it (and pruning then drops an unprojected UDF-built
-    # geometry from the whole outer-join plan — measured: the SQL LEFT JOIN
-    # query kept two ArrowEvalPython point-constructor stages alive solely
-    # through the row-id hash)
-    _id_exclude = () if cond_reads_geom else (lg,)
-
-    if strategy == "broadcast":
-        joined = left.join(F.broadcast(right_renamed), cond, how)
-    elif how == "left":
-        # grid path, left outer: inner matches via the cell equi-join, then
-        # null-extend the unmatched left rows (found by anti-join on a row
-        # id — the cell-exploded copies must collapse back to one row)
-        lid = _stamp_row_id(left, exclude=_id_exclude)
-        inner = _grid_join(lid, right_renamed, lp, rp, cond, "inner",
-                           grid_size, d)
-        unmatched = lid.join(inner.select("_lid").distinct(), "_lid",
-                             "left_anti")
-        joined = inner.unionByName(unmatched, allowMissingColumns=True) \
-            .drop("_lid")
-    elif how in ("left_semi", "left_anti"):
-        # grid path with semi/anti: run the inner grid join over a synthetic
-        # row id, then equi-semi/anti back — the exploded cell copies of a
-        # left row must not leak into anti results
-        lid = _stamp_row_id(left, exclude=_id_exclude)
-        matched = _grid_join(lid, right_renamed, lp, rp, cond, "inner", grid_size, d) \
-            .select("_lid").distinct()
-        joined = lid.join(matched, "_lid", "left_semi" if how == "left_semi" else "left_anti") \
-            .drop("_lid")
-    else:
-        joined = _grid_join(left, right_renamed, lp, rp, cond, how, grid_size, d)
-
-    drop_cols = [f"{p}_{m}" for p in (lp, rp) for m in ("xmin", "ymin", "xmax", "ymax")]
-    if how in ("left_semi", "left_anti"):
-        drop_cols = [f"{lp}_{m}" for m in ("xmin", "ymin", "xmax", "ymax")]
-    return joined.drop(*drop_cols)
+    if strategy == "grid" and grid_size is None:
+        grid_size = _grid_size_from_env(left_in, right_in, lenv, renv, d)
+    # one join of the two sides answers inner joins, and broadcast joins
+    # whose condition Spark evaluates inside an outer/semi/anti join (it
+    # rejects a Python UDF there).  The rest join inner on a left row id
+    # and reconcile back on it; for the grid, that also collapses the
+    # exploded cell copies of a left row.
+    direct = how == "inner" or (strategy == "broadcast" and not reads_geom)
+    nulls = []
+    if not direct:
+        # a geometry-free condition lets the id skip the geometry, so
+        # pruning can drop an unprojected UDF-built geometry
+        left_in = _stamp_row_id(left_in, exclude=() if reads_geom else (lg,))
+        if how == "left":
+            # the unmatched left rows' null-extended right columns, typed
+            nulls = [f"CAST(NULL AS {f.dataType.simpleString()})"
+                     f" AS `{rname[f.name]}`" for f in right.schema.fields]
+    return spark.sql(
+        _join_stmt(strategy, how, direct, left_in.columns, rname, lenv, renv,
+                   cond, lout, rout, nulls, grid_size, d),
+        sj_left=left_in, sj_right=right_in)
 
 
 def _dlit(x: float) -> str:
     """A Python double as a bit-exact SQL double literal.  A bare SQL
     decimal literal parses as DECIMAL (different arithmetic type);
-    string→double cast is the same correctly-rounded parse as Python's —
-    bit-identical to ``F.lit(float)`` in the operator spelling."""
+    string→double cast is the same correctly-rounded parse as Python's."""
     return f"CAST('{float(x)!r}' AS DOUBLE)"
 
 
-def _native_cond_sql(predicate: str, d: float,
-                     left_is_points: bool, left_is_rects: bool,
-                     right_is_points: bool, right_is_rects: bool) -> Optional[str]:
-    """SQL-text mirror of the hint-exact condition branches of
-    ``spatial_join`` (same branch order, same comparison operators, same
-    literal arithmetic — the differential gates in
-    tests/test_spatial_join.py hold the two spellings row-identical).
-    Returns None when the shape needs a refinement UDF — those joins stay
-    on the operator path.
+def _cond_sql(predicate: str, d: float,
+              left_is_points: bool, left_is_rects: bool,
+              right_is_points: bool, right_is_rects: bool) -> Tuple[str, bool]:
+    """The join condition as SQL text, and whether it reads the raw
+    geometry columns.  The one condition builder for every strategy and
+    ``how``: an envelope prefilter (relaxed, mirroring
+    SedonaPredicatePushDown.scala:77,138-144) that is the exact predicate
+    when both operands are their own envelopes (points or axis-aligned
+    rects), else refined by the registered ``ST_*`` function.
 
     The envelope references are ``str.format`` placeholders (lx0/ly0/lx1/
-    ly1, rx0/ry0/rx1/ry1) filled in by `_stmt_grid_join` with direct
-    ``<env struct>.<field>`` paths (round 16): the statement no longer
-    flattens the env structs into ``_l_*``/``_r_*`` columns, so the cell
-    exchanges ship each side's envelope ONCE (the struct) instead of
-    twice (struct + four flattened doubles) — 32 bytes/row/side off the
-    family's widest shuffle — and the statement analyzes a smaller tree."""
+    ly1, rx0/ry0/rx1/ry1) and the geometries are {lg}/{rg}; `spatial_join`
+    fills them with direct ``<env struct>.<field>`` and column paths, so
+    the cell exchanges ship each side's envelope once, as the struct."""
     lx0, ly0 = "{lx0}", "{ly0}"
     lx1, ly1 = "{lx1}", "{ly1}"
     rx0, ry0 = "{rx0}", "{ry0}"
     rx1, ry1 = "{rx1}", "{ry1}"
     if predicate == "dwithin":
-        if not (left_is_points and right_is_points):
-            return None
-        pad, dd = _dlit(d), _dlit(float(d) * float(d))
+        pad = _dlit(d)
         env = (f"{lx1} + {pad} >= {rx0} AND {rx1} >= {lx0} - {pad}"
                f" AND {ly1} + {pad} >= {ry0} AND {ry1} >= {ly0} - {pad}")
-        exact = (f"({lx0} - {rx0}) * ({lx0} - {rx0})"
-                 f" + ({ly0} - {ry0}) * ({ly0} - {ry0}) <= {dd}")
-        return f"({env}) AND ({exact})"
+        if left_is_points and right_is_points:
+            # fully native distance join: (x1-x2)² + (y1-y2)² ≤ d²
+            dd = _dlit(float(d) * float(d))
+            exact = (f"({lx0} - {rx0}) * ({lx0} - {rx0})"
+                     f" + ({ly0} - {ry0}) * ({ly0} - {ry0}) <= {dd}")
+            return f"({env}) AND ({exact})", False
+        return f"({env}) AND ST_Distance({{lg}}, {{rg}}) <= {pad}", True
     if predicate == "contains" and right_is_points and not left_is_points:
-        if not left_is_rects:
-            return None                      # strict prefilter + UDF refine
-        return (f"{lx0} < {rx0} AND {lx1} > {rx1}"
-                f" AND {ly0} < {ry0} AND {ly1} > {ry1}")
-    if predicate == "within" and left_is_points and not right_is_points:
-        if not right_is_rects:
-            return None
-        return (f"{rx0} < {lx0} AND {rx1} > {lx1}"
-                f" AND {ry0} < {ly0} AND {ry1} > {ly1}")
-    rect_l = left_is_points or left_is_rects
-    rect_r = right_is_points or right_is_rects
-    if rect_l and rect_r and predicate in (
-            "intersects", "contains", "covers", "within", "covered_by"):
+        # OGC contains over a point right side: the point must be in the
+        # left interior → strict envelope bounds (exact when left rows are
+        # rects, a superset prefilter refined by the UDF otherwise)
+        env = (f"{lx0} < {rx0} AND {lx1} > {rx1}"
+               f" AND {ly0} < {ry0} AND {ly1} > {ry1}")
+        env_exact = left_is_rects
+    elif predicate == "within" and left_is_points and not right_is_points:
+        env = (f"{rx0} < {lx0} AND {rx1} > {lx1}"
+               f" AND {ry0} < {ly0} AND {ry1} > {ly1}")
+        env_exact = right_is_rects
+    else:
         if predicate in ("contains", "covers"):
-            return (f"{lx0} <= {rx0} AND {lx1} >= {rx1}"
-                    f" AND {ly0} <= {ry0} AND {ly1} >= {ry1}")
-        if predicate in ("within", "covered_by"):
-            return (f"{rx0} <= {lx0} AND {rx1} >= {lx1}"
-                    f" AND {ry0} <= {ly0} AND {ry1} >= {ly1}")
-        return (f"{lx1} >= {rx0} AND {rx1} >= {lx0}"
-                f" AND {ly1} >= {ry0} AND {ry1} >= {ly0}")
-    return None
+            env = (f"{lx0} <= {rx0} AND {lx1} >= {rx1}"
+                   f" AND {ly0} <= {ry0} AND {ly1} >= {ry1}")
+        elif predicate in ("within", "covered_by"):
+            env = (f"{rx0} <= {lx0} AND {rx1} >= {lx1}"
+                   f" AND {ry0} <= {ly0} AND {ry1} >= {ly1}")
+        else:
+            env = (f"{lx1} >= {rx0} AND {rx1} >= {lx0}"
+                   f" AND {ly1} >= {ry0} AND {ry1} >= {ly0}")
+        # closed envelope algebra is exact between points and rects for
+        # intersects/covers/covered_by, but for contains/within only
+        # between points (equality): a zero-area rect on the container's
+        # boundary is covered, not contained — OGC needs one of its
+        # interior points in the container's interior
+        env_exact = ((left_is_points or left_is_rects)
+                     and (right_is_points or right_is_rects)
+                     and (predicate in ("intersects", "covers", "covered_by")
+                          or (left_is_points and right_is_points)))
+    if env_exact:
+        return env, False
+    return f"{env} AND {_PRED_FUNCS[predicate][0]}({{lg}}, {{rg}})", True
 
 
-def _stmt_grid_join(left: DataFrame, right: DataFrame, lg: str, rg: str,
-                    cond_sql: str, grid_size: float, d: float) -> DataFrame:
-    """The inner grid join as ONE ``spark.sql`` statement (promoted round
-    12 from the r11 `_grid_join_sql` prototype, which measured the grid
-    fragment alone at −30% construction).  Everything the operator path
-    spreads over ~12 eager Dataset ops folds into the statement: the
-    right-side ``r_`` collision rename
-    (the same convention as the operator path — closing the r11 ADVICE
-    duplicate-column finding on the prototype), both nested cell explodes,
-    the cell equi-join + reference-cell algebraic dedup + hint-exact
-    condition, and the env-free output projection.  One parse, one
-    analysis; the logical shape, exchanges, and output columns match the
-    operator form exactly (gated in tests/test_spatial_join.py).  The
-    source DataFrames enter via ``spark.sql`` named-args — no temp views,
-    no catalog residue."""
-    spark = left.sparkSession
-    s, pad = _dlit(grid_size), _dlit(d)
-    common = set(left.columns) & set(right.columns)
-    rname = {c: (f"r_{c}" if c in common else c) for c in right.columns}
-    lenv = f"`{lg}_env`"
-    renv_in = f"`{rg}_env`"               # before the collision rename
-    renv = f"`{rname[rg + '_env']}`"      # after it
-    # direct struct-field envelope paths (round 16): no _l_*/_r_* flatten
-    # projections — the exchanges carry each side's env struct once, and
-    # the statement tree is two SELECT levels shallower per side
-    cond = cond_sql.format(
-        lx0=f"l.{lenv}.`xmin`", ly0=f"l.{lenv}.`ymin`",
-        lx1=f"l.{lenv}.`xmax`", ly1=f"l.{lenv}.`ymax`",
-        rx0=f"r.{renv}.`xmin`", ry0=f"r.{renv}.`ymin`",
-        rx1=f"r.{renv}.`xmax`", ry1=f"r.{renv}.`ymax`")
-    lsel = ", ".join(f"`{c}`" for c in left.columns)
-    rsel = ", ".join(f"`{c}` AS `{rname[c]}`" for c in right.columns)
-    lproj = ", ".join(f"l.`{c}`" for c in left.columns)
-    rproj = ", ".join(f"r.`{rname[c]}`" for c in right.columns)
-    return spark.sql(f"""
-WITH lcell AS (
-  SELECT *, explode(sequence(floor(({lenv}.`ymin` - {pad}) / {s}),
-                             floor(({lenv}.`ymax` + {pad}) / {s}))) AS _cy
-  FROM (SELECT {lsel}, explode(sequence(floor(({lenv}.`xmin` - {pad}) / {s}),
-                                        floor(({lenv}.`xmax` + {pad}) / {s}))) AS _cx
+def _join_stmt(strategy: str, how: str, direct: bool, lcols: list,
+               rname: dict, lenv: str, renv: str, cond: str, lout: list,
+               rout: list, nulls: list, grid_size: Optional[float],
+               d: float) -> str:
+    """The statement text.  Grid: both nested cell explodes (left padded
+    by ``d``) and the cell equi-join + reference-cell algebraic dedup +
+    condition.  Broadcast: a ``BROADCAST``-hinted theta join on the
+    condition.  Non-``direct`` shapes join inner on the ``_lid`` row id
+    and reconcile back on it: semi/anti against the matched ids, left as
+    the matched pairs plus the null-extended unmatched left rows."""
+    rsel = ", ".join(f"`{c}` AS `{rname[c]}`" for c in rname)
+    ctes, hint = [], ""
+    if strategy == "broadcast":
+        hint = "/*+ BROADCAST(r) */ "
+        kind = _HOW_SQL[how if direct else "inner"]
+        pairs = (f"{{sj_left}} l {kind} (SELECT {rsel} FROM {{sj_right}}) r"
+                 f"\n  ON {cond}")
+    else:
+        s, pad = _dlit(grid_size), _dlit(d)
+        le, re_in, re = f"`{lenv}`", f"`{renv}`", f"`{rname[renv]}`"
+        lsel = ", ".join(f"`{c}`" for c in lcols)
+        ctes.append(f"""lcell AS (
+  SELECT *, explode(sequence(floor(({le}.`ymin` - {pad}) / {s}),
+                             floor(({le}.`ymax` + {pad}) / {s}))) AS _cy
+  FROM (SELECT {lsel}, explode(sequence(floor(({le}.`xmin` - {pad}) / {s}),
+                                        floor(({le}.`xmax` + {pad}) / {s}))) AS _cx
         FROM {{sj_left}})
 ), rcell AS (
-  SELECT *, explode(sequence(floor({renv}.`ymin` / {s}),
-                             floor({renv}.`ymax` / {s}))) AS _cy
-  FROM (SELECT {rsel}, explode(sequence(floor({renv_in}.`xmin` / {s}),
-                                        floor({renv_in}.`xmax` / {s}))) AS _cx
+  SELECT *, explode(sequence(floor({re}.`ymin` / {s}),
+                             floor({re}.`ymax` / {s}))) AS _cy
+  FROM (SELECT {rsel}, explode(sequence(floor({re_in}.`xmin` / {s}),
+                                        floor({re_in}.`xmax` / {s}))) AS _cx
         FROM {{sj_right}})
-)
-SELECT {lproj}, {rproj}
-FROM lcell l JOIN rcell r
+)""")
+        pairs = f"""lcell l JOIN rcell r
   ON l._cx = r._cx AND l._cy = r._cy
- AND l._cx = floor(greatest(l.{lenv}.`xmin` - {pad}, r.{renv}.`xmin`) / {s})
- AND l._cy = floor(greatest(l.{lenv}.`ymin` - {pad}, r.{renv}.`ymin`) / {s})
- AND ({cond})
-""", sj_left=left, sj_right=right)
+ AND l._cx = floor(greatest(l.{le}.`xmin` - {pad}, r.{re}.`xmin`) / {s})
+ AND l._cy = floor(greatest(l.{le}.`ymin` - {pad}, r.{re}.`ymin`) / {s})
+ AND ({cond})"""
+    out = ", ".join(lout + rout)
+    if direct:
+        body = f"SELECT {hint}{out}\nFROM {pairs}"
+    elif how == "left":
+        ctes.append(f"matched AS (SELECT {hint}l.`_lid`, {out} FROM {pairs})")
+        body = f"""SELECT {', '.join(c[2:] for c in lout + rout)} FROM matched
+UNION ALL
+SELECT {', '.join(lout + nulls)}
+FROM {{sj_left}} l LEFT ANTI JOIN (SELECT DISTINCT `_lid` FROM matched) m
+  ON l.`_lid` = m.`_lid`"""
+    else:
+        body = f"""SELECT {out}
+FROM {{sj_left}} l {_HOW_SQL[how]} (SELECT {hint}DISTINCT l.`_lid` FROM {pairs}) m
+  ON l.`_lid` = m.`_lid`"""
+    return ("WITH " + ", ".join(ctes) + "\n" if ctes else "") + body + "\n"
 
 
 def _stamp_row_id(df: DataFrame, exclude: tuple = ()) -> DataFrame:
     """Deterministic per-row id for the outer/semi/anti reconciliation
     joins.  ``monotonically_increasing_id`` is nondeterministic under stage
-    retry — the id frame is referenced by TWO plans (the inner grid join and
-    the anti-join back), so a recomputed partition could stamp different ids
-    and drop or duplicate rows at cluster scale.  A 128-bit content hash is
-    stable across recomputation; identical duplicate rows share an id, which
-    is semantics-preserving for match/unmatch reconciliation (duplicates are
-    interchangeable).  Falls back to an eager localCheckpoint for
-    un-hashable column types (maps)."""
+    retry — the id frame is referenced TWICE (the inner grid join and the
+    reconciliation join back), so a recomputed partition could stamp
+    different ids and drop or duplicate rows at cluster scale.  A 128-bit
+    content hash is stable across recomputation; identical duplicate rows
+    share an id, which is semantics-preserving for match/unmatch
+    reconciliation (duplicates are interchangeable).  Falls back to an
+    eager localCheckpoint for un-hashable column types (maps)."""
     cols = [F.col(f"`{c}`") for c in df.columns if c not in exclude]
     if not cols:
         cols = [F.col(f"`{c}`") for c in df.columns]
@@ -454,7 +346,7 @@ def _stamp_row_id(df: DataFrame, exclude: tuple = ()) -> DataFrame:
         return df.withColumn(
             "_lid", F.struct(F.xxhash64(*cols).alias("h1"),
                              F.xxhash64(F.lit(17), *cols).alias("h2")))
-    except Exception:
+    except AnalysisException:
         from ..lineage import truncate_lineage
         return truncate_lineage(
             df.withColumn("_lid", F.monotonically_increasing_id()),
@@ -473,58 +365,6 @@ _GRID_SIZE_CACHE: dict = {}
 # session-lifetime cache of per-SIDE envelope statistics, keyed by the
 # OPTIMIZED plan hash of the side's stats frame (round 16, guide §5)
 _ENV_STATS_CACHE: dict = {}
-
-
-def _cached_grid_size(level1_key, lstats_fn, rstats_fn, d: float) -> float:
-    """Two-level grid-size cache (round 16, guide §5 — driver-side cost).
-
-    Level 1 (pre-existing): the analyzed-plan semantic hashes of the raw
-    join inputs — a cheap exact match for re-running the same join.
-    Level 2 (new): per-SIDE envelope statistics keyed by the OPTIMIZED
-    plan hash of each side's stats frame.  Column pruning sees through
-    projection/rename variants of the same side — the operator-form and
-    SQL-text spellings of one declared join project different column
-    subsets (and arrive with the sides SWAPPED, since the SQL front door
-    plans ``ST_Contains(r, l)`` as the inverse predicate) but prune to
-    identical per-side stats queries; canonicalization also ignores the
-    l/r output aliases.  A join whose sides were BOTH seen before (in any
-    orientation, under any projection, even paired differently) derives
-    its grid size with NO job at all; one new side costs a single-side
-    aggregate instead of the two-sided crossJoin.  Measured: a full-miss
-    job is ~110-230 ms and 4 AQE jobs; a both-sides-hit is ~75 ms of
-    driver-only work (stats-frame build + optimize).  At 100 TB each
-    side's stats job is a full scan of that input, so every hit saves
-    real work, not just dispatch latency."""
-    if level1_key is not None and level1_key in _GRID_SIZE_CACHE:
-        return _GRID_SIZE_CACHE[level1_key]
-    lstats, rstats = lstats_fn(), rstats_fn()
-
-    def _h(df):
-        try:
-            return df._jdf.queryExecution().optimizedPlan().semanticHash()
-        except Exception:
-            return None
-    hl, hr = _h(lstats), _h(rstats)
-    ls = _ENV_STATS_CACHE.get(hl) if hl is not None else None
-    rs = _ENV_STATS_CACHE.get(hr) if hr is not None else None
-    if ls is None and rs is None:
-        row = lstats.crossJoin(rstats).first()
-        ls = {k: row[f"l{k}"] for k in ("w", "h", "W", "H")}
-        rs = {k: row[f"r{k}"] for k in ("w", "h", "W", "H")}
-    elif ls is None:
-        row = lstats.first()
-        ls = {k: row[f"l{k}"] for k in ("w", "h", "W", "H")}
-    elif rs is None:
-        row = rstats.first()
-        rs = {k: row[f"r{k}"] for k in ("w", "h", "W", "H")}
-    if hl is not None and len(_ENV_STATS_CACHE) < 512:
-        _ENV_STATS_CACHE[hl] = ls
-    if hr is not None and len(_ENV_STATS_CACHE) < 512:
-        _ENV_STATS_CACHE[hr] = rs
-    grid_size = _derive_grid_size(ls, rs, d)
-    if level1_key is not None and len(_GRID_SIZE_CACHE) < 256:
-        _GRID_SIZE_CACHE[level1_key] = grid_size
-    return grid_size
 
 
 def _derive_grid_size(ls: dict, rs: dict, d: float) -> float:
@@ -549,105 +389,67 @@ def _derive_grid_size(ls: dict, rs: dict, d: float) -> float:
 
 
 def _grid_size_from_env(left: DataFrame, right: DataFrame,
-                        lg: str, rg: str, d: float) -> float:
-    """Sample-driven grid size for the single-statement path, read straight
-    off the persisted ``<geom>_env`` structs (the operator path computes the
-    same aggregates over its flattened env fields — identical values, so the
-    two constructions derive identical cell sizes).  Cached per
-    (semantic-plan-hash, d) like the operator path's sizing."""
-    key = None
-    try:
-        key = (left._jdf.queryExecution().analyzed().semanticHash(),
-               right._jdf.queryExecution().analyzed().semanticHash(),
-               float(d), ("env", lg, rg))
-    except Exception:
-        pass
+                        lenv: str, renv: str, d: float) -> float:
+    """Sample-driven grid size (`_derive_grid_size`) from both sides'
+    envelope structs, behind a two-level session cache (driver-side cost).
 
-    def _stats(df, g, pre):
-        e = F.col(f"{g}_env")
+    Level 1: the analyzed-plan semantic hashes of the join inputs — a
+    cheap exact match for re-running the same join.  Level 2: per-SIDE
+    envelope statistics keyed by the OPTIMIZED plan hash of each side's
+    stats frame.  Column pruning sees through projection/rename variants
+    of the same side — the DataFrame and SQL-text spellings of one
+    declared join project different column subsets (and arrive with the
+    sides SWAPPED, since the SQL front door plans ``ST_Contains(r, l)`` as
+    the inverse predicate) but prune to identical per-side stats queries;
+    canonicalization also ignores the l/r output aliases.  A join whose
+    sides were BOTH seen before (in any orientation, under any projection,
+    even paired differently) derives its grid size with NO job at all; one
+    new side costs a single-side aggregate instead of the two-sided
+    crossJoin.  Measured: a full-miss job is ~110-230 ms and 4 AQE jobs; a
+    both-sides-hit is ~75 ms of driver-only work (stats-frame build +
+    optimize).  At 100 TB each side's stats job is a full scan of that
+    input, so every hit saves real work, not just dispatch latency."""
+    def _hash(plan):
+        try:
+            return plan.semanticHash()
+        except Py4JJavaError:
+            return None      # un-hashable plan: sized without caching
+
+    key = (_hash(left._jdf.queryExecution().analyzed()),
+           _hash(right._jdf.queryExecution().analyzed()), float(d), lenv, renv)
+    if None in key:
+        key = None
+    elif key in _GRID_SIZE_CACHE:
+        return _GRID_SIZE_CACHE[key]
+
+    def _stats(df, env, pre):
+        e = F.col(f"`{env}`")
         return df.select(
             F.avg(e["xmax"] - e["xmin"]).alias(f"{pre}w"),
             F.avg(e["ymax"] - e["ymin"]).alias(f"{pre}h"),
             (F.max(e["xmax"]) - F.min(e["xmin"])).alias(f"{pre}W"),
             (F.max(e["ymax"]) - F.min(e["ymin"])).alias(f"{pre}H"),
         )
-    return _cached_grid_size(key, lambda: _stats(left, lg, "l"),
-                             lambda: _stats(right, rg, "r"), d)
-
-
-def _grid_join(left: DataFrame, right: DataFrame, lp: str, rp: str,
-               cond: Column, how: str, grid_size: Optional[float], d: float) -> DataFrame:
-    if grid_size is None:
-        key = None
-        try:
-            key = (left._jdf.queryExecution().analyzed().semanticHash(),
-                   right._jdf.queryExecution().analyzed().semanticHash(),
-                   float(d), lp, rp)
-        except Exception:
-            pass
-
-        # sample-driven cell sizing — see _derive_grid_size.  ONE job for
-        # both sides (1×1 cross of two single-row aggregates) — at 100 TB
-        # this is still two scans' worth of work, but scheduled together
-        # instead of as two sequential driver round-trips; the two-level
-        # cache (`_cached_grid_size`) skips it for re-runs and for
-        # projection variants of the same inputs
-        def _stats(df, p, pre):
-            return df.select(
-                F.avg(F.col(f"{p}_xmax") - F.col(f"{p}_xmin")).alias(f"{pre}w"),
-                F.avg(F.col(f"{p}_ymax") - F.col(f"{p}_ymin")).alias(f"{pre}h"),
-                (F.max(f"{p}_xmax") - F.min(f"{p}_xmin")).alias(f"{pre}W"),
-                (F.max(f"{p}_ymax") - F.min(f"{p}_ymin")).alias(f"{pre}H"),
-            )
-        grid_size = _cached_grid_size(key, lambda: _stats(left, lp, "l"),
-                                      lambda: _stats(right, rp, "r"), d)
-
-    s = float(grid_size)
-
-    # left side padded by d for dwithin; right side unpadded.  The cell
-    # explodes, dedup predicate and output projection are built as SQL
-    # expression STRINGS (one parse round-trip each) rather than stacked
-    # Column operators: this builder is on the interactive path and the
-    # operator-at-a-time spelling cost ~1200 driver IPC round-trips
-    # (~0.18s) per join construction, all of it avoidable chatter — the
-    # parsed plans are identical.
-    # float literals are embedded as CAST('<repr>' AS DOUBLE): a bare SQL
-    # decimal literal parses as DECIMAL (different arithmetic type), while
-    # string->double cast is the same correctly-rounded parse as Python's —
-    # bit-identical to the F.lit(float) the operator spelling used.
-    lpad = f"CAST('{float(d)!r}' AS DOUBLE)"
-    sv = f"CAST('{s!r}' AS DOUBLE)"
-    lcell = left.selectExpr(
-        "*",
-        f"explode(sequence(floor((`{lp}_xmin` - {lpad}) / {sv}), "
-        f"floor((`{lp}_xmax` + {lpad}) / {sv}))) AS _cx",
-    ).selectExpr(
-        "*",
-        f"explode(sequence(floor((`{lp}_ymin` - {lpad}) / {sv}), "
-        f"floor((`{lp}_ymax` + {lpad}) / {sv}))) AS _cy",
-    )
-    rcell = right.selectExpr(
-        "*",
-        f"explode(sequence(floor(`{rp}_xmin` / {sv}), "
-        f"floor(`{rp}_xmax` / {sv}))) AS _cx",
-    ).selectExpr(
-        "*",
-        f"explode(sequence(floor(`{rp}_ymin` / {sv}), "
-        f"floor(`{rp}_ymax` / {sv}))) AS _cy",
-    )
-
-    # reference-cell dedup: emit the pair only in the cell holding the
-    # min-corner of the envelope intersection (algebraic exactly-once)
-    dedup = F.expr(
-        f"l._cx = floor(greatest(l.`{lp}_xmin` - {lpad}, r.`{rp}_xmin`) / {sv})"
-        f" AND l._cy = floor(greatest(l.`{lp}_ymin` - {lpad}, r.`{rp}_ymin`) / {sv})"
-        f" AND l._cx = r._cx AND l._cy = r._cy")
-
-    lal = lcell.alias("l")
-    ral = rcell.alias("r")
-    out = lal.join(ral, dedup & cond, how)
-    if how in ("left_semi", "left_anti"):
-        return out.drop("_cx", "_cy")
-    return out.selectExpr(
-        *[f"l.`{c}`" for c in lcell.columns if c not in ("_cx", "_cy")],
-        *[f"r.`{c}`" for c in rcell.columns if c not in ("_cx", "_cy")])
+    lstats, rstats = _stats(left, lenv, "l"), _stats(right, renv, "r")
+    hl = _hash(lstats._jdf.queryExecution().optimizedPlan())
+    hr = _hash(rstats._jdf.queryExecution().optimizedPlan())
+    ls = _ENV_STATS_CACHE.get(hl) if hl is not None else None
+    rs = _ENV_STATS_CACHE.get(hr) if hr is not None else None
+    if ls is None and rs is None:
+        row = lstats.crossJoin(rstats).first()
+        ls = {k: row[f"l{k}"] for k in ("w", "h", "W", "H")}
+        rs = {k: row[f"r{k}"] for k in ("w", "h", "W", "H")}
+    elif ls is None:
+        row = lstats.first()
+        ls = {k: row[f"l{k}"] for k in ("w", "h", "W", "H")}
+    elif rs is None:
+        row = rstats.first()
+        rs = {k: row[f"r{k}"] for k in ("w", "h", "W", "H")}
+    if hl is not None and len(_ENV_STATS_CACHE) < 512:
+        _ENV_STATS_CACHE[hl] = ls
+    if hr is not None and len(_ENV_STATS_CACHE) < 512:
+        _ENV_STATS_CACHE[hr] = rs
+    grid_size = _derive_grid_size(ls, rs, d)
+    if key is not None and len(_GRID_SIZE_CACHE) < 256:
+        _GRID_SIZE_CACHE[key] = grid_size
+    return grid_size

@@ -325,34 +325,34 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
                       num_hashes: int = 16, bands: int = 4,
                       shingle_n: int = 3,
                       max_bucket: Optional[int] = None,
-                      log_dropped: bool = False,
-                      construction: str = "stmt") -> DataFrame:
+                      log_dropped: bool = False) -> DataFrame:
     """Candidate near-duplicate pairs (a < b) via banded LSH: docs sharing a
     band signature land in the same bucket; the pair join is an equi-join on
     (band, bk_0..bk_{r-1}) — the band's raw signature rows.  Bucket-local
     pair generation instead of a self-join: one pass over the signature
     pipeline (a self-join would recompute the whole shingle+md5 DAG for
-    both sides).  ``max_bucket`` bounds the worst bucket (see
-    `_capped_bucket_pairs` — the at-scale default should set it; dropped
-    buckets surface via `oversize_buckets`/``log_dropped``).
+    both sides).  ``max_bucket`` bounds the worst bucket (the same
+    window-count cap as `_capped_bucket_pairs` — the at-scale default
+    should set it); ``log_dropped=True`` logs the number of dropped buckets
+    (one extra job over `oversize_buckets`) and `oversize_buckets` exposes
+    them as a DataFrame.
 
-    Constructed as ONE ``spark.sql`` statement by default (round 12, the
-    overlap-core precedent): the operator composition is ~12 eager Dataset
-    ops whose subtree re-analyzes each step — measured 0.18 s of pure
-    driver-side construction per call.  The statement spells the identical
-    pipeline — REPARTITION-hinted shingling, one md5 per shingle row + k
+    Constructed as ONE ``spark.sql`` statement (the overlap-core
+    precedent: an ~12-op eager Dataset chain re-analyzes its subtree at
+    each step — measured 0.18 s of pure driver-side construction per
+    call): REPARTITION-hinted shingling, one md5 per shingle row + k
     rotate-xor mixes, k ``min`` aggregates, band ``stack``, the window
     bucket cap BEFORE ``collect_list``, bucket-local pair explode,
-    DISTINCT — one parse, one analysis, row-identical and exchange-equal
-    (gated in tests/test_pipeline.py).  ``construction="operator"`` keeps
-    the Dataset-op spelling (the differential baseline; also taken when
-    ``log_dropped`` needs the extra counting job)."""
-    if construction == "operator" or log_dropped:
-        banded = minhash_banded(df, id_col, text_col, num_hashes, bands,
-                                shingle_n)
-        return _capped_bucket_pairs(
-            banded, id_col, ["band"] + band_key_cols(num_hashes, bands),
-            max_bucket, log_dropped)
+    DISTINCT — one parse, one analysis."""
+    if max_bucket is not None and log_dropped:
+        keys = ["band"] + band_key_cols(num_hashes, bands)
+        n_drop = oversize_buckets(
+            minhash_banded(df, id_col, text_col, num_hashes, bands,
+                           shingle_n), keys, max_bucket).count()
+        if n_drop:
+            _LOG.warning(
+                "LSH cap: dropped %d buckets over max_bucket=%d from "
+                "candidate generation", n_drop, max_bucket)
 
     spark = df.sparkSession
     n, rows = int(shingle_n), num_hashes // bands

@@ -35,33 +35,16 @@ def _dot_sql(a: str, b: str) -> str:
 
 def cosine_topk(queries: DataFrame, data: DataFrame, k: int,
                 q_id: str = "vec_id", q_vec: str = "embedding",
-                d_id: str = "vec_id", d_vec: str = "embedding",
-                construction: str = "stmt") -> DataFrame:
+                d_id: str = "vec_id", d_vec: str = "embedding") -> DataFrame:
     """For each query vector: the k most-cosine-similar data vectors.
     Query side is broadcast (queries ≪ data at scale); score computation is
     native; top-k via window over query id.
 
-    Constructed as ONE ``spark.sql`` statement by default (round 12, the
-    overlap-core precedent — the ~8-op eager chain measured 0.17 s of pure
-    construction per call): per-side norm projections, BROADCAST-hinted
-    cross join, prenorm cosine, windowed top-k — identical expressions to
-    the operator spelling (``construction="operator"``), row-identical and
-    exchange-equal (gated in tests/test_pipeline.py::
-    test_cosine_topk_stmt_construction_matches_operator)."""
-    if construction == "operator":
-        q = queries.select(F.col(q_id).alias("query_id"), F.col(q_vec).alias("_qv"),
-                           vec_norm(F.col(q_vec)).alias("_qn"))
-        d = data.select(F.col(d_id).alias("data_id"), F.col(d_vec).alias("_dv"),
-                        vec_norm(F.col(d_vec)).alias("_dn"))
-        scored = d.crossJoin(F.broadcast(q)) \
-            .withColumn("cosine", cosine_sim_prenorm(F.col("_dv"), F.col("_qv"),
-                                                     F.col("_dn"), F.col("_qn")))
-        w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("data_id").asc())
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "data_id", "cosine", "rank")
-        )
+    Constructed as ONE ``spark.sql`` statement (the overlap-core
+    precedent — an ~8-op eager Dataset chain measured 0.17 s of pure
+    construction per call): per-side norm projections (`_norm_sql`, the
+    same values as ``vec_norm``), BROADCAST-hinted cross join, prenorm
+    cosine, windowed top-k (ties broken by ``data_id``)."""
     spark = data.sparkSession
     return spark.sql(f"""
 WITH q AS (SELECT `{q_id}` AS query_id, `{q_vec}` AS _qv,

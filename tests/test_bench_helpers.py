@@ -137,6 +137,18 @@ def test_suite_spread_gate_calibration():
     assert bench._suite_spread([]) is None
 
 
+def test_suite_spread_counts_zero_total():
+    """A 0.0 suite total is a measured total, not a missing one: it counts
+    toward the two-total minimum, and beside a nonzero total it trips the
+    gate instead of dividing by zero."""
+    import bench
+
+    assert bench._suite_spread([0.0, 6.0]) > bench.CONTENTION_SUITE_SPREAD
+    assert bench._suite_spread([0.0, 0.0]) == 1.0
+    assert bench._suite_spread([0.0]) is None
+    assert bench._suite_spread([None, 6.0]) is None
+
+
 def test_detail_default_path_is_collision_safe(monkeypatch, tmp_path):
     """r15 VERDICT item #2: the default detail path must never equal the
     git-tracked bench_detail.json (a bench run launched from the repo
@@ -149,13 +161,13 @@ def test_detail_default_path_is_collision_safe(monkeypatch, tmp_path):
 
     monkeypatch.chdir(tmp_path)
     monkeypatch.delenv("SPARK_GRAFT_BENCH_DETAIL", raising=False)
-    # reproduce main()'s default-path derivation (no Spark run needed)
-    import time as _t
-    stamp = _t.strftime("%Y%m%dT%H%M%S", _t.gmtime())
-    default = os.path.join(
-        os.getcwd(), f"bench_detail.{stamp}-{os.getpid()}.json")
+    default = bench._detail_path()
     tracked = os.path.join(
         os.path.dirname(os.path.abspath(bench.__file__)),
         "bench_detail.json")
     assert os.path.abspath(default) != tracked
     assert os.path.basename(default) != "bench_detail.json"
+    assert os.path.dirname(default) == os.getcwd()
+    explicit = str(tmp_path / "elsewhere" / "detail.json")
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_DETAIL", explicit)
+    assert bench._detail_path() == explicit

@@ -151,65 +151,85 @@ def test_lsh_cap_single_exchange_plan(spark):
     assert n_exchanges(capped) == n_exchanges(uncapped)
 
 
-def test_minhash_stmt_construction_matches_operator(spark, sf_dir):
-    """Round-12 promotion gate: the single-statement minhash_lsh_pairs
-    construction must be row-identical and exchange-equal to the operator
-    composition, capped and uncapped, on the real documents table."""
+def test_minhash_lsh_pairs_matches_capped_bucket_reference(spark, sf_dir):
+    """The single-statement minhash_lsh_pairs must emit exactly the pairs
+    of the bucket-local operator composition `_capped_bucket_pairs` over
+    `minhash_banded` (live for embedding_dup_pairs), capped and uncapped,
+    on the real documents table."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    nex = lambda df: df._jdf.queryExecution().executedPlan() \
-        .toString().count("Exchange")
+    keys = ["band"] + dedup.band_key_cols(8, 4)
+    banded = dedup.minhash_banded(docs, "doc_id", "text", num_hashes=8,
+                                  bands=4)
     for mb in (None, 64):
-        op = dedup.minhash_lsh_pairs(docs, "doc_id", "text", num_hashes=8,
-                                     bands=4, max_bucket=mb,
-                                     construction="operator")
-        sq = dedup.minhash_lsh_pairs(docs, "doc_id", "text", num_hashes=8,
-                                     bands=4, max_bucket=mb)
-        ra = sorted((r["id_a"], r["id_b"]) for r in op.collect())
-        rb = sorted((r["id_a"], r["id_b"]) for r in sq.collect())
-        assert ra and ra == rb
-        assert nex(sq) == nex(op)
+        ref = dedup._capped_bucket_pairs(banded, "doc_id", keys, mb)
+        got = dedup.minhash_lsh_pairs(docs, "doc_id", "text", num_hashes=8,
+                                      bands=4, max_bucket=mb)
+        want = sorted((r["id_a"], r["id_b"]) for r in ref.collect())
+        assert want and sorted(
+            (r["id_a"], r["id_b"]) for r in got.collect()) == want
     # catalog hygiene: DataFrame named-args leave no temp views behind
     assert not [t for t in spark.catalog.listTables()
                 if t.name.startswith("_pyspark_")]
 
 
+def test_minhash_lsh_log_dropped_counts_oversize_buckets(spark, caplog):
+    """``log_dropped=True`` logs the number of buckets over the cap (the
+    `oversize_buckets` count) and still returns the statement's pairs."""
+    rows = [(i, "identical boundary bucket text for every clone row")
+            for i in (1, 2, 3)] + [(4, "a wholly different document")]
+    df = spark.createDataFrame(rows, "id long, t string")
+    with caplog.at_level("WARNING", logger=dedup.__name__):
+        got = dedup.minhash_lsh_pairs(df, "id", "t", num_hashes=8, bands=4,
+                                      max_bucket=2, log_dropped=True)
+    assert got.collect() == []
+    assert "dropped 4 buckets over max_bucket=2" in caplog.text
+
+
 def test_minhash_stmt_null_ids_at_cap_boundary(spark):
-    """r12 ADVICE: the stmt's window bucket count must EXCLUDE null-id rows
-    exactly like the operator path (minhash_signatures_wide filters them),
-    or a bucket sitting at the max_bucket boundary is kept by one
-    construction and dropped by the other.  Corpus: 3 same-text docs (one
-    bucket of 3) plus 2 null-id clones — with max_bucket=3 a count that
+    """The statement's window bucket count must EXCLUDE null-id rows
+    (minhash_signatures_wide filters them too), or a bucket sitting at the
+    max_bucket boundary is dropped.  Corpus: 3 same-text docs (one bucket
+    of 3 per band) plus 2 null-id clones — with max_bucket=3 a count that
     includes the nulls sees 5 and drops the bucket."""
     rows = [(i, "identical boundary bucket text for every clone row")
             for i in (1, 2, 3)] + [(None, "identical boundary bucket text "
                                           "for every clone row")] * 2
     df = spark.createDataFrame(rows, "id long, t string")
-    op = dedup.minhash_lsh_pairs(df, "id", "t", num_hashes=8, bands=4,
-                                 max_bucket=3, construction="operator")
-    sq = dedup.minhash_lsh_pairs(df, "id", "t", num_hashes=8, bands=4,
-                                 max_bucket=3)
-    ra = sorted((r["id_a"], r["id_b"]) for r in op.collect())
-    rb = sorted((r["id_a"], r["id_b"]) for r in sq.collect())
-    assert ra == [(1, 2), (1, 3), (2, 3)]
-    assert rb == ra
+    got = dedup.minhash_lsh_pairs(df, "id", "t", num_hashes=8, bands=4,
+                                  max_bucket=3)
+    assert sorted((r["id_a"], r["id_b"]) for r in got.collect()) == \
+        [(1, 2), (1, 3), (2, 3)]
 
 
-def test_cosine_topk_stmt_construction_matches_operator(spark, sf_dir):
-    """Round-12 promotion gate for cosine_topk: bit-identical rows
-    (tuple equality includes the float cosine), same exchange count,
-    broadcast hint honored in the statement plan."""
+def test_cosine_topk_matches_bruteforce_reference(spark, sf_dir):
+    """cosine_topk against a plain-Python brute force over the same
+    vectors (double fold in index order, ties broken by data id): ids and
+    ranks exact, cosine within 1e-12; the broadcast hint is honored."""
+    import math
+
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 5)
-    op = similarity.cosine_topk(q, emb, k=10, construction="operator")
-    sq = similarity.cosine_topk(q, emb, k=10)
-    ra = sorted(map(tuple, op.collect()))
-    rb = sorted(map(tuple, sq.collect()))
-    assert ra and ra == rb
-    assert op.columns == sq.columns
-    nex = lambda df: df._jdf.queryExecution().executedPlan() \
-        .toString().count("Exchange")
-    assert nex(sq) == nex(op)
-    assert "Broadcast" in sq._jdf.queryExecution().executedPlan().toString()
+    got = similarity.cosine_topk(q, emb, k=10)
+    assert got.columns == ["query_id", "data_id", "cosine", "rank"]
+    vecs = {r["vec_id"]: [float(x) for x in r["embedding"]]
+            for r in emb.collect()}
+
+    def norm(v):
+        return math.sqrt(sum(x * x for x in v))
+
+    want = []
+    for qid in sorted(i for i in vecs if i < 5):
+        qv = vecs[qid]
+        scored = sorted(
+            ((-sum(a * b for a, b in zip(dv, qv)) / (norm(dv) * norm(qv)),
+              did) for did, dv in vecs.items()))
+        want += [(qid, did, -c, rank)
+                 for rank, (c, did) in enumerate(scored[:10], start=1)]
+    rows = sorted(tuple(r) for r in got.collect())
+    assert [(r[0], r[1], r[3]) for r in rows] == \
+        [(w[0], w[1], w[3]) for w in sorted(want)]
+    assert all(abs(r[2] - w[2]) <= 1e-12 for r, w in zip(rows, sorted(want)))
+    assert "Broadcast" in got._jdf.queryExecution().executedPlan().toString()
 
 
 def test_embedding_dup_cap_drops_mega_bucket(spark):

@@ -7,7 +7,11 @@ consumer).
 
 Runs as ONE subprocess: the gate needs a UI-enabled session for the REST
 stage metrics, and the engine session keeps the UI off outside
-SPARK_GRAFT_PROFILE_UI=1."""
+SPARK_GRAFT_PROFILE_UI=1.  The subprocess runs with a 1g driver heap
+(measured: the gate passes with ~2.1 GB peak RSS for the whole process
+tree at sf0.001), not the engine's 8g default: with -Xms = -Xmx, a second
+8g JVM next to the test session's own exhausts a 16 GB host and kills
+the session JVM the rest of the suite runs on."""
 
 import json
 import os
@@ -21,7 +25,8 @@ def test_iterative_queries_within_scan_budget():
     proc = subprocess.run(
         [sys.executable, os.path.join(_ROOT, "tools", "scan_budget.py"),
          "--check"],
-        capture_output=True, text=True, timeout=900, cwd=_ROOT)
+        capture_output=True, text=True, timeout=900, cwd=_ROOT,
+        env={**os.environ, "SPARK_DRIVER_MEMORY": "1g"})
     lines = [json.loads(l) for l in proc.stdout.splitlines()
              if l.startswith("{")]
     assert proc.returncode == 0, (

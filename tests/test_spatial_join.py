@@ -424,86 +424,140 @@ def _sj_fixture_dfs(spark, sf_dir):
     return pts, boxes, spts
 
 
-@pytest.mark.parametrize("shape", ["contains", "dwithin", "intersects"])
-def test_stmt_construction_matches_operator(spark, sf_dir, shape):
-    """Promotion gate (round 12): the single-statement construction must
-    produce exactly the operator path's rows, column names, and exchange
-    count on every declared hint-exact shape — including the shared
-    ``geo``/``geo_env`` collision rename (r11 ADVICE on the prototype)."""
-    pts, boxes, spts = _sj_fixture_dfs(spark, sf_dir)
-    if shape == "contains":
-        kw = dict(predicate="contains", on=("geo", "geo"), strategy="grid")
-        l, r, keys = boxes, pts, ("n_nationkey", "c_custkey")
-    elif shape == "dwithin":
-        kw = dict(predicate="dwithin", on=("geo", "geo"), strategy="grid",
-                  d=2.5)
-        l, r, keys = pts, spts, ("c_custkey", "s_suppkey")
-    else:
-        kw = dict(predicate="intersects", on=("geo", "geo"), strategy="grid")
-        l, r, keys = boxes, pts, ("n_nationkey", "c_custkey")
+_NATIVE_OPS = ("BroadcastNestedLoopJoin", "CartesianProduct")
 
-    op = spatial_join(l, r, construction="operator", **kw)
-    sq = spatial_join(l, r, construction="stmt", **kw)
-    assert op.columns == sq.columns           # incl. the r_ collision renames
-    assert "r_geo" in sq.columns and "r_geo_env" in sq.columns
-    key = lambda df: sorted((r[keys[0]], r[keys[1]])
-                            for r in df.select(*keys).collect())
-    rows_op, rows_sq = key(op), key(sq)
-    assert rows_op and rows_op == rows_sq
-    # same physical shape: the single statement must not add exchanges,
-    # and the hint-exact condition must keep the plan Python-free
-    n_ex = lambda df: df._jdf.queryExecution().executedPlan() \
-        .toString().count("Exchange")
-    assert n_ex(sq) == n_ex(op)
-    assert "EvalPython" not in sq.select(*keys)._jdf.queryExecution() \
-        .executedPlan().toString()
-    # catalog hygiene: the DataFrame named-args leave no temp views
+
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("how", ["inner", "left", "left_semi", "left_anti"])
+@pytest.mark.parametrize("strategy", ["grid", "broadcast"])
+def test_output_columns_pinned_per_shape_and_how(spark, sf_dir, how, strategy):
+    """Pinned output columns of every shape: both inputs keep their columns
+    (the right's ``r_``-prefixed on collision, the rename
+    `sql_join.plan_spatial_join_sql` reads back) for inner/left, the left's
+    for semi/anti; an envelope attached to an env-less input never reaches
+    the output.  The grid plan is an equi-join, never a nested loop or a
+    cartesian product; the hint-exact grid plan is Python-free; the
+    DataFrame named-args leave no temp views."""
+    pts, boxes, _ = _sj_fixture_dfs(spark, sf_dir)
+    bare = boxes.select("n_nationkey", F.col("geo").cast("binary").alias("geo"))
+    pinned = {
+        "env": ["n_nationkey", "geo", "geo_env",
+                "c_custkey", "r_geo", "r_geo_env"],
+        "bare": ["n_nationkey", "geo", "c_custkey", "r_geo", "geo_env"],
+    }
+    for kind, left in (("env", boxes), ("bare", bare)):
+        out = spatial_join(left, pts, predicate="contains", on=("geo", "geo"),
+                           how=how, strategy=strategy)
+        want = pinned[kind]
+        if how in ("left_semi", "left_anti"):
+            want = list(left.columns)
+        assert out.columns == want, (kind, out.columns)
+        plan = _executed(out)
+        if strategy == "grid":
+            assert not any(op in plan for op in _NATIVE_OPS), plan
+        else:
+            assert "BroadcastNestedLoopJoin" in plan, plan
+    hinted = spatial_join(boxes, pts, predicate="contains", on=("geo", "geo"),
+                          how=how, strategy="grid")
+    assert "EvalPython" not in _executed(hinted.select("n_nationkey"))
     assert not [t for t in spark.catalog.listTables()
                 if t.name.startswith("_pyspark_")]
 
 
+def _quarter_side(spark, shape, n, salt, name):
+    """Boundary-heavy quarter-grid inputs: coordinates on multiples of 0.25
+    so edges and corners coincide with each other and with grid-cell lines
+    (grid_size=1.0), and box widths/heights include 0 (zero-area boxes).
+    ``shape``: points / rects (env struct + shape hint), polys (rect
+    geometry, env struct, no hint), bare (rect geometry, no env, no hint),
+    bare_rects (no env; the hint passed as an argument)."""
+    from sedona_iceberg_extension_spark.functions import api as ST
+
+    base = spark.range(n).select(F.col("id").alias(name))
+    x = ((F.col(name) * 3 + salt) % 17 - 8) / 4.0
+    y = ((F.col(name) * 5 + 2 * salt) % 13 - 6) / 4.0
+    if shape == "points":
+        return ST.with_point_geometry(base, x, y)
+    df = ST.with_box_geometry(base, x, y, x + (F.col(name) % 5) / 4.0,
+                              y + (F.col(name) % 3) / 4.0)
+    if shape == "polys":       # a cast drops the shape-hint metadata
+        return df.select(name, F.col("geo").cast("binary").alias("geo"),
+                         "geo_env")
+    if shape in ("bare", "bare_rects"):
+        return df.select(name, F.col("geo").cast("binary").alias("geo"))
+    return df
+
+
+_REF_UDF = {"contains": udfs.st_contains, "within": udfs.st_within,
+            "covers": udfs.st_covers, "covered_by": udfs.st_coveredby,
+            "intersects": udfs.st_intersects, "touches": udfs.st_touches}
+
+
 @pytest.mark.parametrize("predicate,lshape,rshape", [
-    ("contains", "rects", "points"),   # strict-bounds branch
-    ("within", "points", "rects"),     # mirrored strict-bounds branch
-    ("contains", "rects", "rects"),    # closed-bounds env-exact branch
-    ("covers", "rects", "rects"),
-    ("within", "rects", "rects"),
+    ("contains", "rects", "points"),    # strict-bounds branch
+    ("within", "points", "rects"),      # mirrored strict-bounds branch
+    ("covers", "rects", "rects"),       # closed-bounds env-exact branches
     ("covered_by", "points", "rects"),
     ("intersects", "rects", "rects"),
     ("intersects", "points", "points"),
-    ("dwithin", "points", "points"),   # native distance branch
+    ("within", "points", "points"),
+    ("dwithin", "points", "points"),    # native distance branch
+    ("contains", "rects", "rects"),     # closed prefilter + ST_Contains
+    ("within", "rects", "rects"),
+    ("contains", "polys", "points"),    # strict prefilter + ST_Contains
+    ("within", "points", "polys"),
+    ("dwithin", "rects", "points"),     # padded prefilter + ST_Distance
+    ("touches", "rects", "rects"),      # overlap prefilter + ST_Touches
+    ("intersects", "bare", "points"),   # env-less left, UDF-refined
+    ("contains", "polys", "bare"),      # env-less right
+    ("covers", "bare_rects", "rects"),  # env-less, hint-exact
 ])
-def test_stmt_cond_branches_match_operator(spark, predicate, lshape, rshape):
-    """Every hint-exact branch of `_native_cond_sql` against its Column
-    twin in `spatial_join`'s operator path, on boundary-heavy data
-    (quarter-grid coordinates so edges/corners coincide with envelope
-    bounds and grid-cell lines): the two constructions must emit identical
-    pair sets.  A branch drifting in one table but not the other (e.g. a
-    <= loosened to <) fails here before any declared query can see it."""
-    from sedona_iceberg_extension_spark.functions import api as ST
+def test_cond_branches_match_reference(spark, predicate, lshape, rshape):
+    """Every branch of the one condition builder (`_cond_sql`), plus the
+    UDF-refined and env-less shapes, against a reference cross join
+    filtered by the exact ``ST_*`` UDF — for both strategies and every
+    ``how``.  A branch whose envelope algebra is not the exact predicate
+    (e.g. a <= loosened to <, or a closed bound claimed exact where OGC
+    needs an interior point) fails here."""
+    rsalt = 1 if (lshape, rshape) == ("points", "points") else 2
+    l = _quarter_side(spark, lshape, 40, 1, "k1")
+    r = _quarter_side(spark, rshape, 50, rsalt, "k2")
+    d = 0.75 if predicate == "dwithin" else 0.0
+    hints = {"left_is_rects": True} if lshape == "bare_rects" else {}
 
-    def side(shape, n, salt, name):
-        base = spark.range(n).select(F.col("id").alias(name))
-        x = ((F.col(name) * 3 + salt) % 17 - 8) / 4.0
-        y = ((F.col(name) * 5 + 2 * salt) % 13 - 6) / 4.0
-        if shape == "points":
-            return ST.with_point_geometry(base, x, y)
-        return ST.with_box_geometry(
-            base, x, y, x + ((F.col(name) % 5)) / 4.0,
-            y + ((F.col(name) % 3)) / 4.0)
+    a, b = l.alias("a"), r.alias("b")
+    if predicate == "dwithin":
+        exact = udfs.st_distance(F.col("a.geo"), F.col("b.geo")) <= d
+    else:
+        exact = _REF_UDF[predicate](F.col("a.geo"), F.col("b.geo"))
+    want = sorted(tuple(row) for row in a.crossJoin(b).filter(exact)
+                  .select("a.k1", "b.k2").collect())
+    assert want, f"degenerate fixture: no pairs for {predicate}"
+    matched = {k1 for k1, _ in want}
+    unmatched = sorted({k for k in range(40)} - matched)
 
-    # point∩point needs coinciding coordinates — same salt on both sides
-    rsalt = 1 if (predicate, lshape, rshape) == ("intersects", "points",
-                                                 "points") else 2
-    l, r = side(lshape, 40, 1, "k1"), side(rshape, 50, rsalt, "k2")
-    kw = dict(predicate=predicate, on=("geo", "geo"), strategy="grid",
-              grid_size=1.0, d=0.75 if predicate == "dwithin" else 0.0)
-    key = lambda df: sorted((row["k1"], row["k2"])
-                            for row in df.select("k1", "k2").collect())
-    got_op = key(spatial_join(l, r, construction="operator", **kw))
-    got_sq = key(spatial_join(l, r, construction="stmt", **kw))
-    assert got_op == got_sq
-    assert got_op, f"degenerate fixture: no pairs for {predicate}"
+    for strategy in ("grid", "broadcast"):
+        def run(how):
+            return spatial_join(l, r, predicate=predicate, on=("geo", "geo"),
+                                how=how, strategy=strategy, grid_size=1.0,
+                                d=d, **hints)
+        got = sorted(tuple(row) for row in
+                     run("inner").select("k1", "k2").collect())
+        assert got == want, strategy
+        got = sorted(run("left").select("k1", "k2").collect(),
+                     key=lambda row: (row[0], row[1] is None, row[1] or 0))
+        assert [tuple(row) for row in got] == sorted(
+            want + [(k, None) for k in unmatched],
+            key=lambda t: (t[0], t[1] is None, t[1] or 0)), strategy
+        assert sorted(row[0] for row in
+                      run("left_semi").select("k1").collect()) == \
+            sorted(matched), strategy
+        assert sorted(row[0] for row in
+                      run("left_anti").select("k1").collect()) == \
+            unmatched, strategy
 
 
 def test_grid_join_hot_cell_skew_soak(spark):
@@ -576,69 +630,43 @@ def test_grid_join_hot_cell_skew_soak(spark):
                 spark.conf.set(k, v)
 
 
-def test_auto_probe_frame_identical_across_constructions(spark, sf_dir,
-                                                         monkeypatch):
-    """r12 ADVICE: strategy='auto' must size the SAME frame — the caller's
-    raw right side — under both constructions, or a borderline join near
-    the 64 MB threshold resolves broadcast in one and grid in the other
-    (Project nodes rescale Catalyst's sizeInBytes by row width, so the
-    operator path's old post-rename probe saw a different estimate)."""
+def test_auto_probe_sizes_raw_right_frame(spark, sf_dir, monkeypatch):
+    """strategy='auto' must size the caller's RAW right side — not the
+    env-attached or renamed projection the statement reads (Project nodes
+    rescale Catalyst's sizeInBytes by row width, so a borderline join near
+    the 64 MB threshold could resolve differently) — for every shape."""
     import importlib
     sj = importlib.import_module(
         "sedona_iceberg_extension_spark.operators.spatial_join")
 
     pts, boxes, _ = _sj_fixture_dfs(spark, sf_dir)
+    bare = pts.select("c_custkey", F.col("geo").cast("binary").alias("geo"))
     seen, resolved = [], []
     real = sj._resolve_auto_strategy
 
     def recorder(right, thr):
         seen.append(right)
-        out = real(right, thr)
-        resolved.append(out)
-        return out
+        resolved.append(real(right, thr))
+        return resolved[-1]
 
     monkeypatch.setattr(sj, "_resolve_auto_strategy", recorder)
-    for construction in ("auto", "operator"):
-        sj.spatial_join(boxes, pts, predicate="contains", on=("geo", "geo"),
-                        strategy="auto", construction=construction)
-    assert len(seen) == 2
-    assert seen[0] is pts and seen[1] is pts   # the raw frame, both times
-    assert resolved[0] == resolved[1]
+    for right, how in ((pts, "inner"), (bare, "inner"), (pts, "left_anti")):
+        sj.spatial_join(boxes, right, predicate="contains", on=("geo", "geo"),
+                        how=how, strategy="auto")
+    assert seen[0] is pts and seen[1] is bare and seen[2] is pts
+    assert resolved[0] == resolved[2]
 
 
-def test_stmt_construction_auto_and_fallbacks(spark, sf_dir):
-    """construction='auto' takes the statement for eligible shapes and must
-    silently fall back for ineligible ones (UDF refinement, outer joins,
-    missing env structs); 'stmt' on an ineligible shape raises."""
-    pts, boxes, _ = _sj_fixture_dfs(spark, sf_dir)
-    # UDF-refined (no hints stripped of metadata): drop metadata via rdd-less
-    # re-select through a schema cast that loses the shape hint
-    no_hint = boxes.select(
-        "n_nationkey", F.col("geo").alias("geo"))     # drops geo_env TOO
-    with pytest.raises(ValueError):
-        spatial_join(no_hint, pts, predicate="contains", on=("geo", "geo"),
-                     strategy="grid", construction="stmt")
-    out = spatial_join(no_hint, pts, predicate="contains", on=("geo", "geo"),
-                       strategy="grid", construction="auto")   # operator path
-    n_auto = out.count()
-    ref = spatial_join(boxes, pts, predicate="contains", on=("geo", "geo"),
-                       strategy="grid", construction="operator").count()
-    assert n_auto == ref
-    with pytest.raises(ValueError):
-        spatial_join(boxes, pts, predicate="contains", on=("geo", "geo"),
-                     how="left_semi", strategy="grid", construction="stmt")
-
-
-def test_stmt_exchanges_carry_env_struct_not_flats(spark, sf_dir):
-    """Round-16 gate: the single-statement grid join references envelope
-    STRUCT FIELDS directly — no ``_l_*``/``_r_*`` flatten projections —
+def test_grid_exchanges_carry_env_struct_not_flats(spark, sf_dir):
+    """The grid join statement references envelope STRUCT FIELDS
+    directly — no ``_l_*``/``_r_*`` flatten projections —
     so the cell exchanges ship each side's envelope once (the struct)
     instead of twice (struct + four flattened doubles).  A regression
     reintroducing the flats would double the envelope bytes on the
     family's widest shuffle (guide §2.3)."""
     pts, boxes, _ = _sj_fixture_dfs(spark, sf_dir)
     sq = spatial_join(boxes, pts, predicate="contains", on=("geo", "geo"),
-                      strategy="grid", construction="stmt")
+                      strategy="grid")
     plan = sq._jdf.queryExecution().executedPlan().toString()
     assert "_l_xmin" not in plan and "_r_xmin" not in plan
     # the env structs still reach the output projection unchanged
@@ -646,11 +674,11 @@ def test_stmt_exchanges_carry_env_struct_not_flats(spark, sf_dir):
 
 
 def test_grid_size_cache_hits_across_projection_variants(spark, sf_dir):
-    """Round-16 gate: `_cached_grid_size`'s level-2 key (optimized-plan
-    hash of the stats frame) must see through projection variants of the
-    same inputs, so the two-scan sizing job runs once per session per
-    (data, env expression, d) — the SQL-text and operator spellings of a
-    declared join share one stats job."""
+    """`_grid_size_from_env`'s level-2 key (optimized-plan hash of the
+    stats frame) must see through projection variants of the same inputs,
+    so the two-scan sizing job runs once per session per (data, env
+    expression, d) — the SQL-text and DataFrame spellings of a declared
+    join share one stats job."""
     import importlib
 
     SJ = importlib.import_module(
@@ -658,7 +686,7 @@ def test_grid_size_cache_hits_across_projection_variants(spark, sf_dir):
     pts, boxes, _ = _sj_fixture_dfs(spark, sf_dir)
     SJ._GRID_SIZE_CACHE.clear()
     SJ._ENV_STATS_CACHE.clear()
-    g1 = SJ._grid_size_from_env(boxes, pts, "geo", "geo", 0.0)
+    g1 = SJ._grid_size_from_env(boxes, pts, "geo_env", "geo_env", 0.0)
     n_after_first = len(SJ._GRID_SIZE_CACHE)     # level-1 + level-2 entries
     # projection variants: extra columns change the analyzed plans (level-1
     # miss) but prune away in the stats frame (level-2 hit)
@@ -666,7 +694,7 @@ def test_grid_size_cache_hits_across_projection_variants(spark, sf_dir):
     pts_v = pts.select("*", F.lit(2).alias("_extra"))
     st = spark.sparkContext.statusTracker()
     jobs_before = len(st.getJobIdsForGroup())
-    g2 = SJ._grid_size_from_env(boxes_v, pts_v, "geo", "geo", 0.0)
+    g2 = SJ._grid_size_from_env(boxes_v, pts_v, "geo_env", "geo_env", 0.0)
     jobs_after = len(st.getJobIdsForGroup())
     assert g1 == g2
     # the variant took the level-2 hit: no new Spark job ran
@@ -676,13 +704,13 @@ def test_grid_size_cache_hits_across_projection_variants(spark, sf_dir):
     # with the sides SWAPPED (inverse predicate); `_derive_grid_size` is
     # symmetric, so the swapped orientation must hit too — no new job
     jobs_before = len(st.getJobIdsForGroup())
-    g3 = SJ._grid_size_from_env(pts, boxes, "geo", "geo", 0.0)
+    g3 = SJ._grid_size_from_env(pts, boxes, "geo_env", "geo_env", 0.0)
     assert g3 == g1
     assert len(st.getJobIdsForGroup()) == jobs_before
     # a NEW PAIRING of two already-seen sides also needs no job
     jobs_before = len(st.getJobIdsForGroup())
     boxes2 = boxes.select("n_nationkey", "geo", "geo_env")
-    g4 = SJ._grid_size_from_env(boxes2, boxes, "geo", "geo", 0.0)
+    g4 = SJ._grid_size_from_env(boxes2, boxes, "geo_env", "geo_env", 0.0)
     assert g4 > 0
     assert len(st.getJobIdsForGroup()) == jobs_before
     SJ._GRID_SIZE_CACHE.clear()
