@@ -179,6 +179,18 @@ def entry(spark: SparkSession) -> DataFrame:
 # lineitem_cramers_v; each is byte-identical old-vs-new in isolation
 # (the full-set dump flicker class).  Both added names are oracle-green
 # at sf0.001 and sf0.01 x SPARK_GRAFT_SHUFFLE 7/32/256.
+#
+# Parse-tree SQL detector: 1 name changed, already listed.
+# `spatial_sql` now plans the comma join like the JOIN ... ON join, with
+# the FROM order as the grid join's left/right (the old comma path took
+# the predicate's argument order), so spatial_join_sql_comma joins
+# customers (left) to nation boxes (right) under ``within`` instead of
+# boxes to customers under ``contains``: the same cell equi-join, the
+# sides swapped, the same exchanges and rows (direct optimizedPlan diff,
+# parent vs change, isolated sessions).  tools/plan_hashes.py --compare
+# over all 340 at sf0.01, with its dumps now deterministic, lists only
+# that name; the other spatial_sql consumers (spatial_join_sql,
+# _dwithin, _chain, spatial_join_left) hash unchanged.
 _TRANCHE0: list[str] = [
     "spatial_join_contains",
     "spatial_join_dwithin",

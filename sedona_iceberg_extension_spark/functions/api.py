@@ -357,15 +357,6 @@ def st_centroid(g: GeomExpr) -> GeomExpr:
     return st_geom(udfs.st_centroid(g.wkb()))
 
 
-def st_centroid_x(g: GeomExpr) -> Column:
-    """Centroid X as a native column where possible (box/point operands)."""
-    return st_x(st_centroid(g))
-
-
-def st_centroid_y(g: GeomExpr) -> Column:
-    return st_y(st_centroid(g))
-
-
 def st_astext(g: GeomExpr) -> Column:
     return udfs.st_astext(g.wkb())
 

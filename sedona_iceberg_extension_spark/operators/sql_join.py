@@ -5,54 +5,48 @@ The reference plans a *plain SQL* spatial join —
 ``BroadcastIndexJoin``/``RangeJoin`` via an injected planner strategy
 (``SedonaIcebergExtensions.scala:47``, asserted by plan-string regex at
 ``TestSedonaIcebergExtension.scala:117-142``).  PySpark cannot inject a
-Catalyst strategy, so this module does the same detection one level up, on
-the SQL text itself:
+Catalyst strategy, so this module reads the statement's **parse tree**
+(``sessionState.sqlParser.parsePlan``: the unresolved Catalyst plan) and
+rewrites the text at the exact ``origin`` spans the parser records:
 
-1. find ``FROM <rel> [a] JOIN <rel> [b] ON ST_pred(x.geo, y.geo) [AND ...]``
-   (table aliases optional — a bare table name is its own alias),
-2. plan that join through :func:`operators.spatial_join.spatial_join`
+1. every inner or left ``Join`` whose left and right inputs are FROM
+   relations (tables, CTE references, aliased subqueries) or an already
+   planned pair looks for an ``ST_pred(x.col, y.col[, d])`` conjunct over one
+   column from each side — in its own ``ON`` condition or, for inner joins
+   (comma joins parse as ``Filter(cond, Join(a, b, Inner))``), in the
+   enclosing ``WHERE``;
+2. the join is planned through :func:`operators.spatial_join.spatial_join`
    (grid cell equi-join — sort-merge/shuffled-hash + AQE, never a
-   BroadcastNestedLoopJoin/CartesianProduct),
-3. expose the join result as a temp view with one **struct column per table
-   alias**, so every ``a.col`` / ``b.col`` reference in the rest of the
-   statement keeps resolving unchanged (struct field access), and run the
-   rewritten statement through ``spark.sql``.
+   BroadcastNestedLoopJoin/CartesianProduct) into a *pair* DataFrame with
+   one **struct column per table alias**, so every ``a.col`` reference in
+   the rest of the statement keeps resolving (struct field access);
+3. the text is spliced: the relations become the pair (a ``spark.sql``
+   DataFrame named arg — no temp view outlives the call), a consumed
+   ``WHERE`` conjunct becomes ``TRUE``, a bare ``*`` becomes
+   ``a.*, b.*`` in FROM order, and a constant-envelope range conjunct over
+   a point/rect shape-hinted column becomes its native envelope bounds.
 
-**Chained spatial joins** (``FROM a JOIN b ON ST_p(...) JOIN c ON
-ST_q(...)``) are planned left-to-right: each join's pair view becomes the
-left input of the next detection pass, and geometry references like
-``a.geo`` resolve through the prior view's alias-struct columns (shape-hint
-metadata is re-stamped on extraction, so the Python-free exact-envelope
-paths survive the chain).  Detection runs on consecutive spatial joins at
-the head of the FROM clause; a trailing *non*-spatial equi-join after the
-spatial chain also works, since the pair view's struct columns keep
-``alias.col`` references valid in the untouched remainder.
+Extra ``ON`` conjuncts filter the pair on inner joins; on a left join they
+may only read the right side, and then filter the right input.  An ``ST_*``
+call under an ``OR`` is not a conjunct and is never planned.  Chains
+(``a JOIN b ON ST_p JOIN c ON ST_q`` and comma chains) plan left to right:
+a planned pair is the left input of the next join, its geometry extracted
+from the alias struct with the shape-hint metadata kept.  A CTE or subquery
+input is built from its own text (``WITH <defs> SELECT * FROM <relation>``),
+through this same front door.
 
-**Comma joins** — the reference App's own headline spelling,
-``SELECT ... FROM t0 l, t1 r WHERE ST_Contains(r.geo, l.geo) [AND ...]``
-(App.scala:62-63,72-73,77 drives 4 of its 5 spatial-join statements this
-way, incl. the CTAS) — are detected too: the FROM relation list is parsed,
-the WHERE clause is split into top-level AND-conjuncts, and the first
-conjunct that is a recognized ``ST_pred(a.col, b.col[, d])`` over two
-distinct FROM relations is planned through the same grid join; the two
-relations collapse to the pair view and the remaining conjuncts stay as the
-residual WHERE.  Iterating the pass plans multi-relation comma chains
-(``FROM a, b, c WHERE ST_p(..) AND ST_q(..)``) one join at a time, with
-later predicates resolving through the pair view's alias-struct columns.
-
-Statements with no spatial equi-theta join — or shapes this detector does
-not recognize — fall through to ``spark.sql`` verbatim: the registered ST_*
-UDFs still evaluate them correctly, just without the planner upgrade (the
+Anything else runs through ``spark.sql`` unchanged: the registered ST_*
+UDFs still evaluate it correctly, just without the planner upgrade (the
 same correct-but-unindexed fallback the reference has for non-join
-predicates).
+predicates).  A statement whose text has no ``st_`` is never parsed here.
 """
 
 from __future__ import annotations
 
-import re
-from typing import List, NamedTuple, Optional, Tuple
+from typing import Dict, List, Optional, Tuple
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.errors import AnalysisException, ParseException
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
 from .spatial_join import spatial_join
@@ -72,669 +66,494 @@ _PREDICATES = {
     "st_dwithin": ("dwithin", "dwithin"),
 }
 
-# a bare word after a relation is an alias only if it isn't a keyword
-_NOT_KW = (r"(?!ON\b|JOIN\b|INNER\b|CROSS\b|LEFT\b|RIGHT\b|FULL\b|WHERE\b"
-           r"|GROUP\b|HAVING\b|ORDER\b|LIMIT\b|UNION\b|EXCEPT\b|INTERSECT\b)")
-
-_JOIN_RE = re.compile(
-    rf"""FROM\s+
-        (?P<lrel>[\w.]+)(?:\s+(?:AS\s+)?{_NOT_KW}(?P<lalias>\w+))?\s+
-        (?:(?P<outer>LEFT\s+(?:OUTER\s+)?)|INNER\s+)?JOIN\s+
-        (?P<rrel>[\w.]+)(?:\s+(?:AS\s+)?{_NOT_KW}(?P<ralias>\w+))?\s+
-        ON\s+(?P<pred>ST_\w+)\s*\(""",
-    re.IGNORECASE | re.VERBOSE,
-)
-
-# end of a trailing AND-conjunct run after the ON clause: next clause,
-# next JOIN (the conjuncts belong to *this* join, not the one after), or EOS
-_CLAUSE_END_RE = re.compile(
-    r"\b((?:INNER\s+|CROSS\s+|LEFT\s+(?:OUTER\s+)?|RIGHT\s+(?:OUTER\s+)?"
-    r"|FULL\s+(?:OUTER\s+)?)?JOIN|WHERE|GROUP\s+BY|HAVING|ORDER\s+BY|LIMIT"
-    r"|UNION|EXCEPT|INTERSECT)\b|$",
-    re.IGNORECASE,
-)
-
-# where a deferred WHERE clause may be injected in the statement tail
-_WHERE_SLOT_RE = re.compile(
-    r"\b(GROUP\s+BY|HAVING|ORDER\s+BY|LIMIT|UNION|EXCEPT|INTERSECT)\b|$",
-    re.IGNORECASE,
-)
-
-_ARG_RE = re.compile(r"^(\w+)\.(\w+)$")
-
-_VIEW_PREFIX = "__spatial_sql_join_"
-_VIEW_COUNTER = [0]
-# pair view -> its aliases in ORIGINAL FROM order (the predicate's arg order
-# decides which side is the join's left, so the view's struct order can
-# differ from the statement's FROM order — SELECT * expansion must follow
-# the latter)
-_VIEW_ALIAS_ORDER: dict = {}
-
-
-class _Match(NamedTuple):
-    span: Tuple[int, int]      # [start, end) of the full FROM..ON..(args)[AND..] text
-    lrel: str
-    lalias: str
-    rrel: str
-    ralias: str
-    pred_sql: str
-    args: List[str]
-    extra: Optional[str]       # trailing AND-conjuncts (verbatim SQL) or None
-    how: str                   # "inner" | "left"
-
-
-def _balanced_args(sql: str, open_idx: int) -> Tuple[List[str], int]:
-    """Split the argument list starting after ``(`` at *open_idx*; returns
-    (args, index just past the closing paren)."""
-    depth, i, start, args = 1, open_idx + 1, open_idx + 1, []
-    while i < len(sql) and depth:
-        c = sql[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                args.append(sql[start:i].strip())
-        elif c == "," and depth == 1:
-            args.append(sql[start:i].strip())
-            start = i + 1
-        i += 1
-    if depth:
-        raise ValueError("unbalanced parentheses in spatial predicate")
-    return args, i
-
-
-def _find_spatial_join(sql: str) -> Optional[_Match]:
-    m = _JOIN_RE.search(sql)
-    if not m:
-        return None
-    pred = m.group("pred").lower()
-    if pred not in _PREDICATES:
-        return None
-    args, after = _balanced_args(sql, m.end() - 1)
-    # optional trailing AND-conjuncts belong to the join condition
-    extra = None
-    rest = sql[after:]
-    am = re.match(r"\s+AND\s+", rest, re.IGNORECASE)
-    if am:
-        em = _CLAUSE_END_RE.search(rest, am.end())
-        extra = rest[am.end():em.start()].strip()
-        after += em.start()
-    lalias = m.group("lalias") or m.group("lrel").rsplit(".", 1)[-1]
-    ralias = m.group("ralias") or m.group("rrel").rsplit(".", 1)[-1]
-    how = "left" if m.group("outer") else "inner"
-    return _Match((m.start(), after), m.group("lrel"), lalias,
-                  m.group("rrel"), ralias, pred, args, extra, how)
-
-
-def _resolve_geom(df: DataFrame, side_alias: str, arg_alias: str,
-                  arg_col: str) -> Optional[Tuple[DataFrame, str, List[str]]]:
-    """Resolve a predicate argument ``arg_alias.arg_col`` against one join
-    side.  Plain case: the alias names the side and the column exists.
-    Pair-view case: the alias is a struct column of a prior spatial-join
-    view — extract the geometry (and its ``_env`` companion) into flat temp
-    columns, re-stamping shape-hint metadata so the native envelope paths
-    survive.  Returns (df, flat_geom_col, temp_cols) or None."""
-    if arg_alias == side_alias and arg_col in df.columns:
-        return df, arg_col, []
-    if arg_alias in df.columns and isinstance(df.schema[arg_alias].dataType, StructType):
-        inner: StructType = df.schema[arg_alias].dataType
-        if arg_col not in inner.fieldNames():
-            return None
-        tmp = f"__geo_{arg_alias}_{arg_col}"
-        md = inner[arg_col].metadata
-        extract = [F.col(f"`{arg_alias}`.`{arg_col}`").alias(tmp, metadata=md or None)]
-        tmps = [tmp]
-        env = f"{arg_col}_env"
-        if env in inner.fieldNames():
-            extract.append(F.col(f"`{arg_alias}`.`{env}`").alias(f"{tmp}_env"))
-            tmps.append(f"{tmp}_env")
-        return df.select("*", *extract), tmp, tmps
-    return None
-
-
-def plan_spatial_join_sql(
-    spark: SparkSession,
-    match: _Match,
-    strategy: str = "grid",
-) -> str:
-    """Plan the matched spatial join; returns the temp-view name exposing the
-    result as one struct column per table alias (prior-join alias structs on
-    the left side pass through unchanged)."""
-    ldf = spark.table(match.lrel)
-    rdf = spark.table(match.rrel)
-    l_is_pair_view = match.lrel.startswith(_VIEW_PREFIX)
-
-    args = match.args
-    d = 0.0
-    if match.pred_sql == "st_dwithin":
-        if len(args) != 3:
-            raise ValueError("ST_DWithin requires (geomA, geomB, distance)")
-        d = float(args[2])
-        args = args[:2]
-    refs = [_ARG_RE.match(a) for a in args]
-    if not all(refs):
-        raise ValueError(f"unsupported spatial join arguments {args!r}")
-    (a_alias, a_col), (b_alias, b_col) = [(r.group(1), r.group(2)) for r in refs]
-
-    fwd, inv = _PREDICATES[match.pred_sql]
-    left_res = _resolve_geom(ldf, match.lalias, a_alias, a_col)
-    right_res = _resolve_geom(rdf, match.ralias, b_alias, b_col)
-    if left_res and right_res:
-        predicate = fwd
-    else:
-        # args are (right, left): pred(r, l) == inverse-pred(l, r)
-        left_res = _resolve_geom(ldf, match.lalias, b_alias, b_col)
-        right_res = _resolve_geom(rdf, match.ralias, a_alias, a_col)
-        if not (left_res and right_res):
-            raise ValueError(
-                f"spatial predicate references {a_alias}/{b_alias}, "
-                f"join aliases are {match.lalias}/{match.ralias}")
-        predicate = inv
-
-    ldf2, lgeo, ltmps = left_res
-    rdf2, rgeo, _ = right_res
-
-    joined = spatial_join(ldf2, rdf2, predicate=predicate, on=(lgeo, rgeo),
-                          how=match.how, strategy=strategy, d=d)
-
-    lcols, rcols = ldf2.columns, rdf2.columns
-    common = set(lcols) & set(rcols)
-    rstruct = F.struct(*[F.col(f"`r_{c}`" if c in common else f"`{c}`").alias(c)
-                         for c in rcols]).alias(match.ralias)
-    if l_is_pair_view:
-        # left columns are already one struct per prior alias — pass through
-        keep = [F.col(f"`{c}`").alias(c) for c in lcols if c not in ltmps]
-        out = joined.select(*keep, rstruct)
-    else:
-        out = joined.select(
-            F.struct(*[F.col(f"`{c}`").alias(c) for c in lcols
-                       if c not in ltmps]).alias(match.lalias),
-            rstruct,
-        )
-
-    _VIEW_COUNTER[0] += 1
-    view = f"{_VIEW_PREFIX}{_VIEW_COUNTER[0]}"
-    out.createOrReplaceTempView(view)
-    return view
-
-
-_REL_RE = re.compile(
-    rf"(?P<rel>[\w.]+)(?:\s+(?:AS\s+)?{_NOT_KW}(?P<alias>\w+))?\s*",
-    re.IGNORECASE)
-
-_ST_CONJ_RE = re.compile(r"^(?P<pred>ST_\w+)\s*\(", re.IGNORECASE)
-
-
-def _split_conjuncts(s: str) -> List[str]:
-    """Split a WHERE body on top-level ``AND`` (paren-aware)."""
-    parts, depth, start, i, n = [], 0, 0, 0, len(s)
-    while i < n:
-        c = s[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif (depth == 0 and s[i:i + 3].upper() == "AND"
-              and (i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_"))
-              and (i + 3 >= n or not (s[i + 3].isalnum() or s[i + 3] == "_"))):
-            parts.append(s[start:i].strip())
-            start = i + 3
-            i += 3
-            continue
-        i += 1
-    parts.append(s[start:].strip())
-    return [p for p in parts if p]
-
-
-def _has_toplevel_or(s: str) -> bool:
-    """True if the text contains an ``OR`` keyword at paren depth 0 outside
-    string literals.  AND binds tighter than OR, so a WHERE body with a
-    top-level OR is NOT a pure conjunction — removing one \"conjunct\" from
-    it (the comma-join rewrite) would silently change semantics
-    (``ST_pred AND x OR z`` parses as ``(ST_pred AND x) OR z``)."""
-    depth, i, n = 0, 0, len(s)
-    while i < n:
-        c = s[i]
-        if c == "'":
-            i += 1
-            while i < n and s[i] != "'":
-                i += 1
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif (depth == 0 and c in "oO" and s[i:i + 2].upper() == "OR"
-              and (i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_"))
-              and (i + 2 >= n or not (s[i + 2].isalnum() or s[i + 2] == "_"))):
-            return True
-        i += 1
-    return False
-
-
-def _parse_comma_from(sql: str):
-    """Parse ``FROM rel [a], rel [b][, ...] WHERE <body>``; returns
-    (from_start, where_body_start, where_body_end, rels, conjuncts) where
-    each rel is (name, alias_or_None, verbatim_text), or None."""
-    fm = re.search(r"\bFROM\s+", sql, re.IGNORECASE)
-    if not fm:
-        return None
-    i, rels = fm.end(), []
-    while True:
-        m = _REL_RE.match(sql, i)
-        if not m or not m.group("rel"):
-            return None
-        rels.append((m.group("rel"), m.group("alias"),
-                     sql[m.start():m.end()].strip()))
-        i = m.end()
-        if i < len(sql) and sql[i] == ",":
-            i += 1
-            while i < len(sql) and sql[i].isspace():
-                i += 1
-            continue
-        break
-    if len(rels) < 2:
-        return None
-    wm = re.match(r"WHERE\s+", sql[i:], re.IGNORECASE)
-    if not wm:
-        return None
-    wstart = i + wm.end()
-    wend = _WHERE_SLOT_RE.search(sql, wstart).start()
-    return fm.start(), wstart, wend, rels, _split_conjuncts(sql[wstart:wend])
-
-
-def _rewrite_comma_join(spark: SparkSession, sql: str,
-                        strategy: str) -> Optional[str]:
-    """Plan ONE comma-join spatial predicate (the reference App's
-    ``FROM a, b WHERE ST_pred(...)`` spelling); returns the rewritten
-    statement or None if the shape doesn't apply."""
-    parsed = _parse_comma_from(sql)
-    if not parsed:
-        return None
-    from_start, wstart, wend, rels, conjs = parsed
-    # a top-level OR means the WHERE body is not a pure conjunction — the
-    # rewrite (which removes the spatial conjunct) would be unsound, so the
-    # statement falls through to vanilla evaluation (correct, unoptimized)
-    if _has_toplevel_or(sql[wstart:wend]):
-        return None
-    alias_of = {}
-    for t in rels:
-        alias_of[t[1] or t[0].rsplit(".", 1)[-1]] = t
-
-    pick = None
-    for ci, c in enumerate(conjs):
-        m = _ST_CONJ_RE.match(c)
-        if not m or m.group("pred").lower() not in _PREDICATES:
-            continue
-        try:
-            args, after = _balanced_args(c, c.index("("))
-        except ValueError:
-            continue
-        if c[after:].strip():       # not a bare predicate conjunct
-            continue
-        refs = [_ARG_RE.match(a) for a in args[:2]]
-        if not all(refs):
-            continue
-        sides = []
-        for r in refs:
-            al = r.group(1)
-            if al in alias_of:
-                sides.append(alias_of[al])
-                continue
-            # an earlier pass's pair view holds this alias as a struct column
-            holder = next((t for t in rels if t[0].startswith(_VIEW_PREFIX)
-                           and al in spark.table(t[0]).columns), None)
-            sides.append(holder)
-        if None in sides or sides[0] is sides[1]:
-            continue
-        pick = (ci, m.group("pred").lower(), args, sides)
-        break
-    if pick is None:
-        return None
-
-    ci, pred, args, (lt, rt) = pick
-    mt = _Match((0, 0), lt[0], lt[1] or lt[0].rsplit(".", 1)[-1],
-                rt[0], rt[1] or rt[0].rsplit(".", 1)[-1],
-                pred, args, None, "inner")
-    try:
-        view = plan_spatial_join_sql(spark, mt, strategy=strategy)
-    except Exception:
-        return None
-    _VIEW_ALIAS_ORDER[view] = [t[1] or t[0].rsplit(".", 1)[-1]
-                               for t in rels if t is lt or t is rt]
-    rest_rels = [t[2] for t in rels if t is not lt and t is not rt]
-    new_from = "FROM " + ", ".join([view] + rest_rels)
-    rest_conjs = [c for i2, c in enumerate(conjs) if i2 != ci]
-    new_where = (" WHERE " + " AND ".join(rest_conjs) + " ") if rest_conjs else " "
-    return sql[:from_start] + new_from + new_where + sql[wend:]
-
-
-_ENVLIT_RE = re.compile(r"^ST_PolygonFromEnvelope\s*\(", re.IGNORECASE)
-_NUM_RE = re.compile(r"^-?\d+(\.\d+)?([eE]-?\d+)?$")
-_COLREF_RE = re.compile(r"^(?:(\w+)\.)?(\w+)$")
-
 _RANGE_PREDS = ("st_contains", "st_within", "st_intersects",
                 "st_covers", "st_coveredby", "st_covered_by")
 
+# JoinType.sql -> spatial_join ``how``; other join types are not planned
+_HOW = {"INNER": "inner", "CROSS": "inner", "LEFT OUTER": "left"}
 
-def _relation_list(sql: str) -> List[Tuple[str, Optional[str]]]:
-    fm = re.search(r"\bFROM\s+", sql, re.IGNORECASE)
-    if not fm:
-        return []
-    i, rels = fm.end(), []
-    while True:
-        m = _REL_RE.match(sql, i)
-        if not m or not m.group("rel"):
-            break
-        rels.append((m.group("rel"), m.group("alias")))
-        i = m.end()
-        if i < len(sql) and sql[i] == ",":
-            i += 1
-            while i < len(sql) and sql[i].isspace():
-                i += 1
-            continue
-        break
-    return rels
+# expression nodes whose inner plan a conjunct walk cannot see
+_OPAQUE_EXPRS = ("ScalarSubquery", "Exists", "ListQuery", "InSubquery",
+                 "LateralSubquery", "UnresolvedNamedLambdaVariable")
 
 
-def _resolve_env_ref(spark, rels, alias, col):
-    """Resolve a geometry reference to (shape_hint, env_sql_path): the
-    column's ``_env`` companion either flat in a FROM relation or inside a
-    pair view's alias struct."""
-    for rel, ral in rels:
+class _Decline(Exception):
+    """The tree has a shape whose rewrite would change the statement's
+    output (a bare ``*`` over an input without a qualifier, a planned join
+    under a node that re-exposes its columns): run it unplanned."""
+
+
+class _Conj:
+    """One AND-conjunct of a join or filter condition."""
+
+    def __init__(self, expr):
+        self.expr = expr
+        self.consumed = False
+        self.call = None        # cached (name, args) of an ST_* call
+
+
+class _Side:
+    """One join input: a FROM relation (``aliases`` = [its alias], its
+    frame built on demand from its text), a planned pair (``df`` has one
+    struct column per alias), or an opaque input (``aliases`` None)."""
+
+    def __init__(self, node=None, kind=None, df=None, aliases=None,
+                 span=None):
+        self.node, self.kind, self.df = node, kind, df
+        self._aliases, self._span = aliases, span
+        self.pair = df is not None
+
+    @property
+    def aliases(self) -> Optional[List[str]]:
+        if self._aliases is None and self.kind == "SubqueryAlias":
+            self._aliases = [self.node.alias()]
+        elif self._aliases is None and self.kind == "UnresolvedRelation":
+            self._aliases = [self.node.multipartIdentifier().last()]
+        return self._aliases
+
+    def owns(self, alias: str) -> bool:
+        return alias.lower() in (a.lower() for a in self.aliases or ())
+
+
+def _span(node) -> Tuple[int, int]:
+    """[start, stop) of a parse-tree node in the statement text."""
+    o = node.origin()
+    return o.startIndex().get(), o.stopIndex().get() + 1
+
+
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+class _Rewrite:
+    """One statement's tree walk; collects text edits and pair frames."""
+
+    def __init__(self, spark: SparkSession, sql: str):
+        self.spark, self.sql = spark, sql
+        self.edits: List[Tuple[int, int, str]] = []
+        self.pairs: Dict[str, DataFrame] = {}
+        self.ctes: List[Tuple[str, str]] = []   # in-scope (name, CTE text)
+
+    # --- plan nodes ------------------------------------------------------
+
+    def walk(self, node) -> None:
+        kind = node.nodeName()
+        if kind in ("Project", "Aggregate"):
+            leaves, planned = self.from_clause(node.child())
+            if planned and kind == "Project":
+                self.expand_stars(node.projectList(), leaves)
+        elif kind in ("Join", "Filter"):
+            if self.from_clause(node)[1]:
+                raise _Decline(kind)
+        elif kind == "UnresolvedWith":
+            # a definition sees the ones before it; the query sees all
+            rels = node.cteRelations()
+            defs = [rels.apply(i) for i in range(rels.size())]
+            outer = self.ctes
+            for d in defs:
+                self.walk(d._2().child())
+                start, stop = _span(d._2())
+                self.ctes = self.ctes + [(d._1().lower(), self.sql[start:stop])]
+            self.walk(node.child())
+            self.ctes = outer
+        else:
+            ch = node.children()
+            for i in range(ch.size()):
+                self.walk(ch.apply(i))
+
+    def from_clause(self, node) -> Tuple[List[_Side], bool]:
+        """Plan the FROM tree under a select list (and its WHERE filters);
+        returns its inputs in FROM order and whether one is a pair."""
+        conjs: List[_Conj] = []
+        while node.nodeName() == "Filter":
+            conjs += self.conjuncts(node.condition())
+            node = node.child()
+        leaves = self.tree(node, conjs)
+        planned = False
+        for s in leaves:
+            if s.pair:
+                name = f"_sj{len(self.pairs)}"
+                self.pairs[name] = s.df
+                self.edits.append((*s._span, "{" + name + "}"))
+                planned = True
+            elif s.kind == "SubqueryAlias" \
+                    and s.node.child().nodeName() != "UnresolvedRelation":
+                self.walk(s.node.child())
+        if leaves:
+            self.rewrite_ranges(conjs, leaves)
+        return leaves, planned
+
+    def tree(self, node, conjs: List[_Conj]) -> List[_Side]:
+        kind = node.nodeName()
+        if kind == "Join":
+            return self.join(node, conjs)
+        if kind in ("SubqueryAlias", "UnresolvedRelation"):
+            return [_Side(node, kind)]
+        self.walk(node)
+        return [_Side()]
+
+    def join(self, node, conjs: List[_Conj]) -> List[_Side]:
+        """Inputs of one Join node, collapsed to a pair when it plans.
+        ``conjs`` are the enclosing WHERE's conjuncts; they reach a join
+        only through inner joins and the left input of a left join, where
+        filtering the join is the same as filtering its result."""
+        how = _HOW.get(node.joinType().sql())
+        cond = node.condition()
+        own = self.conjuncts(cond.get()) if cond.isDefined() else []
+        lefts = self.tree(node.left(), conjs if how else [])
+        rights = self.tree(node.right(), conjs if how == "inner" else [])
+        if how and len(lefts) == 1 and len(rights) == 1 \
+                and not rights[0].pair:
+            pair = self.plan(node, how, lefts[0], rights[0], own,
+                             conjs if how == "inner" else [])
+            if pair is not None:
+                return [pair]
+        return lefts + rights
+
+    def plan(self, node, how: str, left: _Side, right: _Side,
+             own: List[_Conj], conjs: List[_Conj]) -> Optional[_Side]:
+        pick = next(filter(None, (self.join_call(c, left, right)
+                                  for c in own + conjs)), None)
+        if pick is None:
+            return None
+        extras = [c for c in own if c is not pick[0]]
+        if how == "left" and not all(
+                self.reads_only(c.expr, right.aliases[0]) for c in extras):
+            return None     # it would filter the left rows, not the right
         try:
-            df = spark.table(rel)
-        except Exception:
-            continue
-        rel_alias = ral or rel.rsplit(".", 1)[-1]
-        if (alias is None or alias == rel_alias) and col in df.columns:
-            if f"{col}_env" not in df.columns:
-                return None, None
-            md = df.schema[col].metadata or {}
-            prefix = f"{rel_alias}." if alias else ""
-            return md.get("geom_shape"), f"{prefix}{col}_env"
-        if alias and alias in df.columns \
-                and isinstance(df.schema[alias].dataType, StructType):
-            inner: StructType = df.schema[alias].dataType
-            if col in inner.fieldNames() and f"{col}_env" in inner.fieldNames():
-                md = inner[col].metadata or {}
-                return md.get("geom_shape"), f"{alias}.{col}_env"
-    return None, None
+            rdf = self.frame(right)
+            if how == "left" and extras:
+                rdf = rdf.alias(right.aliases[0]).where(self.and_text(extras))
+            pair = plan_spatial_join_sql(
+                self.frame(left), left, rdf, right.aliases[0], *pick[1:],
+                how=how)
+            if pair is not None and how == "inner" and extras:
+                pair = pair.where(self.and_text(extras))
+        except AnalysisException:
+            # an input or extra conjunct that does not resolve on its own
+            # (a missing table, an outer reference): Spark runs the
+            # statement as written and reports any error itself
+            return None
+        if pair is None:
+            return None
+        if pick[0] in conjs:
+            pick[0].consumed = True
+            self.edits.append((*_span(pick[0].expr), "TRUE"))
+        lspan, rspan = self.span(left), self.span(right)
+        jstart, jstop = _span(node)
+        # an explicit JOIN node spans "JOIN r ON ..."; a comma join's
+        # node spans the whole FROM clause, so its text ends at the right
+        stop = jstop if jstart >= lspan[1] else rspan[1]
+        return _Side(df=pair, aliases=left.aliases + right.aliases,
+                     span=(lspan[0], stop))
+
+    def span(self, side: _Side) -> Tuple[int, int]:
+        if side._span is None:
+            side._span = _span(side.node)
+        return side._span
+
+    def frame(self, side: _Side) -> DataFrame:
+        """The input as a DataFrame, built from its own text through this
+        front door (so a subquery's own spatial joins plan too)."""
+        if side.df is None:
+            start, stop = self.span(side)
+            prefix = ""
+            if self.ctes and self.may_read_cte(side):
+                prefix = f"WITH {', '.join(t for _, t in self.ctes)} "
+            side.df = spatial_sql(
+                self.spark, f"{prefix}SELECT * FROM {self.sql[start:stop]}")
+        return side.df
+
+    def may_read_cte(self, side: _Side) -> bool:
+        rel = side.node if side.kind == "UnresolvedRelation" \
+            else side.node.child()
+        if rel.nodeName() != "UnresolvedRelation":
+            return True          # a subquery may read any CTE in scope
+        ident = rel.multipartIdentifier()
+        return ident.size() == 1 \
+            and ident.head().lower() in (n for n, _ in self.ctes)
+
+    def expand_stars(self, items, leaves: List[_Side]) -> None:
+        """A bare ``*`` over a pair would return its alias structs; expand
+        it to every input's columns in FROM order."""
+        for i in range(items.size()):
+            it = items.apply(i)
+            if it.nodeName() != "UnresolvedStar" or it.target().isDefined():
+                continue
+            if any(s.aliases is None for s in leaves):
+                raise _Decline("* over an input without a qualifier")
+            cols = ", ".join(f"{_quote(a)}.*" for s in leaves for a in s.aliases)
+            self.edits.append((*_span(it), cols))
+
+    # --- conjuncts -------------------------------------------------------
+
+    def conjuncts(self, expr) -> List[_Conj]:
+        if expr.nodeName() == "And":
+            return self.conjuncts(expr.left()) + self.conjuncts(expr.right())
+        return [_Conj(expr)]
+
+    def text(self, expr) -> str:
+        start, stop = _span(expr)
+        return self.sql[start:stop]
+
+    def and_text(self, conjs: List[_Conj]) -> str:
+        return " AND ".join(f"({self.text(c.expr)})" for c in conjs)
+
+    def st_call(self, c: _Conj, names) -> Optional[Tuple[str, list]]:
+        if c.call is None:
+            c.call = _call(c.expr) or ()
+        return c.call if c.call and c.call[0] in names else None
+
+    def join_call(self, c: _Conj, left: _Side, right: _Side):
+        """(conjunct, predicate, left column, right column, distance) when
+        ``c`` is ``ST_pred(a.col, b.col[, d])`` over one column per side."""
+        call = self.st_call(c, _PREDICATES)
+        if not call:
+            return None
+        name, args = call
+        d = 0.0
+        if name == "st_dwithin":
+            if len(args) != 3:
+                return None
+            d = _number(args[2])
+            if d is None:
+                return None
+            args = args[:2]
+        if len(args) != 2:
+            return None
+        a, b = _colref(args[0]), _colref(args[1])
+        if not (a and b and a[0] and b[0]):
+            return None
+        fwd, inv = _PREDICATES[name]
+        if left.owns(a[0]) and right.owns(b[0]):
+            return c, fwd, a, b, d
+        if left.owns(b[0]) and right.owns(a[0]):
+            return c, inv, b, a, d
+        return None
+
+    def reads_only(self, expr, alias: str) -> bool:
+        kind = expr.nodeName()
+        if kind == "UnresolvedAttribute":
+            ref = _colref(expr)
+            return bool(ref and ref[0] and ref[0].lower() == alias.lower())
+        if kind in _OPAQUE_EXPRS:
+            return False
+        ch = expr.children()
+        return all(self.reads_only(ch.apply(i), alias)
+                   for i in range(ch.size()))
+
+    # --- range predicates ------------------------------------------------
+
+    def rewrite_ranges(self, conjs: List[_Conj], leaves: List[_Side]) -> None:
+        """Rewrite each WHERE conjunct ``ST_pred(ST_PolygonFromEnvelope(
+        x1, y1, x2, y2), col)`` (either arg order) over a shape-hinted
+        geometry with a ``<col>_env`` companion into native comparisons:
+        no Python, and the filter reaches the scan."""
+        for c in conjs:
+            call = None if c.consumed else self.st_call(c, _RANGE_PREDS)
+            if not call or len(call[1]) != 2:
+                continue
+            name, (a0, a1) = call
+            b0, b1 = _envelope(a0), _envelope(a1)
+            if (b0 is None) == (b1 is None):      # exactly one literal box
+                continue
+            box, colarg, box_first = (b0, a1, True) if b0 else (b1, a0, False)
+            ref = _colref(colarg)
+            if ref is None:
+                continue
+            shape, env = self.env_ref(leaves, *ref)
+            native = _native_range(name, box, box_first, shape, env)
+            if native:
+                self.edits.append((*_span(c.expr), f"({native})"))
+
+    def env_ref(self, leaves: List[_Side], alias: Optional[str], col: str):
+        """(shape hint, SQL path of the ``_env`` companion) of a geometry
+        column: flat in a FROM relation or inside a pair's alias struct."""
+        for s in leaves:
+            if s.aliases is None or (alias is not None and not s.owns(alias)):
+                continue
+            try:
+                schema = self.frame(s).schema
+            except AnalysisException:
+                return None, None   # Spark reports the relation itself
+            if s.pair:
+                if alias is None:
+                    continue
+                struct = next(f for f in schema.fields
+                              if f.name.lower() == alias.lower())
+                schema = struct.dataType
+                if not isinstance(schema, StructType):
+                    return None, None
+            if col in schema.fieldNames():
+                if f"{col}_env" not in schema.fieldNames():
+                    return None, None
+                prefix = f"{alias}." if alias else ""
+                return (schema[col].metadata or {}).get("geom_shape"), \
+                    f"{prefix}{col}_env"
+        return None, None
 
 
-def _envelope_literal(arg: str):
-    """Parse ``ST_PolygonFromEnvelope(x1, y1, x2, y2)`` with numeric
-    literals; returns (x1, y1, x2, y2) or None."""
-    if not _ENVLIT_RE.match(arg):
+def _call(expr) -> Optional[Tuple[str, list]]:
+    """(lower-case name, argument nodes) of a one-part function call."""
+    if expr.nodeName() != "UnresolvedFunction":
+        return None
+    name = expr.nameParts().mkString(".").lower()
+    if not name.startswith("st_"):
+        return None
+    args = expr.arguments()
+    return name, [args.apply(i) for i in range(args.size())]
+
+
+def _colref(expr) -> Optional[Tuple[Optional[str], str]]:
+    """(qualifier or None, column) of a ``col`` / ``alias.col`` reference."""
+    if expr.nodeName() != "UnresolvedAttribute":
+        return None
+    parts = expr.nameParts().mkString("\x00").split("\x00")
+    if len(parts) == 1:
+        return None, parts[0]
+    return (parts[0], parts[1]) if len(parts) == 2 else None
+
+
+def _number(expr) -> Optional[float]:
+    if expr.nodeName() != "Literal":
         return None
     try:
-        eargs, eafter = _balanced_args(arg, arg.index("("))
+        return float(expr.toString())
     except ValueError:
-        return None
-    if arg[eafter:].strip() or len(eargs) != 4:
-        return None
-    if not all(_NUM_RE.match(x.strip()) for x in eargs):
-        return None
-    return tuple(float(x) for x in eargs)
+        return None          # a string, boolean or NULL literal
 
 
-def _try_native_range(spark, rels, conj: str) -> Optional[str]:
-    """Rewrite one WHERE conjunct ``ST_pred(ST_PolygonFromEnvelope(...),
-    a.col)`` (either arg order) into native envelope comparisons — the SQL-
-    text face of the Tier-B range pushdown (SedonaPredicatePushDown.scala
-    relaxation table; exact, not relaxed, because the rewrite only fires for
-    point/rect shape-hinted columns where the envelope IS the geometry)."""
-    m = _ST_CONJ_RE.match(conj)
-    if not m or m.group("pred").lower() not in _RANGE_PREDS:
+def _envelope(expr) -> Optional[Tuple[float, float, float, float]]:
+    """(x1, y1, x2, y2) of ``ST_PolygonFromEnvelope`` over four numeric
+    literals, else None."""
+    call = _call(expr)
+    if not call or call[0] != "st_polygonfromenvelope" or len(call[1]) != 4:
         return None
-    pred = m.group("pred").lower()
-    try:
-        args, after = _balanced_args(conj, conj.index("("))
-    except ValueError:
-        return None
-    if conj[after:].strip() or len(args) != 2:
-        return None
-    b0, b1 = _envelope_literal(args[0]), _envelope_literal(args[1])
-    if (b0 is None) == (b1 is None):      # exactly one envelope literal
-        return None
-    box, colarg, box_first = (b0, args[1], True) if b0 else (b1, args[0], False)
-    cm = _COLREF_RE.match(colarg.strip())
-    if not cm:
-        return None
-    shape, env_sql = _resolve_env_ref(spark, rels, cm.group(1), cm.group(2))
+    box = tuple(_number(a) for a in call[1])
+    return None if None in box else box
+
+
+def _native_range(pred: str, box, box_first: bool, shape: Optional[str],
+                  env: Optional[str]) -> Optional[str]:
+    """Native envelope comparisons for a constant-box range predicate — the
+    SQL-text face of the Tier-B range pushdown (SedonaPredicatePushDown.scala
+    relaxation table), exact rather than relaxed because it only fires for
+    point/rect shape-hinted columns, where the envelope IS the geometry."""
     if shape not in ("points", "rects"):
         return None
     x1, y1, x2, y2 = box
     if pred == "st_intersects":
-        return (f"{env_sql}.xmax >= {x1!r} AND {env_sql}.xmin <= {x2!r}"
-                f" AND {env_sql}.ymax >= {y1!r} AND {env_sql}.ymin <= {y2!r}")
-    if pred in ("st_contains", "st_covers"):
-        box_contains = box_first
-    else:                                  # within / coveredby
-        box_contains = not box_first
+        return (f"{env}.xmax >= {x1!r} AND {env}.xmin <= {x2!r}"
+                f" AND {env}.ymax >= {y1!r} AND {env}.ymin <= {y2!r}")
+    box_contains = box_first if pred in ("st_contains", "st_covers") \
+        else not box_first
     if not box_contains:
         return None    # a point/rect column containing a box — leave to UDF
-    # OGC contains puts a point in the *interior* → strict bounds
-    # (functions/api.py st_contains); covers and rect operands are inclusive
-    strict = shape == "points" and pred in ("st_contains", "st_within")
-    lt, gt = ("<", ">") if strict else ("<=", ">=")
-    return (f"{env_sql}.xmin {gt} {x1!r} AND {env_sql}.xmax {lt} {x2!r}"
-            f" AND {env_sql}.ymin {gt} {y1!r} AND {env_sql}.ymax {lt} {y2!r}")
-
-
-def _rewrite_range_predicates(spark: SparkSession, sql: str) -> str:
-    """Rewrite every WHERE conjunct that is a constant-envelope range
-    predicate over a shape-hinted geometry into native comparisons (keeps
-    range filters out of Python and lets them reach the scan)."""
-    try:
-        rels = _relation_list(sql)
-        if not rels:
-            return sql
-        wm = re.search(r"\bWHERE\b\s*", sql, re.IGNORECASE)
-        if not wm:
-            return sql
-        wend = _WHERE_SLOT_RE.search(sql, wm.end()).start()
-        conjs = _split_conjuncts(sql[wm.end():wend])
-        changed = False
-        out = []
-        for c in conjs:
-            native = _try_native_range(spark, rels, c)
-            if native:
-                changed = True
-                out.append(f"({native})")
-            else:
-                out.append(c)
-        if not changed:
-            return sql
-        return sql[:wm.end()] + " AND ".join(out) + " " + sql[wend:]
-    except Exception:
-        return sql
-
-
-_SELECT_HEAD_RE = re.compile(r"^\s*SELECT\s+(?:DISTINCT\s+)?", re.IGNORECASE)
-
-
-def _split_top_level_commas(s: str) -> List[str]:
-    parts, depth, start, i, n = [], 0, 0, 0, len(s)
-    while i < n:
-        c = s[i]
-        if c == "'":
-            i += 1
-            while i < n and s[i] != "'":
-                i += 1
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == "," and depth == 0:
-            parts.append(s[start:i].strip())
-            start = i + 1
-        i += 1
-    parts.append(s[start:].strip())
-    return [p for p in parts if p]
-
-
-def _find_toplevel_from(sql: str, start: int):
-    depth, i, n = 0, start, len(sql)
-    while i < n:
-        c = sql[i]
-        if c == "'":
-            i += 1
-            while i < n and sql[i] != "'":
-                i += 1
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif (depth == 0 and c in "fF" and sql[i:i + 4].upper() == "FROM"
-              and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_"))
-              and (i + 4 >= n or not (sql[i + 4].isalnum() or sql[i + 4] == "_"))):
-            return i
-        i += 1
-    return None
-
-
-def _pair_view_star_items(spark: SparkSession, rel: str) -> List[str]:
-    """SELECT-list items flattening a pair view back to the column set the
-    unrewritten statement would return: each alias struct expands to its
-    fields in order.  Any ``_env`` companion the source table itself carried
-    stays — the expansion must match vanilla evaluation of the same
-    statement; DDL-created reference-parity tables carry no ``_env``, so
-    there the flattened set equals upstream Sedona's."""
-    schema = spark.table(rel).schema
-    hint = _VIEW_ALIAS_ORDER.get(rel)
-    names = list(schema.fieldNames())
-    if hint and set(hint) <= set(names):
-        names = hint + [n for n in names if n not in hint]
-    items = []
-    for name in names:
-        fld = schema[name]
-        if isinstance(fld.dataType, StructType):
-            items += [f"`{fld.name}`.`{f}` AS `{f}`"
-                      for f in fld.dataType.fieldNames()]
-        else:
-            items.append(f"`{fld.name}`")
-    return items
-
-
-def _expand_star_over_views(spark: SparkSession, sql: str) -> str:
-    """After a spatial-join rewrite put a pair view (one struct column per
-    original alias) in the FROM, a bare ``*`` / ``alias.*`` select list
-    would surface the structs themselves.  Expand them back to the flat
-    column set the statement produced before the rewrite (the reference
-    App's statements are all ``SELECT * FROM t0 l, t1 r WHERE ST_...``,
-    App.scala:62-73)."""
-    if _VIEW_PREFIX not in sql:
-        return sql
-    hm = _SELECT_HEAD_RE.match(sql)
-    if not hm:
-        return sql
-    from_idx = _find_toplevel_from(sql, hm.end())
-    if from_idx is None:
-        return sql
-    items = _split_top_level_commas(sql[hm.end():from_idx])
-    if not any(it == "*" or it.endswith(".*") for it in items):
-        return sql
-    # parse the comma relation list and whether it covers the whole FROM
-    # clause (no JOIN tail — bare * can only be expanded when every FROM
-    # relation is enumerable)
-    i, n = from_idx + 4, len(sql)
-    while i < n and sql[i].isspace():
-        i += 1
-    rels = []
-    while True:
-        m = _REL_RE.match(sql, i)
-        if not m or not m.group("rel"):
-            break
-        rels.append((m.group("rel"), m.group("alias")))
-        i = m.end()
-        if i < n and sql[i] == ",":
-            i += 1
-            while i < n and sql[i].isspace():
-                i += 1
-            continue
-        break
-    covers_from = bool(re.match(
-        r"(WHERE\b|GROUP\s+BY\b|HAVING\b|ORDER\s+BY\b|LIMIT\b|UNION\b"
-        r"|EXCEPT\b|INTERSECT\b|$)", sql[i:].lstrip(), re.IGNORECASE))
-
-    def alias_struct_items(alias: str):
-        for rel, _ in rels:
-            if not rel.startswith(_VIEW_PREFIX):
-                continue
-            df = spark.table(rel)
-            if alias in df.columns and isinstance(df.schema[alias].dataType,
-                                                  StructType):
-                return [f"`{alias}`.`{f}` AS `{f}`"
-                        for f in df.schema[alias].dataType.fieldNames()]
+    strict = pred in ("st_contains", "st_within")
+    if strict and shape == "rects":
+        # closed bounds would claim a zero-area rect on the box's boundary,
+        # which is covered but not contained: the UDF decides
         return None
-
-    changed, out = False, []
-    for it in items:
-        if it == "*" and covers_from:
-            for rel, alias in rels:
-                if rel.startswith(_VIEW_PREFIX):
-                    out += _pair_view_star_items(spark, rel)
-                else:
-                    out.append(f"{alias or rel.rsplit('.', 1)[-1]}.*")
-            changed = True
-        elif it.endswith(".*") and re.fullmatch(r"\w+", it[:-2]):
-            expanded = alias_struct_items(it[:-2])
-            if expanded is None:
-                out.append(it)
-            else:
-                out += expanded
-                changed = True
-        else:
-            out.append(it)
-    if not changed:
-        return sql
-    return sql[:hm.end()] + ", ".join(out) + " " + sql[from_idx:]
+    # OGC contains puts a point in the *interior* → strict bounds
+    # (functions/api.py st_contains); covers is inclusive
+    lt, gt = ("<", ">") if strict else ("<=", ">=")
+    return (f"{env}.xmin {gt} {x1!r} AND {env}.xmax {lt} {x2!r}"
+            f" AND {env}.ymin {gt} {y1!r} AND {env}.ymax {lt} {y2!r}")
 
 
-def _inject_where(tail: str, extra: str) -> str:
-    """Fold a join's deferred AND-conjuncts into the statement tail: into an
-    existing WHERE if present, else as a new WHERE at the clause slot after
-    any remaining joins (inner-join semantics make the placement exact)."""
-    wm = re.search(r"\bWHERE\b", tail, re.IGNORECASE)
-    if wm:
-        return tail[:wm.end()] + f" ({extra}) AND" + tail[wm.end():]
-    sm = _WHERE_SLOT_RE.search(tail)
-    return f"{tail[:sm.start()]} WHERE {extra} {tail[sm.start():]}"
+def _resolve_geom(df: DataFrame, side: _Side, alias: str,
+                  col: str) -> Optional[Tuple[DataFrame, str, List[str]]]:
+    """Resolve a predicate argument ``alias.col`` against one join side.
+    Plain relation: the column itself.  Pair: the alias is a struct column
+    of a prior planned join — extract the geometry (and its ``_env``
+    companion) into flat temp columns, re-stamping shape-hint metadata so
+    the native envelope paths survive.  Returns (df, flat_geom_col,
+    temp_cols) or None."""
+    if not side.pair:
+        return (df, col, []) if col in df.columns else None
+    name = next(a for a in side.aliases if a.lower() == alias.lower())
+    inner = df.schema[name].dataType
+    if not isinstance(inner, StructType) or col not in inner.fieldNames():
+        return None
+    tmp = f"__geo_{name}_{col}"
+    md = inner[col].metadata
+    extract = [F.col(f"`{name}`.`{col}`").alias(tmp, metadata=md or None)]
+    tmps = [tmp]
+    env = f"{col}_env"
+    if env in inner.fieldNames():
+        extract.append(F.col(f"`{name}`.`{env}`").alias(f"{tmp}_env"))
+        tmps.append(f"{tmp}_env")
+    return df.select("*", *extract), tmp, tmps
 
 
-def spatial_sql(spark: SparkSession, sql: str, strategy: str = "grid") -> DataFrame:
-    """Run a SQL statement, planning every recognized ``JOIN ... ON ST_pred``
-    (including chains of them) through the distributed spatial join instead
-    of Spark's default BroadcastNestedLoopJoin-over-UDF.
+def plan_spatial_join_sql(ldf: DataFrame, left: _Side, rdf: DataFrame,
+                          ralias: str, predicate: str,
+                          lref: Tuple[str, str], rref: Tuple[str, str],
+                          d: float, how: str = "inner") -> Optional[DataFrame]:
+    """Plan one detected join through the grid spatial join; returns the
+    pair: one struct column per table alias (a left pair's alias structs
+    pass through unchanged), or None when a geometry column is missing."""
+    left_res = _resolve_geom(ldf, left, *lref)
+    right_res = _resolve_geom(rdf, _Side(aliases=[ralias]), *rref)
+    if not (left_res and right_res):
+        return None
+    ldf2, lgeo, ltmps = left_res
+    rdf2, rgeo, _ = right_res
+    joined = spatial_join(ldf2, rdf2, predicate=predicate, on=(lgeo, rgeo),
+                          how=how, strategy="grid", d=d)
+
+    lcols, rcols = ldf2.columns, rdf2.columns
+    common = set(lcols) & set(rcols)
+    rstruct = F.struct(*[F.col(f"`r_{c}`" if c in common else f"`{c}`").alias(c)
+                         for c in rcols]).alias(ralias)
+    if left.pair:
+        keep = [F.col(f"`{c}`").alias(c) for c in lcols if c not in ltmps]
+        return joined.select(*keep, rstruct)
+    return joined.select(
+        F.struct(*[F.col(f"`{c}`").alias(c) for c in lcols
+                   if c not in ltmps]).alias(left.aliases[0]),
+        rstruct)
+
+
+def _plan_statement(spark: SparkSession,
+                    sql: str) -> Optional[Tuple[str, Dict[str, DataFrame]]]:
+    """The rewritten statement text and its pair named args, or None when
+    the statement has nothing to plan."""
+    if "st_" not in sql.lower():
+        return None
+    try:
+        tree = spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)
+    except ParseException:
+        return None          # spark.sql reports the parse error itself
+    rw = _Rewrite(spark, sql)
+    try:
+        rw.walk(tree)
+    except _Decline:
+        return None
+    if not rw.edits:
+        return None
+    out, pos = [], 0
+    for start, stop, text in sorted(rw.edits):
+        seg = sql[pos:start]
+        if rw.pairs:         # the named-arg formatter reads {...}
+            seg = seg.replace("{", "{{").replace("}", "}}")
+        out += [seg, text]
+        pos = stop
+    tail = sql[pos:]
+    if rw.pairs:
+        tail = tail.replace("{", "{{").replace("}", "}}")
+    return "".join(out) + tail, rw.pairs
+
+
+def spatial_sql(spark: SparkSession, sql: str) -> DataFrame:
+    """Run a SQL statement, planning every recognized spatial join
+    (``JOIN ... ON ST_pred``, ``FROM a, b WHERE ST_pred``, and chains of
+    them) through the distributed spatial join instead of Spark's default
+    BroadcastNestedLoopJoin-over-UDF.
 
     Unrecognized statements run unchanged (correct, unoptimized)."""
-    for _ in range(8):  # bounded chain of spatial joins per statement
-        match = _find_spatial_join(sql)
-        if match is not None:
-            try:
-                view = plan_spatial_join_sql(spark, match, strategy=strategy)
-            except Exception:
-                # fall back to vanilla evaluation — the ST_* UDFs are
-                # registered, so the unrewritten statement still computes
-                # the right answer
-                return spark.sql(sql)
-            start, end = match.span
-            head, tail = sql[:start], sql[end:]
-            if tail and not tail[0].isspace():
-                tail = " " + tail
-            if match.extra:
-                tail = _inject_where(tail, match.extra)
-            sql = f"{head}FROM {view}{tail}"
-            continue
-        # the reference App's comma-join spelling: FROM a, b WHERE ST_pred
-        rewritten = _rewrite_comma_join(spark, sql, strategy)
-        if rewritten is None:
-            break
-        sql = rewritten
-    # SELECT * over a pair view must keep returning flat columns
-    sql = _expand_star_over_views(spark, sql)
-    # Tier-B face for SQL text: constant-envelope range predicates over
-    # shape-hinted geometry go native (no Python, filter reaches the scan)
-    sql = _rewrite_range_predicates(spark, sql)
-    return spark.sql(sql)
+    planned = _plan_statement(spark, sql)
+    if planned is None:
+        return spark.sql(sql)
+    text, pairs = planned
+    return spark.sql(text, **pairs)

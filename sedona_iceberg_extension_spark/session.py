@@ -49,10 +49,11 @@ def sql(spark: SparkSession, statement: str, tables: dict | None = None):
       the snapshot table's versioned CoW DML; on a plain parquet table →
       ``operators.dml.sql_dml`` (``tables`` maps statement table names to
       parquet paths) — returns the result dict;
-    - everything else → ``operators.sql_join.spatial_sql``, which plans any
-      ``JOIN ... ON ST_pred`` / ``FROM a, b WHERE ST_pred`` through the
-      distributed spatial join and falls through to vanilla ``spark.sql``
-      otherwise — returns a DataFrame.
+    - everything else → ``operators.sql_join.spatial_sql``, which reads
+      the statement's parse tree, plans any ``JOIN ... ON ST_pred`` /
+      ``FROM a, b WHERE ST_pred`` through the distributed spatial join and
+      runs everything else through plain ``spark.sql`` — returns a
+      DataFrame.
     """
     import re as _re
 

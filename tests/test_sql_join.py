@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sedona_iceberg_extension_spark.operators import spatial_sql
-from sedona_iceberg_extension_spark.operators.sql_join import _find_spatial_join
+from sedona_iceberg_extension_spark.operators.sql_join import _plan_statement
 
 
 REF_SQL = ("SELECT l.id id_l, r.id id_r "
@@ -85,7 +85,7 @@ def test_where_group_by_over_rewritten_join(spark, ref_tables):
 def test_non_spatial_sql_passthrough(spark, ref_tables):
     df = spatial_sql(spark, "SELECT COUNT(*) AS n FROM test_left")
     assert df.collect()[0].n == 2
-    assert _find_spatial_join("SELECT 1") is None
+    assert _plan_statement(spark, "SELECT 1") is None
 
 
 def test_unrecognized_join_falls_back(spark, ref_tables):
@@ -352,3 +352,116 @@ def test_comma_join_matches_vanilla_random(spark):
     planned = [(r.id_p, r.id_b) for r in spatial_sql(spark, sql).collect()]
     vanilla = [(r.id_p, r.id_b) for r in spark.sql(sql).collect()]
     assert planned == vanilla and len(vanilla) > 0
+
+
+# --- spelling corpus: the parse tree, not the text layout, decides --------
+
+_SEL = "SELECT l.id AS id_l, r.id AS id_r"
+_ON = "ON ST_Contains(r.geo, l.geo)"
+_ORD = "ORDER BY id_l, id_r"
+_BOTH = [(1, 10), (2, 20)]
+
+# (name, statement, expected rows or None for "plain spark.sql's rows")
+PLANNED_SPELLINGS = [
+    ("comment", f"{_SEL} FROM test_left l /* boxes */ JOIN test_right r {_ON} {_ORD}", _BOTH),
+    ("backticks", f"{_SEL} FROM `test_left` l JOIN `test_right` r {_ON} {_ORD}", _BOTH),
+    ("paren_on", f"{_SEL} FROM test_left l JOIN test_right r ON (ST_Contains(r.geo, l.geo)) {_ORD}", _BOTH),
+    ("cte", "WITH c AS (SELECT * FROM test_left WHERE id >= 1) "
+            f"SELECT c.id AS id_l, r.id AS id_r FROM c JOIN test_right r "
+            f"ON ST_Contains(r.geo, c.geo) {_ORD}", _BOTH),
+    ("subquery", f"{_SEL} FROM (SELECT id, geo FROM test_left WHERE id < 100) l "
+                 f"JOIN test_right r {_ON} {_ORD}", _BOTH),
+    ("as_inner", f"{_SEL} FROM test_left AS l INNER JOIN test_right AS r {_ON} {_ORD}", _BOTH),
+    ("lowercase", "select l.id as id_l, r.id as id_r from test_left l join test_right r "
+                  "on st_contains(r.geo, l.geo) order by id_l, id_r", _BOTH),
+    ("within_args_swapped", f"{_SEL} FROM test_left l JOIN test_right r "
+                            f"ON ST_Within(l.geo, r.geo) {_ORD}", _BOTH),
+    ("dwithin", f"{_SEL} FROM test_left l JOIN test_right r "
+                f"ON ST_DWithin(l.geo, r.geo, 5.0) {_ORD}", _BOTH),
+    ("comma", f"{_SEL} FROM test_left l, test_right r WHERE ST_Contains(r.geo, l.geo) {_ORD}", _BOTH),
+    ("comma_lower_as", "select l.id as id_l, r.id as id_r from test_left as l, test_right as r "
+                       "where l.id > 0 and st_contains(r.geo, l.geo) order by id_l, id_r", _BOTH),
+    ("cross_join_where", f"{_SEL} FROM test_left l CROSS JOIN test_right r "
+                         f"WHERE ST_Contains(r.geo, l.geo) {_ORD}", _BOTH),
+    ("join_on_extra_where_st", f"{_SEL} FROM test_left l JOIN test_right r ON r.id > 0 "
+                               f"WHERE ST_Contains(r.geo, l.geo) {_ORD}", _BOTH),
+    ("join_chain", f"{_SEL} FROM test_left l JOIN test_right r {_ON} "
+                   f"JOIN test_right r2 ON ST_Intersects(r2.geo, l.geo) {_ORD}", _BOTH),
+    ("comma_chain", f"{_SEL} FROM test_left l, test_right r, test_right r2 "
+                    "WHERE ST_Contains(r.geo, l.geo) AND ST_Intersects(r2.geo, l.geo) "
+                    f"{_ORD}", _BOTH),
+    ("star", f"SELECT * FROM test_left l JOIN test_right r {_ON} ORDER BY l.id", None),
+    ("comma_star", "SELECT * FROM test_left l, test_right r "
+                   "WHERE ST_Contains(r.geo, l.geo) ORDER BY l.id", None),
+    ("alias_star", f"SELECT l.*, r.id AS id_r FROM test_left l JOIN test_right r {_ON} "
+                   "ORDER BY l.id", None),
+    ("left_join", f"{_SEL} FROM test_left l LEFT JOIN test_right r {_ON} {_ORD}", _BOTH),
+    ("inner_extra_on", f"{_SEL} FROM test_left l JOIN test_right r {_ON} AND r.id > 15 {_ORD}",
+     [(2, 20)]),
+    # Spark rejects a Python UDF in a left join's ON clause, so the rows
+    # are stated: the right-only conjunct filters the right input
+    ("left_extra_right_only", f"{_SEL} FROM test_left l LEFT JOIN test_right r "
+                              f"{_ON} AND r.id > 15 {_ORD}", [(1, None), (2, 20)]),
+    ("join_in_subquery", "SELECT id_l, id_r FROM "
+                         f"({_SEL} FROM test_left l JOIN test_right r {_ON}) t {_ORD}", _BOTH),
+    ("join_in_cte", f"WITH j AS ({_SEL} FROM test_left l JOIN test_right r {_ON}) "
+                    f"SELECT * FROM j {_ORD}", _BOTH),
+]
+
+# never planned: the rewrite would change the answer
+UNPLANNED_SPELLINGS = [
+    # AND binds tighter than OR: (ST AND r.id > 15) OR l.id = 1
+    ("and_then_or", f"{_SEL} FROM test_left l JOIN test_right r "
+                    f"{_ON} AND r.id > 15 OR l.id = 1 {_ORD}",
+     [(1, 10), (1, 20), (2, 20)]),
+    ("st_under_or", f"{_SEL} FROM test_left l JOIN test_right r "
+                    f"{_ON} OR r.id = 10 {_ORD}", [(1, 10), (2, 10), (2, 20)]),
+    ("comma_st_under_or", f"{_SEL} FROM test_left l, test_right r "
+                          f"WHERE ST_Contains(r.geo, l.geo) OR r.id = 10 {_ORD}",
+     [(1, 10), (2, 10), (2, 20)]),
+]
+
+
+@pytest.mark.parametrize(
+    "name,sql,expected,planned",
+    [(n, s, e, True) for n, s, e in PLANNED_SPELLINGS]
+    + [(n, s, e, False) for n, s, e in UNPLANNED_SPELLINGS],
+    ids=[n for n, _, _ in PLANNED_SPELLINGS + UNPLANNED_SPELLINGS])
+def test_spelling_corpus(spark, ref_tables, name, sql, expected, planned):
+    views = sorted(t.name for t in spark.catalog.listTables())
+    df = spatial_sql(spark, sql)
+    assert sorted(t.name for t in spark.catalog.listTables()) == views
+    rows = [tuple(r) for r in df.collect()]
+    if expected is None or not planned:
+        vanilla = spark.sql(sql)
+        assert df.columns == vanilla.columns
+        vanilla_rows = [tuple(r) for r in vanilla.collect()]
+        assert expected in (None, vanilla_rows)
+        expected = vanilla_rows
+    assert rows == expected
+    plan = _plan(df)
+    if planned:
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert "CartesianProduct" not in plan
+
+
+def test_range_rewrite_keeps_boundary_rect_with_udf(spark):
+    """A zero-width rect on the box's right edge is covered by the box but
+    not contained in it: over a rects-hinted column, ``ST_Contains`` and
+    ``ST_Within`` must keep the UDF, and only covers/coveredby/intersects
+    become native bounds."""
+    from sedona_iceberg_extension_spark.functions.api import with_box_geometry
+
+    with_box_geometry(
+        spark.createDataFrame([(1, 1.0, 0.2, 1.0, 0.8), (2, 0.2, 0.2, 0.8, 0.8)],
+                              "id int, x0 double, y0 double, x1 double, y1 double"),
+        F.col("x0"), F.col("y0"), F.col("x1"), F.col("y1"),
+    ).select("id", "geo", "geo_env").createOrReplaceTempView("test_edge_rects")
+    box = "ST_PolygonFromEnvelope(0.0, 0.0, 1.0, 1.0)"
+    cases = {f"ST_Contains({box}, geo)": [2], f"ST_Within(geo, {box})": [2],
+             f"ST_Covers({box}, geo)": [1, 2], f"ST_CoveredBy(geo, {box})": [1, 2],
+             f"ST_Intersects({box}, geo)": [1, 2]}
+    for pred, want in cases.items():
+        sql = f"SELECT id FROM test_edge_rects WHERE {pred} ORDER BY id"
+        got = [r.id for r in spatial_sql(spark, sql).collect()]
+        assert got == [r.id for r in spark.sql(sql).collect()] == want, pred

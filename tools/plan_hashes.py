@@ -7,21 +7,28 @@ Usage:
     # diff two dumps to enumerate plan-changed queries:
     python tools/plan_hashes.py --compare A.jsonl B.jsonl
 
-Normalization scrubs expression ids (#123), temp-view UUID suffixes, and
-tmp paths, so a hash difference means the distributed plan STRUCTURE
+Normalization scrubs expression ids (#123), temp-view UUID suffixes, tmp
+paths, DataFrame-API lambda variable numbers (``x_12``) and physical
+``plan_id``s, so a hash difference means the distributed plan STRUCTURE
 changed — the tranche-0 promotion criterion (__spark_entry__.py).  Streaming
 queries (no batch optimizedPlan) hash their analyzed logical plan text.
 
-Known flicker sources (adjudicate a CHANGED name by direct plan-string
-diff in ISOLATED sessions before promoting it):
-- queries whose subtrees match another query's in-query ``persist()``
-  get CacheManager-substituted InMemoryRelations whose presence depends
-  on unpersist timing earlier in the dump session (observed:
-  minhash_calibration_curve / minhash_threshold_pr_curve hash
-  differently across full-set dumps yet byte-identical in isolation);
-- the distinct-aggregate rewrite assigns Expand gid tags
-  nondeterministically across constructions (observed:
-  q21_sole_fault_supplier).
+Two dumps of one commit are byte-identical.  Three flicker sources are
+removed:
+- CacheManager substitution: a subtree matching an earlier query's
+  in-query ``persist()`` would plan as an InMemoryRelation depending on
+  unpersist timing earlier in the dump session (seen on
+  minhash_calibration_curve / minhash_threshold_pr_curve), so the dump
+  clears the session cache before each query;
+- a query's own ``persist()`` prints the cached subtree's physical plan,
+  whose ``plan_id``s and lambda variable numbers come from process-wide
+  counters (seen on minhash_calibration_curve): both are scrubbed;
+- the distinct-aggregate rewrite orders its distinct groups, and so the
+  Expand projections, the grouping columns and the ``gid`` tags, by
+  expression-id hashes (seen on q21_sole_fault_supplier): on lines that
+  carry ``gid``, ``_normalize`` replaces the tag values with ``G`` and
+  sorts the items of every bracketed list.  A change that only permutes
+  those groups hashes the same.
 """
 
 from __future__ import annotations
@@ -35,13 +42,45 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def _split_items(s: str) -> list:
+    """Top-level comma-separated items of a list body (parentheses and
+    already-canonical ``⟦...⟧`` lists nest)."""
+    items, depth, start = [], 0, 0
+    for i, c in enumerate(s):
+        if c in "(⟦":
+            depth += 1
+        elif c in ")⟧":
+            depth -= 1
+        elif c == "," and depth == 0:
+            items.append(s[start:i].strip())
+            start = i + 1
+    items.append(s[start:].strip())
+    return items
+
+
+def _canonical_gid_line(line: str) -> str:
+    line = re.sub(r"gid#x = \d+", "gid#x = G", line)
+    inner = re.compile(r"\[([^\[\]]*)\]")
+    while inner.search(line):
+        line = inner.sub(
+            lambda m: "⟦" + ", ".join(sorted(
+                "G" if it.isdigit() else it
+                for it in _split_items(m.group(1)))) + "⟧", line)
+    return line
+
+
 def _normalize(s: str) -> str:
     s = re.sub(r"#\d+", "#x", s)
     s = re.sub(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}",
                "UUID", s)
     s = re.sub(r"/tmp/[^\s,\)\]]+", "/tmp/X", s)
     s = re.sub(r"cist_cache_[0-9a-f]+", "cist_cache_X", s)
-    return s
+    # process-wide counters: DataFrame-API lambda variables (x_1, y_2)
+    # and the physical plan ids inside an InMemoryRelation
+    s = re.sub(r"lambda ([a-z]+)_\d+", r"lambda \1_N", s)
+    s = re.sub(r"plan_id=\d+", "plan_id=N", s)
+    return "\n".join(_canonical_gid_line(ln) if "gid#x" in ln else ln
+                     for ln in s.split("\n"))
 
 
 def dump(sf_dir: str) -> None:
@@ -50,6 +89,7 @@ def dump(sf_dir: str) -> None:
 
     spark = get_session(master="local[8]")
     for name, qd in QUERIES.items():
+        spark.catalog.clearCache()
         try:
             df = qd.fn(spark, sf_dir)
             try:
