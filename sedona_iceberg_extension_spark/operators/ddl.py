@@ -17,7 +17,18 @@ resolve them like any other relation.  Dotted identifiers
 — Spark would otherwise resolve them against a real catalog.
 
 ``GEOMETRY`` columns map to the engine's WKB ``BINARY`` representation
-(SURVEY.md §2 Tier A, UdtRegistratorWrapper-by-design).
+(SURVEY.md §2 Tier A, UdtRegistratorWrapper-by-design) and are declared
+geometry columns of the snapshot table, as is a ``BINARY`` column whose
+first inserted source carries the engine's ``geom_shape`` metadata (the
+alignment of an INSERT source keeps it).  The table's manifest records them
+(``geometry_columns``) with each data file's shape class (``file_shapes``:
+``points`` or ``general``; a file without one reads as ``general``), and
+every data file stores each geometry's envelope as a hidden ``<geo>_env``
+struct.  Each commit is read once (``SnapshotTable.scan``): the registered
+view is that frame projected to the table's columns, so ``SELECT *``,
+DESCRIBE, ``t.files`` and ``changes`` never show an envelope, and the
+envelope-carrying frame itself is kept for the spatial planner
+(:func:`snapshot_frame`), which pushes range predicates into its scan.
 """
 
 from __future__ import annotations
@@ -25,7 +36,7 @@ from __future__ import annotations
 import os
 import re
 import tempfile
-from typing import Dict, Optional
+from typing import Dict, List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -41,10 +52,10 @@ def _state(spark: Optional[SparkSession] = None) -> dict:
     if spark is None:
         spark = SparkSession.getActiveSession()
     if spark is None:
-        return {"catalog": {}, "warehouse": None}
+        return {"catalog": {}, "warehouse": None, "views": {}}
     st = getattr(spark, "_graft_ddl_state", None)
     if st is None:
-        st = {"catalog": {}, "warehouse": None}
+        st = {"catalog": {}, "warehouse": None, "views": {}}
         spark._graft_ddl_state = st
     return st
 
@@ -150,9 +161,43 @@ def _warehouse(spark: Optional[SparkSession] = None) -> str:
     return st["warehouse"]
 
 
+def _temp_view_id(spark: SparkSession, view: str) -> Optional[int]:
+    """Identity of the plan a temp view name is bound to now (None when
+    unbound): tells a view this module registered from one a statement
+    replaced since."""
+    raw = spark._jsparkSession.sessionState().catalog().getRawTempView(view)
+    if raw.isEmpty():
+        return None
+    return spark._jvm.System.identityHashCode(raw.get())
+
+
+def _publish(spark: SparkSession, view: str, tbl: SnapshotTable,
+             version: Optional[int] = None) -> None:
+    """Register one snapshot of ``tbl`` as temp view ``view``: one read of
+    the commit, projected to the table's columns; the envelope-carrying
+    frame is kept for :func:`snapshot_frame`."""
+    full, hidden = tbl.scan(spark, version)
+    user = full.drop(*hidden) if hidden else full
+    user.createOrReplaceTempView(view)
+    _state(spark)["views"][view.lower()] = {
+        "schema": user.schema, "frame": full if hidden else None,
+        "hidden": hidden, "id": _temp_view_id(spark, view) if hidden else None}
+
+
 def _register(spark: SparkSession, name: str) -> None:
-    tbl = _catalog(spark)[name]
-    tbl.read(spark).createOrReplaceTempView(_view_name(name))
+    _publish(spark, _view_name(name), _catalog(spark)[name])
+
+
+def snapshot_frame(spark: SparkSession, view: str):
+    """(frame, hidden columns) of a registered snapshot-table view whose
+    table stores geometry envelopes: the frame is the view's read with each
+    geometry column's hidden ``<geo>_env`` struct and ``geom_shape`` stamp.
+    None for any other name, or when the view was re-bound since."""
+    ent = _state(spark)["views"].get(view.lower())
+    if ent is None or ent["frame"] is None \
+            or _temp_view_id(spark, view) != ent["id"]:
+        return None
+    return ent["frame"], ent["hidden"]
 
 
 def _split_top(s: str, sep: str = ",") -> list:
@@ -169,10 +214,11 @@ def _split_top(s: str, sep: str = ",") -> list:
     return [p for p in parts if p]
 
 
-def _schema_ddl(cols: str) -> str:
-    """Column list of a CREATE statement → Spark DDL schema string;
-    GEOMETRY becomes BINARY (the engine's WKB representation)."""
-    out = []
+def _schema_ddl(cols: str) -> Tuple[str, List[str]]:
+    """Column list of a CREATE statement → (Spark DDL schema string, the
+    GEOMETRY columns); GEOMETRY becomes BINARY (the engine's WKB
+    representation)."""
+    out, geo = [], []
     for c in _split_top(cols):
         m = re.match(r"^(\w+)\s+(.+)$", c.strip(), re.DOTALL)
         if not m:
@@ -180,21 +226,25 @@ def _schema_ddl(cols: str) -> str:
         typ = m.group(2).strip()
         if typ.upper() == "GEOMETRY":
             typ = "BINARY"
+            geo.append(m.group(1))
         out.append(f"{m.group(1)} {typ}")
-    return ", ".join(out)
+    return ", ".join(out), geo
 
 
-def _align(df: DataFrame, target: SnapshotTable,
-           spark: SparkSession) -> DataFrame:
+def _align(df: DataFrame, spark: SparkSession, name: str) -> DataFrame:
     """Positionally align an insert source to the table schema (names and
-    types), the way SQL INSERT resolves columns."""
-    schema = target.read(spark).schema
+    types), the way SQL INSERT resolves columns.  The schema is the
+    registered view's; a source column's metadata (``geom_shape``) is kept,
+    which is how a ``BINARY`` column learns it holds geometry."""
+    schema = _state(spark)["views"][_view_name(name).lower()]["schema"]
     if len(df.columns) != len(schema):
         raise ValueError(
             f"INSERT column count {len(df.columns)} != table arity {len(schema)}")
+    # by position: a VALUES source may repeat a column name (``0.0, 0.0``)
+    df = df.toDF(*[f"_c{i}" for i in range(len(schema))])
     return df.select(*[
-        F.col(f"`{c}`").cast(f.dataType).alias(f.name)
-        for c, f in zip(df.columns, schema.fields)])
+        F.col(s.name).cast(f.dataType).alias(f.name, metadata=s.metadata or None)
+        for s, f in zip(df.schema.fields, schema.fields)])
 
 
 def _values_to_select(body: str) -> str:
@@ -300,8 +350,8 @@ def describe_table(spark: SparkSession, name: str) -> DataFrame:
     CURRENT logical schema (post-ALTER evolution); the active partition
     spec follows Spark's "# Partition Information" section convention."""
     tbl = _catalog(spark)[name]
-    df = tbl.read(spark)
-    rows = [(f.name, f.dataType.simpleString(), None) for f in df.schema.fields]
+    schema = _state(spark)["views"][_view_name(name).lower()]["schema"]
+    rows = [(f.name, f.dataType.simpleString(), None) for f in schema.fields]
     spec = tbl.partition_spec()
     if spec:
         rows.append(("# Partition Information", "", None))
@@ -418,9 +468,11 @@ def run_ddl(spark: SparkSession, statement: str,
                     f"{name} because it already exists. Use CREATE TABLE "
                     f"IF NOT EXISTS to tolerate a pre-existing table.")
             return {"ddl": "create", "table": name, "existed": True}
-        empty = spark.createDataFrame([], _schema_ddl(m.group("cols")))
+        schema, geo = _schema_ddl(m.group("cols"))
+        empty = spark.createDataFrame([], schema)
         path = os.path.join(_warehouse(spark), _view_name(name))
-        _catalog(spark)[name] = SnapshotTable.create(spark, path, empty)
+        _catalog(spark)[name] = SnapshotTable.create(spark, path, empty,
+                                                     geometry=geo)
         _register(spark, name)
         return {"ddl": "create", "table": name, "existed": False}
 
@@ -430,6 +482,7 @@ def run_ddl(spark: SparkSession, statement: str,
         tbl = _catalog(spark).pop(name, None)
         if tbl is not None:
             spark.catalog.dropTempView(_view_name(name))
+            _state(spark)["views"].pop(_view_name(name).lower(), None)
         else:
             # a real Spark-managed table may own the name (the statement
             # carries IF EXISTS semantics itself)
@@ -453,7 +506,7 @@ def run_ddl(spark: SparkSession, statement: str,
         else:
             src = run_select(spark, body)
         tbl = _catalog(spark)[name]
-        aligned = _align(src, tbl, spark)
+        aligned = _align(src, spark, name)
         if m.group("ow"):
             tbl.overwrite(spark, aligned)
         else:
@@ -660,8 +713,7 @@ def rewrite_time_travel(spark: SparkSession, statement: str) -> str:
             return m.group(0)
         v = int(m.group("v"))
         view = f"{_view_name(name)}__v{v}"
-        _catalog(spark)[name].read(spark, version=v) \
-            .createOrReplaceTempView(view)
+        _publish(spark, view, _catalog(spark)[name], v)
         return f"FROM {view}"
 
     def sub_timestamp(m):
@@ -680,8 +732,7 @@ def rewrite_time_travel(spark: SparkSession, statement: str) -> str:
                 f"no snapshot of {name!r} at or before {m.group('ts')!r}")
         v = max(eligible)
         view = f"{_view_name(name)}__v{v}"
-        _catalog(spark)[name].read(spark, version=v) \
-            .createOrReplaceTempView(view)
+        _publish(spark, view, _catalog(spark)[name], v)
         return f"FROM {view}"
 
     def sub_ref(m):
@@ -694,7 +745,7 @@ def rewrite_time_travel(spark: SparkSession, statement: str) -> str:
             raise ValueError(f"unknown branch/tag {m.group('ref')!r} "
                              f"on {name!r}")
         view = f"{_view_name(name)}__v{v}"
-        tbl.read(spark, version=v).createOrReplaceTempView(view)
+        _publish(spark, view, tbl, v)
         return f"FROM {view}"
 
     statement = _TTV_RE.sub(sub_version, statement)
@@ -706,4 +757,5 @@ def reset(spark: Optional[SparkSession] = None) -> None:
     """Drop the session's in-memory catalog (tests)."""
     st = _state(spark)
     st["catalog"].clear()
+    st["views"].clear()
     st["warehouse"] = None

@@ -28,6 +28,24 @@ recompute the live file list); UPDATE/DELETE/MERGE surface the conflict to
 the caller, who re-runs against the new snapshot — exactly Iceberg's
 validation-exception contract.
 
+Geometry columns (the reference's Iceberg ``GEOMETRY`` type plus its
+spatial file stats): a WKB ``BINARY`` column is a geometry column when it
+was declared so (``create(..., geometry=[...])``, DDL ``GEOMETRY``) or when
+a source written into it carries the engine's ``geom_shape`` metadata.  The
+manifest lists them under ``geometry_columns`` (carried forward by every
+commit, like ``partition_spec``), and every data file stores each one's
+envelope as a hidden ``<geo>_env`` struct (derived at write time when the
+written frame has none; a writer that changes the geometry drops it first).
+Each commit also records, under ``file_shapes``, every new file's shape
+class per ``BINARY`` column: ``points`` when every non-NULL value is a 2-D
+WKB point with its envelope stored, else ``general`` — computed natively
+from the WKB header by an ``Observation`` on the stage write.  ``scan``
+stamps ``geom_shape = points`` on a geometry column only when every live
+file is recorded as ``points``; a file without a recorded class (written
+before the column was a geometry column, or by an older writer) makes the
+column ``general``, so it is always scanned and refined exactly.  ``read``,
+``changes`` and the CoW paths' user schema leave the hidden envelopes out.
+
 Scale: commits touch O(files-changed) data + one manifest; reads plan from
 one manifest. At 100 TB the manifest list is the only metadata hot spot and
 would shard exactly the way Iceberg's manifest *list* does.
@@ -39,12 +57,20 @@ import json
 import os
 import time
 import uuid
-from typing import Dict, List, Optional
+from typing import Dict, List, Optional, Tuple
 
 from pyspark.sql import (Column, DataFrame, Observation, SparkSession,
                          functions as F)
+from pyspark.sql.types import BinaryType
+
+from ..functions.api import add_geometry
 
 _SNAP_DIR = "_snapshots"
+
+# the 5-byte header of a 2-D WKB point, little- and big-endian
+_POINT_HEADERS = (bytearray(b"\x01\x01\x00\x00\x00"),
+                  bytearray(b"\x00\x00\x00\x00\x01"))
+_POINT_WKB_BYTES = 21
 
 
 class CommitConflictError(RuntimeError):
@@ -87,6 +113,68 @@ def _project_schema(df: DataFrame, ops: List[Dict]) -> DataFrame:
             if op["name"] in df.columns:
                 df = df.drop(op["name"])
     return df
+
+
+def _env(col: str) -> str:
+    """The hidden envelope struct column of a geometry column."""
+    return f"{col}_env"
+
+
+def _q(col: str) -> Column:
+    return F.col("`" + col.replace("`", "``") + "`")
+
+
+def _hidden(m: Dict, columns: List[str]) -> List[str]:
+    """The envelope columns among ``columns`` that the table keeps hidden."""
+    envs = {_env(g) for g in m.get("geometry_columns", [])}
+    return [c for c in columns if c in envs]
+
+
+def _user(df: DataFrame, m: Dict) -> DataFrame:
+    """``df`` without the hidden envelope columns."""
+    hidden = _hidden(m, df.columns)
+    return df.drop(*hidden) if hidden else df
+
+
+def _shape(m: Dict, col: str) -> Optional[str]:
+    """``points`` when every live file of manifest ``m`` recorded that class
+    for ``col``; None (general) otherwise."""
+    shapes = m.get("file_shapes", {})
+    if all(shapes.get(f, {}).get(col) == "points" for f in m["files"]):
+        return "points"
+    return None
+
+
+def _stamp(df: DataFrame, m: Dict) -> DataFrame:
+    """Set each geometry column's ``geom_shape`` to the class of the live
+    files (dropping any the data files' footers carry): the manifest, not a
+    file, says what the table holds."""
+    geo = [g for g in m.get("geometry_columns", []) if g in df.columns]
+    if not geo:
+        return df
+    out = []
+    for f in df.schema.fields:
+        if f.name not in geo:
+            out.append(_q(f.name))
+            continue
+        md = {k: v for k, v in (f.metadata or {}).items() if k != "geom_shape"}
+        shape = _shape(m, f.name) if _env(f.name) in df.columns else None
+        if shape:
+            md["geom_shape"] = shape
+        out.append(_q(f.name).alias(f.name, metadata=md))
+    return df.select(*out)
+
+
+def _shape_count(col: str, geometry: bool) -> Column:
+    """Rows that keep ``col``'s file out of the ``points`` class: for a
+    geometry column, a non-NULL value that is not a 2-D WKB point or has no
+    stored envelope; for any other ``BINARY`` column, any non-NULL value."""
+    c = _q(col)
+    if not geometry:
+        return F.count(c)
+    exact = (F.substring(c, 1, 5).isin(*_POINT_HEADERS)
+             & (F.length(c) == _POINT_WKB_BYTES) & _q(_env(col)).isNotNull())
+    return F.count(F.when(c.isNotNull() & ~exact, F.lit(1)))
 
 
 def _partition_value(fld) -> Column:
@@ -158,27 +246,31 @@ class SnapshotTable:
             "timestamp_ms": int(time.time() * 1000),
             "files": sorted(files),
         }
+        live = set(files)
         if latest is not None:
-            # schema evolution ops and the partition spec are table
-            # metadata: carried forward by every commit (Iceberg: both live
-            # on the snapshot); per-file partition tuples follow their
-            # files — entries for files no longer live are dropped
+            # schema evolution ops, the partition spec and the geometry
+            # columns are table metadata: carried forward by every commit
+            # (Iceberg: all live on the snapshot); per-file partition tuples
+            # and shape classes follow their files — entries for files no
+            # longer live are dropped
             prev = self._manifest(latest)
-            ops = prev.get("schema_ops")
-            if ops:
-                manifest["schema_ops"] = ops
-            if prev.get("partition_spec"):
-                manifest["partition_spec"] = prev["partition_spec"]
-            fps = prev.get("file_partitions")
-            if fps:
-                manifest["file_partitions"] = {
-                    f: v for f, v in fps.items() if f in set(files)}
+            for key in ("schema_ops", "partition_spec", "geometry_columns"):
+                if prev.get(key):
+                    manifest[key] = prev[key]
+            for key in ("file_partitions", "file_shapes"):
+                if prev.get(key):
+                    manifest[key] = {f: v for f, v in prev[key].items()
+                                     if f in live}
         if extra:
-            new_fps = extra.pop("new_file_partitions", None)
+            extra = dict(extra)
+            new = {"file_partitions": extra.pop("new_file_partitions", None),
+                   "file_shapes": extra.pop("new_file_shapes", None)}
             manifest.update(extra)
-            if new_fps:
-                manifest["file_partitions"] = {
-                    **manifest.get("file_partitions", {}), **new_fps}
+            for key, vals in new.items():
+                if vals:
+                    manifest[key] = {**manifest.get(key, {}),
+                                     **{f: v for f, v in vals.items()
+                                        if f in live}}
         tmp = os.path.join(self.snap_dir, f".v{v}.{uuid.uuid4().hex}.tmp")
         with open(tmp, "w") as fh:
             json.dump(manifest, fh)
@@ -206,12 +298,11 @@ class SnapshotTable:
 
     # -- data-file helpers --------------------------------------------------
 
-    def _ingest_staged(self, staged: str, collect_partitions: bool = False):
+    def _ingest_staged(self, staged: str):
         """Move part files from a staging dir into the table dir under
-        unique immutable names; returns their (relative) names — or, with
-        ``collect_partitions``, (names, {name: partition_tuple}) parsed
-        from Hive-style ``_p_<field>=<value>`` directory components the
-        partitioned stage write produced."""
+        unique immutable names; returns (their relative names, {name:
+        partition_tuple}) parsed from Hive-style ``_p_<field>=<value>``
+        directory components the partitioned stage write produced."""
         names, parts = [], {}
         for root, _dirs, fnames in os.walk(staged):
             pvals = {}
@@ -232,7 +323,7 @@ class SnapshotTable:
                         parts[new] = pvals
         import shutil
         shutil.rmtree(staged, ignore_errors=True)
-        return (names, parts) if collect_partitions else names
+        return names, parts
 
     def _stage(self, df: DataFrame) -> str:
         # logical -> physical mapping for re-added columns (see read());
@@ -267,21 +358,81 @@ class SnapshotTable:
         w.parquet(staged)
         return staged
 
+    def _write(self, df: DataFrame, partitions: bool = False,
+               geometry: Optional[List[str]] = None) -> Tuple[List[str], Dict]:
+        """Write ``df`` as new immutable data files; returns their names and
+        the commit metadata they bring: the geometry columns (the table's,
+        the declared ``geometry`` ones, and any ``BINARY`` column whose
+        source carries ``geom_shape`` metadata), the files' shape classes
+        and, with ``partitions``, their partition tuples.  A geometry
+        column the frame carries without its envelope gets one derived;
+        the shape classes ride the write job as an Observation."""
+        try:
+            geo = list(self._manifest().get("geometry_columns", []))
+        except FileNotFoundError:
+            geo = []
+        for f in df.schema.fields:
+            if (isinstance(f.dataType, BinaryType) and f.name not in geo
+                    and _env(f.name) not in df.columns
+                    and (f.name in (geometry or ())
+                         or (f.metadata or {}).get("geom_shape"))):
+                geo.append(f.name)
+        for g in geo:
+            if g in df.columns and _env(g) not in df.columns:
+                df = add_geometry(df, g)
+        binary = [f.name for f in df.schema.fields
+                  if isinstance(f.dataType, BinaryType)]
+        obs = None
+        if binary:
+            obs = Observation()
+            df = df.observe(obs, *[_shape_count(c, c in geo).alias(f"s{i}")
+                                   for i, c in enumerate(binary)])
+        names, parts = self._ingest_staged(self._stage(df))
+        extra: Dict = {}
+        if partitions and parts:
+            extra["new_file_partitions"] = parts
+        if geo:
+            extra["geometry_columns"] = geo
+        if obs is not None:
+            got = obs.get
+            cls = {c: "general" if got[f"s{i}"] else "points"
+                   for i, c in enumerate(binary)}
+            extra["new_file_shapes"] = {n: cls for n in names}
+        return names, extra
 
+    def _frame(self, spark: SparkSession, m: Dict, files: List[str],
+               merge_schema: bool = True) -> DataFrame:
+        """Data files of manifest ``m`` in its logical schema, hidden
+        envelopes included, geometry columns stamped."""
+        df = (spark.read.option("mergeSchema", str(merge_schema).lower())
+              .parquet(*[os.path.join(self.path, f) for f in files]))
+        return _stamp(_project_schema(df, m.get("schema_ops", [])), m)
 
     # -- public surface -----------------------------------------------------
 
     @classmethod
-    def create(cls, spark: SparkSession, path: str, df: DataFrame
-               ) -> "SnapshotTable":
+    def create(cls, spark: SparkSession, path: str, df: DataFrame,
+               geometry: Optional[List[str]] = None) -> "SnapshotTable":
+        """A new table holding ``df``; ``geometry`` names ``BINARY`` (WKB)
+        columns declared as geometry columns."""
         t = cls(path)
         if t.versions():
             raise FileExistsError(f"snapshot table already exists at {path}")
         os.makedirs(t.path, exist_ok=True)
-        names, fps = t._ingest_staged(t._stage(df), collect_partitions=True)
-        t._commit(names, "create",
-                  extra={"new_file_partitions": fps} if fps else None)
+        names, extra = t._write(df, partitions=True, geometry=geometry)
+        t._commit(names, "create", extra=extra or None)
         return t
+
+    def scan(self, spark: SparkSession, version: Optional[int] = None
+             ) -> Tuple[DataFrame, List[str]]:
+        """The table as of ``version`` as stored — its columns plus each
+        geometry column's hidden envelope, with the geometry columns'
+        ``geom_shape`` set from the manifest — and the hidden column names.
+        The frame spatial planning reads; :meth:`read` is its projection to
+        the table's columns."""
+        m = self._manifest(version)
+        df = self._frame(spark, m, m["files"])
+        return df, _hidden(m, df.columns)
 
     def read(self, spark: SparkSession, version: Optional[int] = None,
              merge_schema: bool = True) -> DataFrame:
@@ -303,9 +454,7 @@ class SnapshotTable:
         hide the column.  Ops are per-version: time travel to a
         pre-ALTER snapshot sees the old schema."""
         m = self._manifest(version)
-        df = (spark.read.option("mergeSchema", str(merge_schema).lower())
-              .parquet(*[os.path.join(self.path, f) for f in m["files"]]))
-        return _project_schema(df, m.get("schema_ops", []))
+        return _user(self._frame(spark, m, m["files"], merge_schema), m)
 
     # -- schema evolution (ALTER TABLE) -------------------------------------
 
@@ -313,6 +462,10 @@ class SnapshotTable:
         m = self._manifest()
         cols = self.read(spark).columns
         kind = op["op"]
+        geo = m.get("geometry_columns", [])
+        if op.get("name", op.get("to")) in {_env(g) for g in geo}:
+            raise ValueError(f"column name {op.get('name', op.get('to'))!r} "
+                             "is the hidden envelope of a geometry column")
         if kind == "add":
             if op["name"] in cols:
                 raise ValueError(f"column {op['name']!r} already exists")
@@ -330,8 +483,20 @@ class SnapshotTable:
         if kind == "drop" and op["name"] not in cols:
             raise ValueError(f"no column {op['name']!r} to drop")
         ops = list(m.get("schema_ops", [])) + [op]
+        extra = {"schema_ops": ops}
+        g = op["from"] if kind == "rename" else op["name"]
+        if kind != "add" and g in geo:
+            # the hidden envelope follows its geometry column
+            if kind == "rename":
+                ops.append({"op": "rename", "from": _env(g),
+                            "to": _env(op["to"])})
+                extra["geometry_columns"] = [op["to"] if c == g else c
+                                             for c in geo]
+            else:
+                ops.append({"op": "drop", "name": _env(g)})
+                extra["geometry_columns"] = [c for c in geo if c != g]
         return self._commit(m["files"], "alter", base_version=m["version"],
-                            extra={"schema_ops": ops})
+                            extra=extra)
 
     def add_column(self, spark: SparkSession, name: str, type_ddl: str) -> int:
         return self._alter(spark, {"op": "add", "name": name,
@@ -398,35 +563,30 @@ class SnapshotTable:
         files = self.pruned_files(equality, version)
         if not files:
             return self.read(spark, version).limit(0)
-        df = spark.read.option("mergeSchema", "true").parquet(*files)
-        return _project_schema(df, m.get("schema_ops", []))
+        return _user(self._frame(spark, m, files), m)
 
     def overwrite(self, spark: SparkSession, df: DataFrame) -> int:
         """Full-table overwrite as ONE snapshot commit (Iceberg
         ``INSERT OVERWRITE``): the new files replace every live file; the
         previous snapshot stays readable via time travel until expired."""
-        added, fps = self._ingest_staged(self._stage(df),
-                                         collect_partitions=True)
+        added, extra = self._write(df, partitions=True)
         m = self._manifest()
         return self._commit(added, "overwrite", base_version=m["version"],
-                            extra={"new_file_partitions": fps} if fps else None)
+                            extra=extra or None)
 
     def append(self, spark: SparkSession, df: DataFrame,
                max_retries: int = 5, _extra: Optional[Dict] = None) -> int:
         """Append commutes with any concurrent commit, so a conflict is
         rebased automatically: re-read the (new) live file list and retry
         the commit — the staged data files are written exactly once."""
-        added, fps = self._ingest_staged(self._stage(df),
-                                         collect_partitions=True)
+        added, written = self._write(df, partitions=True)
         for attempt in range(max_retries + 1):
             m = self._manifest()
             try:
-                extra = dict(_extra or {})
-                if fps:
-                    extra["new_file_partitions"] = fps
                 return self._commit(m["files"] + added, "append",
                                     base_version=m["version"],
-                                    extra=extra or None)
+                                    extra={**(_extra or {}), **written}
+                                    or None)
             except CommitConflictError:
                 if attempt == max_retries:
                     raise
@@ -466,11 +626,12 @@ class SnapshotTable:
         live = [os.path.join(self.path, f) for f in m["files"]]
         df = _project_schema(
             spark.read.option("mergeSchema", "true").parquet(*live), ops)
-        unknown = set(assignments) - set(df.columns)
+        cols = _user(df, m).columns
+        unknown = set(assignments) - set(cols)
         if unknown:
             raise ValueError(f"UPDATE SET references unknown column(s) "
                              f"{sorted(unknown)} (table has "
-                             f"{sorted(df.columns)})")
+                             f"{sorted(cols)})")
         from .dml import bounded_file_list
         touched = bounded_file_list(
             df.withColumn("_f", F.input_file_name())
@@ -483,10 +644,13 @@ class SnapshotTable:
             (F.when(pred, _to_col(assignments[c]).cast(sub.schema[c].dataType))
              .otherwise(F.col(c))).alias(c) if c in assignments else F.col(c)
             for c in sub.columns])
-        added = self._ingest_staged(self._stage(updated))
+        # an assigned geometry's stored envelope would be stale: re-derived
+        added, extra = self._write(updated.drop(*[
+            _env(g) for g in m.get("geometry_columns", []) if g in assignments]))
         touched_names = {os.path.basename(f) for f in touched}
         kept = [f for f in m["files"] if f not in touched_names]
-        v = self._commit(kept + added, "update", base_version=m["version"])
+        v = self._commit(kept + added, "update", base_version=m["version"],
+                         extra=extra or None)
         return {"version": v, "files_rewritten": len(touched)}
 
     def delete_where(self, spark: SparkSession, predicate) -> dict:
@@ -505,10 +669,11 @@ class SnapshotTable:
         sub = _project_schema(
             spark.read.option("mergeSchema", "true").parquet(*touched), ops)
         kept_rows = sub.filter(~pred | pred.isNull())
-        added = self._ingest_staged(self._stage(kept_rows))
+        added, extra = self._write(kept_rows)
         touched_names = {os.path.basename(f) for f in touched}
         kept = [f for f in m["files"] if f not in touched_names]
-        v = self._commit(kept + added, "delete", base_version=m["version"])
+        v = self._commit(kept + added, "delete", base_version=m["version"],
+                         extra=extra or None)
         return {"version": v, "files_rewritten": len(touched)}
 
     def merge_into(self, spark: SparkSession, source: DataFrame, on: str,
@@ -530,12 +695,13 @@ class SnapshotTable:
         target = _project_schema(
             spark.read.option("mergeSchema", "true").parquet(*live), ops)
         cols = target.columns
-        update_cols = update_cols or [c for c in cols if c != on]
-        unknown = set(update_cols) - set(cols)
+        user = _user(target, m).columns
+        update_cols = update_cols or [c for c in user if c != on]
+        unknown = set(update_cols) - set(user)
         if unknown:
             raise ValueError(
                 f"MERGE UPDATE SET references unknown column(s) "
-                f"{sorted(unknown)} (table has {sorted(cols)})")
+                f"{sorted(unknown)} (table has {sorted(user)})")
 
         dup = (source.groupBy(on).agg(F.count(F.lit(1)).alias("_n"))
                .filter(F.col("_n") > 1).limit(1).collect())
@@ -587,10 +753,15 @@ class SnapshotTable:
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=True)
-        added = self._ingest_staged(self._stage(out))
+        # an updated or inserted geometry has no valid stored envelope:
+        # re-derived
+        added, extra = self._write(out.drop(*[
+            _env(g) for g in m.get("geometry_columns", [])
+            if g in update_cols or insert_when_not_matched]))
         touched_names = {os.path.basename(f) for f in touched}
         kept = [f for f in m["files"] if f not in touched_names]
-        v = self._commit(kept + added, "merge", base_version=m["version"])
+        v = self._commit(kept + added, "merge", base_version=m["version"],
+                         extra=extra or None)
         return {"version": v, "files_rewritten": len(touched),
                 "rows_updated": obs_u.get["n"] if obs_u else 0,
                 "rows_inserted": obs_i.get["n"] if obs_i else 0}
@@ -614,9 +785,10 @@ class SnapshotTable:
         total = sum(sizes[f] for f in small)
         n_out = max(1, -(-total // target_file_bytes))  # ceil
         df = spark.read.parquet(*[os.path.join(self.path, f) for f in small])
-        added = self._ingest_staged(self._stage(df.repartition(n_out)))
+        added, extra = self._write(df.repartition(n_out))
         kept = [f for f in m["files"] if f not in set(small)]
-        v = self._commit(kept + added, "compact", base_version=m["version"])
+        v = self._commit(kept + added, "compact", base_version=m["version"],
+                         extra=extra or None)
         return {"version": v, "files_compacted": len(small),
                 "files_written": len(added)}
 
@@ -645,8 +817,9 @@ class SnapshotTable:
                .repartitionByRange(n_out, "_z")
                .sortWithinPartitions("_z")
                .drop("_z"))
-        added = self._ingest_staged(self._stage(out))
-        v = self._commit(added, "zorder", base_version=m["version"])
+        added, extra = self._write(out)
+        v = self._commit(added, "zorder", base_version=m["version"],
+                         extra=extra or None)
         return {"version": v, "files_written": len(added)}
 
     # -- metadata tables (Iceberg's  t.history / t.files  surface) ----------
@@ -689,17 +862,16 @@ class SnapshotTable:
         m_to = self._manifest(v_to)
         only_from = sorted(set(m_from["files"]) - set(m_to["files"]))
         only_to = sorted(set(m_to["files"]) - set(m_from["files"]))
-        schema_to = m_to.get("schema_ops", [])
 
-        def read_files(names, ops):
+        def read_files(names, m):
             if not names:
                 return None
             df = (spark.read.option("mergeSchema", "true")
                   .parquet(*[os.path.join(self.path, f) for f in names]))
-            return _project_schema(df, ops)
+            return _user(_project_schema(df, m.get("schema_ops", [])), m)
 
-        old = read_files(only_from, m_from.get("schema_ops", []))
-        new = read_files(only_to, schema_to)
+        old = read_files(only_from, m_from)
+        new = read_files(only_to, m_to)
         empty = self.read(spark, v_to).limit(0)                     .withColumn("_change_type", F.lit(""))
         out = empty
         if new is not None:
@@ -726,7 +898,9 @@ class SnapshotTable:
         base = self._manifest()["version"]
         return self._commit(target["files"], f"rollback-to-{version}",
                             base_version=base,
-                            extra={"schema_ops": target.get("schema_ops", [])})
+                            extra={"schema_ops": target.get("schema_ops", []),
+                                   "new_file_shapes":
+                                   target.get("file_shapes")})
 
     # ---- named refs (branches / tags) --------------------------------
     # Iceberg refs are mutable table-level pointers into the snapshot log
@@ -823,8 +997,9 @@ class SnapshotTable:
         base = self._manifest()["version"]
         return self._commit(target["files"], f"set-current-to-{version}",
                             base_version=base,
-                            extra={"schema_ops":
-                                   target.get("schema_ops", [])})
+                            extra={"schema_ops": target.get("schema_ops", []),
+                                   "new_file_shapes":
+                                   target.get("file_shapes")})
 
     def cherrypick(self, version: int) -> int:
         """Apply ``version``'s delta against its parent onto the CURRENT
@@ -837,13 +1012,16 @@ class SnapshotTable:
         idx = vs.index(version)
         parent = (set(self._manifest(vs[idx - 1])["files"])
                   if idx > 0 else set())
-        target = set(self._manifest(version)["files"])
+        picked = self._manifest(version)
+        target = set(picked["files"])
         added, removed = target - parent, parent - target
         cur = self._manifest()
         new_files = ([f for f in cur["files"] if f not in removed]
                      + sorted(added - set(cur["files"])))
         return self._commit(new_files, f"cherrypick-{version}",
-                            base_version=cur["version"])
+                            base_version=cur["version"],
+                            extra={"new_file_shapes":
+                                   picked.get("file_shapes")})
 
     def remove_orphans(self,
                        older_than_seconds: float = 3 * 24 * 3600) -> dict:

@@ -26,6 +26,14 @@ rewrites the text at the exact ``origin`` spans the parser records:
    ``a.*, b.*`` in FROM order, and a constant-envelope range conjunct over
    a point/rect shape-hinted column becomes its native envelope bounds.
 
+A FROM relation naming a snapshot table whose geometry envelopes are stored
+(``operators.ddl.snapshot_frame``) is read as that envelope-carrying frame:
+as a join input, its shape hint and envelope make the join condition
+native; under a range conjunct the WHERE reaches, the relation becomes its
+frame filtered by the envelope bounds (a named arg, hidden envelopes
+dropped) — exact for a ``points`` table, whose conjunct becomes ``TRUE``,
+else the relaxed prefilter under the kept exact call.
+
 Extra ``ON`` conjuncts filter the pair on inner joins; on a left join they
 may only read the right side, and then filter the right input.  An ``ST_*``
 call under an ``OR`` is not a conjunct and is never planned.  Chains
@@ -49,6 +57,7 @@ from pyspark.errors import AnalysisException, ParseException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
+from .ddl import snapshot_frame
 from .spatial_join import spatial_join
 
 # SQL name -> (internal predicate, inverse when arg order is (right, left))
@@ -95,13 +104,21 @@ class _Conj:
 class _Side:
     """One join input: a FROM relation (``aliases`` = [its alias], its
     frame built on demand from its text), a planned pair (``df`` has one
-    struct column per alias), or an opaque input (``aliases`` None)."""
+    struct column per alias), or an opaque input (``aliases`` None).
+
+    ``reach``: the enclosing WHERE's conjuncts reach the relation (filtering
+    it is the same as filtering the statement's rows).  A snapshot-table
+    relation's frame carries ``hidden`` envelope columns, never exposed;
+    ``pushed`` are the range filters moved into it."""
 
     def __init__(self, node=None, kind=None, df=None, aliases=None,
-                 span=None):
+                 span=None, reach=False):
         self.node, self.kind, self.df = node, kind, df
         self._aliases, self._span = aliases, span
         self.pair = df is not None
+        self.reach = reach
+        self.hidden: List[str] = []
+        self.pushed: List[str] = []
 
     @property
     def aliases(self) -> Optional[List[str]]:
@@ -126,12 +143,13 @@ def _quote(name: str) -> str:
 
 
 class _Rewrite:
-    """One statement's tree walk; collects text edits and pair frames."""
+    """One statement's tree walk; collects text edits and the frames they
+    name (planned pairs, range-filtered snapshot tables)."""
 
     def __init__(self, spark: SparkSession, sql: str):
         self.spark, self.sql = spark, sql
         self.edits: List[Tuple[int, int, str]] = []
-        self.pairs: Dict[str, DataFrame] = {}
+        self.args: Dict[str, DataFrame] = {}
         self.ctes: List[Tuple[str, str]] = []   # in-scope (name, CTE text)
 
     # --- plan nodes ------------------------------------------------------
@@ -172,23 +190,36 @@ class _Rewrite:
         planned = False
         for s in leaves:
             if s.pair:
-                name = f"_sj{len(self.pairs)}"
-                self.pairs[name] = s.df
-                self.edits.append((*s._span, "{" + name + "}"))
+                self.edits.append((*s._span, self.arg(s.df)))
                 planned = True
             elif s.kind == "SubqueryAlias" \
                     and s.node.child().nodeName() != "UnresolvedRelation":
                 self.walk(s.node.child())
         if leaves:
             self.rewrite_ranges(conjs, leaves)
+        for s in leaves:
+            if s.pushed:
+                # the relation becomes its filtered frame, under its name
+                df = s.df.where(" AND ".join(s.pushed)).drop(*s.hidden)
+                if s.kind == "UnresolvedRelation":
+                    self.edits.append((*_span(s.node), f"{self.arg(df)} AS "
+                                       f"{_quote(s.aliases[0])}"))
+                else:
+                    self.edits.append((*_span(s.node.child()), self.arg(df)))
         return leaves, planned
+
+    def arg(self, df: DataFrame) -> str:
+        """The statement text naming ``df`` (a ``spark.sql`` named arg)."""
+        name = f"_sj{len(self.args)}"
+        self.args[name] = df
+        return "{" + name + "}"
 
     def tree(self, node, conjs: List[_Conj]) -> List[_Side]:
         kind = node.nodeName()
         if kind == "Join":
             return self.join(node, conjs)
         if kind in ("SubqueryAlias", "UnresolvedRelation"):
-            return [_Side(node, kind)]
+            return [_Side(node, kind, reach=bool(conjs))]
         self.walk(node)
         return [_Side()]
 
@@ -225,8 +256,7 @@ class _Rewrite:
             if how == "left" and extras:
                 rdf = rdf.alias(right.aliases[0]).where(self.and_text(extras))
             pair = plan_spatial_join_sql(
-                self.frame(left), left, rdf, right.aliases[0], *pick[1:],
-                how=how)
+                self.frame(left), left, rdf, right, *pick[1:], how=how)
             if pair is not None and how == "inner" and extras:
                 pair = pair.where(self.and_text(extras))
         except AnalysisException:
@@ -253,9 +283,14 @@ class _Rewrite:
         return side._span
 
     def frame(self, side: _Side) -> DataFrame:
-        """The input as a DataFrame, built from its own text through this
-        front door (so a subquery's own spatial joins plan too)."""
+        """The input as a DataFrame: a snapshot table's envelope-carrying
+        frame, else built from its own text through this front door (so a
+        subquery's own spatial joins plan too)."""
         if side.df is None:
+            snap = self.snapshot(side)
+            if snap is not None:
+                side.df, side.hidden = snap
+                return side.df
             start, stop = self.span(side)
             prefix = ""
             if self.ctes and self.may_read_cte(side):
@@ -263,6 +298,19 @@ class _Rewrite:
             side.df = spatial_sql(
                 self.spark, f"{prefix}SELECT * FROM {self.sql[start:stop]}")
         return side.df
+
+    def snapshot(self, side: _Side):
+        """(frame, hidden columns) when the input names a snapshot table
+        that stores geometry envelopes (and no CTE shadows the name)."""
+        rel = side.node if side.kind == "UnresolvedRelation" \
+            else side.node.child()
+        if rel.nodeName() != "UnresolvedRelation":
+            return None
+        ident = rel.multipartIdentifier()
+        name = ident.head()
+        if ident.size() != 1 or name.lower() in (n for n, _ in self.ctes):
+            return None
+        return snapshot_frame(self.spark, name)
 
     def may_read_cte(self, side: _Side) -> bool:
         rel = side.node if side.kind == "UnresolvedRelation" \
@@ -346,9 +394,13 @@ class _Rewrite:
 
     def rewrite_ranges(self, conjs: List[_Conj], leaves: List[_Side]) -> None:
         """Rewrite each WHERE conjunct ``ST_pred(ST_PolygonFromEnvelope(
-        x1, y1, x2, y2), col)`` (either arg order) over a shape-hinted
-        geometry with a ``<col>_env`` companion into native comparisons:
-        no Python, and the filter reaches the scan."""
+        x1, y1, x2, y2), col)`` (either arg order) over a geometry with a
+        ``<col>_env`` companion into native envelope comparisons, which
+        reach the scan.  Over a point (or, where exact, rect) shape hint
+        they are the predicate: no Python.  Over a snapshot table they move
+        into the table's frame (the Tier-B pushdown of
+        SedonaPredicatePushDown.scala): exact for a ``points`` table, else
+        the relaxed envelope prefilter under the kept exact call."""
         for c in conjs:
             call = None if c.consumed else self.st_call(c, _RANGE_PREDS)
             if not call or len(call[1]) != 2:
@@ -361,21 +413,34 @@ class _Rewrite:
             ref = _colref(colarg)
             if ref is None:
                 continue
-            shape, env = self.env_ref(leaves, *ref)
+            side, shape, env = self.env_ref(leaves, *ref)
             native = _native_range(name, box, box_first, shape, env)
+            if side is None or env not in side.hidden:
+                if native:
+                    self.edits.append((*_span(c.expr), f"({native})"))
+                continue
+            if not side.reach or (ref[0] is None and len(leaves) > 1):
+                continue     # filtering the table would not filter the rows
             if native:
-                self.edits.append((*_span(c.expr), f"({native})"))
+                side.pushed.append(f"({native})")
+                c.consumed = True
+                self.edits.append((*_span(c.expr), "TRUE"))
+            else:
+                side.pushed.append(
+                    f"({env}.xmin IS NULL OR "
+                    f"({_relaxed_range(name, box, box_first, env)}))")
 
     def env_ref(self, leaves: List[_Side], alias: Optional[str], col: str):
-        """(shape hint, SQL path of the ``_env`` companion) of a geometry
-        column: flat in a FROM relation or inside a pair's alias struct."""
+        """(side, shape hint, SQL path of the ``_env`` companion) of a
+        geometry column: flat in a FROM relation or inside a pair's alias
+        struct.  A snapshot table's path is the bare (hidden) column."""
         for s in leaves:
             if s.aliases is None or (alias is not None and not s.owns(alias)):
                 continue
             try:
                 schema = self.frame(s).schema
             except AnalysisException:
-                return None, None   # Spark reports the relation itself
+                return None, None, None   # Spark reports the relation itself
             if s.pair:
                 if alias is None:
                     continue
@@ -383,14 +448,15 @@ class _Rewrite:
                               if f.name.lower() == alias.lower())
                 schema = struct.dataType
                 if not isinstance(schema, StructType):
-                    return None, None
+                    return None, None, None
             if col in schema.fieldNames():
-                if f"{col}_env" not in schema.fieldNames():
-                    return None, None
-                prefix = f"{alias}." if alias else ""
-                return (schema[col].metadata or {}).get("geom_shape"), \
-                    f"{prefix}{col}_env"
-        return None, None
+                env = f"{col}_env"
+                if env not in schema.fieldNames():
+                    return None, None, None
+                if alias and env not in s.hidden:
+                    env = f"{alias}.{env}"
+                return s, (schema[col].metadata or {}).get("geom_shape"), env
+        return None, None, None
 
 
 def _call(expr) -> Optional[Tuple[str, list]]:
@@ -461,6 +527,23 @@ def _native_range(pred: str, box, box_first: bool, shape: Optional[str],
             f" AND {env}.ymin {gt} {y1!r} AND {env}.ymax {lt} {y2!r}")
 
 
+def _relaxed_range(pred: str, box, box_first: bool, env: str) -> str:
+    """The envelope prefilter of a constant-box range predicate over any
+    geometry (SURVEY §Tier B: the ``stIntersects``/``stCovers``/
+    ``stCoveredBy`` relaxations): every row the predicate accepts passes
+    it; the exact call stays above it."""
+    x1, y1, x2, y2 = box
+    if pred == "st_intersects":
+        return (f"{env}.xmax >= {x1!r} AND {env}.xmin <= {x2!r}"
+                f" AND {env}.ymax >= {y1!r} AND {env}.ymin <= {y2!r}")
+    box_covers = box_first == (pred in ("st_contains", "st_covers"))
+    if box_covers:       # the geometry's envelope lies in the box
+        return (f"{env}.xmin >= {x1!r} AND {env}.xmax <= {x2!r}"
+                f" AND {env}.ymin >= {y1!r} AND {env}.ymax <= {y2!r}")
+    return (f"{env}.xmin <= {x1!r} AND {env}.xmax >= {x2!r}"
+            f" AND {env}.ymin <= {y1!r} AND {env}.ymax >= {y2!r}")
+
+
 def _resolve_geom(df: DataFrame, side: _Side, alias: str,
                   col: str) -> Optional[Tuple[DataFrame, str, List[str]]]:
     """Resolve a predicate argument ``alias.col`` against one join side.
@@ -487,14 +570,16 @@ def _resolve_geom(df: DataFrame, side: _Side, alias: str,
 
 
 def plan_spatial_join_sql(ldf: DataFrame, left: _Side, rdf: DataFrame,
-                          ralias: str, predicate: str,
+                          right: _Side, predicate: str,
                           lref: Tuple[str, str], rref: Tuple[str, str],
                           d: float, how: str = "inner") -> Optional[DataFrame]:
     """Plan one detected join through the grid spatial join; returns the
     pair: one struct column per table alias (a left pair's alias structs
-    pass through unchanged), or None when a geometry column is missing."""
+    pass through unchanged; a snapshot table's hidden envelopes stay out),
+    or None when a geometry column is missing."""
+    ralias = right.aliases[0]
     left_res = _resolve_geom(ldf, left, *lref)
-    right_res = _resolve_geom(rdf, _Side(aliases=[ralias]), *rref)
+    right_res = _resolve_geom(rdf, right, *rref)
     if not (left_res and right_res):
         return None
     ldf2, lgeo, ltmps = left_res
@@ -505,20 +590,21 @@ def plan_spatial_join_sql(ldf: DataFrame, left: _Side, rdf: DataFrame,
     lcols, rcols = ldf2.columns, rdf2.columns
     common = set(lcols) & set(rcols)
     rstruct = F.struct(*[F.col(f"`r_{c}`" if c in common else f"`{c}`").alias(c)
-                         for c in rcols]).alias(ralias)
+                         for c in rcols if c not in right.hidden]).alias(ralias)
     if left.pair:
         keep = [F.col(f"`{c}`").alias(c) for c in lcols if c not in ltmps]
         return joined.select(*keep, rstruct)
     return joined.select(
         F.struct(*[F.col(f"`{c}`").alias(c) for c in lcols
-                   if c not in ltmps]).alias(left.aliases[0]),
+                   if c not in ltmps and c not in left.hidden]
+                 ).alias(left.aliases[0]),
         rstruct)
 
 
 def _plan_statement(spark: SparkSession,
                     sql: str) -> Optional[Tuple[str, Dict[str, DataFrame]]]:
-    """The rewritten statement text and its pair named args, or None when
-    the statement has nothing to plan."""
+    """The rewritten statement text and its DataFrame named args, or None
+    when the statement has nothing to plan."""
     if "st_" not in sql.lower():
         return None
     try:
@@ -535,14 +621,14 @@ def _plan_statement(spark: SparkSession,
     out, pos = [], 0
     for start, stop, text in sorted(rw.edits):
         seg = sql[pos:start]
-        if rw.pairs:         # the named-arg formatter reads {...}
+        if rw.args:          # the named-arg formatter reads {...}
             seg = seg.replace("{", "{{").replace("}", "}}")
         out += [seg, text]
         pos = stop
     tail = sql[pos:]
-    if rw.pairs:
+    if rw.args:
         tail = tail.replace("{", "{{").replace("}", "}}")
-    return "".join(out) + tail, rw.pairs
+    return "".join(out) + tail, rw.args
 
 
 def spatial_sql(spark: SparkSession, sql: str) -> DataFrame:
@@ -555,5 +641,5 @@ def spatial_sql(spark: SparkSession, sql: str) -> DataFrame:
     planned = _plan_statement(spark, sql)
     if planned is None:
         return spark.sql(sql)
-    text, pairs = planned
-    return spark.sql(text, **pairs)
+    text, args = planned
+    return spark.sql(text, **args)

@@ -79,7 +79,8 @@ def running_user_totals_stateful(events: DataFrame,
     forever (at 100 TB / billions of keys, NoTimeout state is a slow OOM
     of the state store).  Totals already emitted are unaffected — a user
     returning after eviction restarts their running count, the standard
-    TTL trade-off."""
+    TTL trade-off.  A TTL query under an ``availableNow`` trigger does not
+    stop on its own (its timeout state keeps running no-data batches)."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     timeout = (GroupStateTimeout.ProcessingTimeTimeout if ttl_ms

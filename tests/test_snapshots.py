@@ -396,3 +396,53 @@ def test_changes_changelog_between_snapshots(spark, tmp_path):
     # self-diff is empty
     v_now = t.versions()[-1]
     assert t.changes(spark, v_now, v_now).count() == 0
+
+
+def _points(spark, lo, hi):
+    from sedona_iceberg_extension_spark.functions import api as ST
+    df = spark.range(lo, hi).select(
+        F.col("id"), (F.col("id") % 7).cast("double").alias("x"),
+        (F.col("id") % 5).cast("double").alias("y"))
+    return ST.with_point_geometry(df, "x", "y").drop("geo_env")
+
+
+def test_geometry_column_envelope_and_shape_class(spark, tmp_path):
+    t = SnapshotTable.create(spark, str(tmp_path / "g"), _points(spark, 0, 40))
+    m = t._manifest()
+    assert m["geometry_columns"] == ["geo"]
+    assert set(map(str, m["file_shapes"].values())) == {str({"geo": "points"})}
+    full, hidden = t.scan(spark)
+    assert hidden == ["geo_env"]
+    assert full.schema["geo"].metadata.get("geom_shape") == "points"
+    assert t.read(spark).columns == ["id", "x", "y", "geo"]
+    env = full.filter("id = 12").select("geo_env.*").first()
+    assert tuple(env) == (5.0, 2.0, 5.0, 2.0)
+    # a polygon makes the appended file (and so the table) general
+    poly = spark.createDataFrame([(99, 0.0, 0.0)], "id long, x double, y double") \
+        .withColumn("geo", F.expr("ST_PolygonFromEnvelope(0.0, 0.0, 1.0, 1.0)"))
+    t.append(spark, poly)
+    full, _ = t.scan(spark)
+    assert "geom_shape" not in full.schema["geo"].metadata
+    assert full.filter("id = 99").select("geo_env.xmax").first()[0] == 1.0
+    # time travel and rollback keep each version's own classes
+    v1, _ = t.scan(spark, version=1)
+    assert v1.schema["geo"].metadata.get("geom_shape") == "points"
+    t.rollback(1)
+    assert t.scan(spark)[0].schema["geo"].metadata.get("geom_shape") == "points"
+
+
+def test_declared_geometry_and_schema_ops_move_the_envelope(spark, tmp_path):
+    df = _points(spark, 0, 10)
+    plain = df.select("id", "x", "y", F.col("geo").cast("binary").alias("geo"))
+    t = SnapshotTable.create(spark, str(tmp_path / "d"), plain,
+                             geometry=["geo"])
+    assert t._manifest()["geometry_columns"] == ["geo"]
+    with pytest.raises(ValueError, match="hidden envelope"):
+        t.add_column(spark, "geo_env", "STRING")
+    t.rename_column(spark, "geo", "shape")
+    full, hidden = t.scan(spark)
+    assert hidden == ["shape_env"] and "geo_env" not in full.columns
+    assert t.read(spark).columns == ["id", "x", "y", "shape"]
+    t.drop_column(spark, "shape")
+    full, hidden = t.scan(spark)
+    assert hidden == [] and full.columns == ["id", "x", "y"]

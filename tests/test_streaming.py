@@ -2,6 +2,7 @@
 over the driver's events parquet."""
 
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -81,7 +82,17 @@ def test_stateful_running_totals_with_ttl(spark, events, sf_dir):
     out = S.running_user_totals_stateful(stream, ttl_ms=3_600_000)
     q = (out.writeStream.format("memory").queryName("running_totals_ttl")
          .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    # the processing-time timeout keeps the availableNow query running
+    # no-data batches, so it never ends by itself: wait (bounded) until
+    # batches holding every input row have committed, then stop it
+    n_rows, committed = events.count(), {}
+    deadline = time.monotonic() + 120
+    while sum(committed.values()) < n_rows and q.isActive \
+            and time.monotonic() < deadline:
+        for p in q.recentProgress:
+            committed[p["batchId"]] = p["numInputRows"]
+        time.sleep(0.2)
+    q.stop()
     got = {r["user_id"]: r["n_events"] for r in spark.sql(
         "SELECT user_id, max(n_events) n_events "
         "FROM running_totals_ttl GROUP BY user_id").collect()}
