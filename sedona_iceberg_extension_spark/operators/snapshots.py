@@ -168,7 +168,10 @@ def _stamp(df: DataFrame, m: Dict) -> DataFrame:
 def _shape_count(col: str, geometry: bool) -> Column:
     """Rows that keep ``col``'s file out of the ``points`` class: for a
     geometry column, a non-NULL value that is not a 2-D WKB point or has no
-    stored envelope; for any other ``BINARY`` column, any non-NULL value."""
+    stored envelope; for any other ``BINARY`` column, any non-NULL value.
+    The second case is what keeps a table created empty and then filled
+    from a ``geom_shape`` source ``points``: the empty file ``CREATE
+    TABLE`` writes is classed before its column is known to be geometry."""
     c = _q(col)
     if not geometry:
         return F.count(c)
@@ -784,7 +787,9 @@ class SnapshotTable:
                     "files_written": 0}
         total = sum(sizes[f] for f in small)
         n_out = max(1, -(-total // target_file_bytes))  # ceil
-        df = spark.read.parquet(*[os.path.join(self.path, f) for f in small])
+        # the logical frame: shape classes are keyed by the columns' current
+        # names, and a column only some files carry is kept
+        df = self._frame(spark, m, small)
         added, extra = self._write(df.repartition(n_out))
         kept = [f for f in m["files"] if f not in set(small)]
         v = self._commit(kept + added, "compact", base_version=m["version"],
@@ -804,15 +809,14 @@ class SnapshotTable:
         from ..sources.layout import zorder_value
 
         m = self._manifest()
-        live = [os.path.join(self.path, f) for f in m["files"]]
-        df = spark.read.parquet(*live)
+        df = self._frame(spark, m, m["files"])
         stats = df.agg(*[F.min(c).alias(f"lo_{i}") for i, c in enumerate(cols)],
                        *[F.max(c).alias(f"hi_{i}") for i, c in enumerate(cols)]
                        ).collect()[0]
         mins = [stats[f"lo_{i}"] for i in range(len(cols))]
         maxs = [stats[f"hi_{i}"] for i in range(len(cols))]
         z = zorder_value([F.col(c) for c in cols], mins, maxs, bits)
-        n_out = n_files or len(live)
+        n_out = n_files or len(m["files"])
         out = (df.withColumn("_z", z)
                .repartitionByRange(n_out, "_z")
                .sortWithinPartitions("_z")
@@ -899,6 +903,8 @@ class SnapshotTable:
         return self._commit(target["files"], f"rollback-to-{version}",
                             base_version=base,
                             extra={"schema_ops": target.get("schema_ops", []),
+                                   "geometry_columns":
+                                   target.get("geometry_columns", []),
                                    "new_file_shapes":
                                    target.get("file_shapes")})
 
@@ -998,6 +1004,8 @@ class SnapshotTable:
         return self._commit(target["files"], f"set-current-to-{version}",
                             base_version=base,
                             extra={"schema_ops": target.get("schema_ops", []),
+                                   "geometry_columns":
+                                   target.get("geometry_columns", []),
                                    "new_file_shapes":
                                    target.get("file_shapes")})
 

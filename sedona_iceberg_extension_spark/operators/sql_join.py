@@ -531,15 +531,13 @@ def _relaxed_range(pred: str, box, box_first: bool, env: str) -> str:
     """The envelope prefilter of a constant-box range predicate over any
     geometry (SURVEY §Tier B: the ``stIntersects``/``stCovers``/
     ``stCoveredBy`` relaxations): every row the predicate accepts passes
-    it; the exact call stays above it."""
-    x1, y1, x2, y2 = box
-    if pred == "st_intersects":
-        return (f"{env}.xmax >= {x1!r} AND {env}.xmin <= {x2!r}"
-                f" AND {env}.ymax >= {y1!r} AND {env}.ymin <= {y2!r}")
-    box_covers = box_first == (pred in ("st_contains", "st_covers"))
-    if box_covers:       # the geometry's envelope lies in the box
-        return (f"{env}.xmin >= {x1!r} AND {env}.xmax <= {x2!r}"
-                f" AND {env}.ymin >= {y1!r} AND {env}.ymax <= {y2!r}")
+    it; the exact call stays above it.  Where the box holds the geometry
+    (or they intersect) that is the closed rect test of the envelope."""
+    closed = {"st_contains": "st_covers", "st_within": "st_coveredby"}
+    rect = _native_range(closed.get(pred, pred), box, box_first, "rects", env)
+    if rect:
+        return rect
+    x1, y1, x2, y2 = box      # the geometry holds the box: so does its envelope
     return (f"{env}.xmin <= {x1!r} AND {env}.xmax >= {x2!r}"
             f" AND {env}.ymin <= {y1!r} AND {env}.ymax >= {y2!r}")
 

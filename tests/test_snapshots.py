@@ -446,3 +446,51 @@ def test_declared_geometry_and_schema_ops_move_the_envelope(spark, tmp_path):
     t.drop_column(spark, "shape")
     full, hidden = t.scan(spark)
     assert hidden == [] and full.columns == ["id", "x", "y"]
+
+
+@pytest.mark.parametrize("alter", ["rename", "drop"])
+def test_rollback_past_geometry_alter_restores_geometry_columns(
+        spark, tmp_path, alter):
+    t = SnapshotTable.create(spark, str(tmp_path / alter), _points(spark, 0, 10))
+    t.append(spark, _points(spark, 10, 20))
+    if alter == "rename":
+        t.rename_column(spark, "geo", "shape")
+    else:
+        t.drop_column(spark, "geo")
+    t.rollback(2)
+    full, hidden = t.scan(spark)
+    want, want_hidden = t.scan(spark, version=2)
+    assert t._manifest()["geometry_columns"] == ["geo"]
+    assert (full.columns, hidden) == (want.columns, want_hidden)
+    assert t.read(spark).columns == t.read(spark, version=2).columns \
+        == ["id", "x", "y", "geo"]
+    assert full.schema["geo"].metadata.get("geom_shape") == "points"
+    t.append(spark, _points(spark, 20, 30))
+    assert t.read(spark).count() == 30
+    assert t.scan(spark)[0].schema["geo"].metadata.get("geom_shape") == "points"
+
+
+def test_compact_keys_shape_classes_by_renamed_column(spark, tmp_path):
+    t = SnapshotTable.create(spark, str(tmp_path / "c"), _points(spark, 0, 10))
+    t.append(spark, _points(spark, 10, 20))
+    t.rename_column(spark, "geo", "shape")
+    # the old files' classes are keyed by the old name: general until rewritten
+    assert "geom_shape" not in t.scan(spark)[0].schema["shape"].metadata
+    assert t.compact(spark)["files_compacted"] > 1
+    full, hidden = t.scan(spark)
+    assert hidden == ["shape_env"]
+    assert full.schema["shape"].metadata.get("geom_shape") == "points"
+    assert t.read(spark).columns == ["id", "x", "y", "shape"]
+    assert full.filter("id = 12").select("shape_env.*").first() \
+        == (5.0, 2.0, 5.0, 2.0)
+
+
+def test_compact_keeps_a_column_only_some_files_carry(spark, tmp_path):
+    t = SnapshotTable.create(spark, str(tmp_path / "e"),
+                             spark.range(0, 5).select("id"))
+    t.append(spark, spark.range(5, 10).select(
+        "id", (F.col("id") * 10).alias("extra")))
+    assert t.compact(spark)["files_compacted"] > 1
+    got = t.read(spark)
+    assert sorted(got.columns) == ["extra", "id"]
+    assert got.filter("extra IS NOT NULL").count() == 5
