@@ -9,38 +9,49 @@ the engine's snapshot tables (``operators.snapshots.SnapshotTable`` —
 versioned manifests, CoW DML, time travel), which reproduce the semantics
 the DDL spelling implies.
 
-Tables live under a session warehouse directory
-(``$SPARK_GRAFT_WAREHOUSE`` or a tempdir) and are exposed as temp views
-after every commit, so follow-up SELECT / spatial-join / UPDATE statements
-resolve them like any other relation.  Dotted identifiers
-(``catalog.db.tbl``) are flattened to ``catalog_db_tbl`` for the view name
-— Spark would otherwise resolve them against a real catalog.
+Statements are read from Spark's own parse tree (:class:`Statement`):
+``session.sql`` dispatches on the root node's class to :data:`HANDLERS`,
+which read names, column types, INSERT sources, CALL arguments and DML
+clauses from the nodes and their exact ``origin`` spans.  A bare
+``GEOMETRY`` type, which Spark rejects, is spliced to ``BINARY``; inline
+``VALUES`` rows become ``SELECT … UNION ALL`` (an inline table cannot
+evaluate a Python UDF); Iceberg's extension grammar (``ADD PARTITION
+FIELD``, ``CREATE|DROP BRANCH|TAG``) is tried only after the parser rejects
+the text.  A statement naming no catalog table runs on Spark as written.
 
-``GEOMETRY`` columns map to the engine's WKB ``BINARY`` representation
-(SURVEY.md §2 Tier A, UdtRegistratorWrapper-by-design) and are declared
+Tables live in a session warehouse (``$SPARK_GRAFT_WAREHOUSE`` or a
+tempdir) and are registered as temp views after every commit.  A query's
+relations naming catalog tables are spliced at their spans, wherever they
+stand and never inside a string literal: ``catalog.db.tbl`` becomes its view
+``catalog_db_tbl`` (Spark would resolve the dots against a real catalog),
+``t.history``/``t.files`` the metadata table, and ``t VERSION|TIMESTAMP AS
+OF x`` that snapshot's view.
+
+``GEOMETRY`` columns are WKB ``BINARY`` (SURVEY.md §2 Tier A) and declared
 geometry columns of the snapshot table, as is a ``BINARY`` column whose
-first inserted source carries the engine's ``geom_shape`` metadata (the
-alignment of an INSERT source keeps it).  The table's manifest records them
-(``geometry_columns``) with each data file's shape class (``file_shapes``:
-``points`` or ``general``; a file without one reads as ``general``), and
-every data file stores each geometry's envelope as a hidden ``<geo>_env``
-struct.  Each commit is read once (``SnapshotTable.scan``): the registered
-view is that frame projected to the table's columns, so ``SELECT *``,
-DESCRIBE, ``t.files`` and ``changes`` never show an envelope, and the
-envelope-carrying frame itself is kept for the spatial planner
-(:func:`snapshot_frame`), which pushes range predicates into its scan.
+first inserted source carries ``geom_shape`` metadata (INSERT alignment
+keeps it); their stored envelopes and per-file shape classes are
+``operators.snapshots``'.  A table's view is its commit's frame without the
+hidden envelopes; the envelope-carrying frame is kept for the spatial
+planner (:func:`snapshot_frame`), which pushes range predicates into its
+scan.
 """
 
 from __future__ import annotations
 
 import os
 import re
+import shutil
 import tempfile
+from datetime import datetime, timezone
 from typing import Dict, List, Optional, Tuple
 
+from pyspark.errors import AnalysisException, ParseException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from . import dml, sqltree as T
 from .snapshots import SnapshotTable
+
 
 def _state(spark: Optional[SparkSession] = None) -> dict:
     """Per-session DDL state: ``{"catalog": {name: SnapshotTable},
@@ -62,6 +73,12 @@ def _state(spark: Optional[SparkSession] = None) -> dict:
 
 def _catalog(spark: Optional[SparkSession] = None) -> Dict[str, SnapshotTable]:
     return _state(spark)["catalog"]
+
+
+def _lookup(spark: SparkSession, name: str) -> Optional[str]:
+    """The catalog's spelling of table ``name`` (Spark identifiers are
+    case-insensitive), None when it has no such table."""
+    return next((n for n in _catalog(spark) if n.lower() == name.lower()), None)
 
 
 def iceberg_runtime_configured(extensions: str, conf: Dict[str, str]) -> bool:
@@ -88,28 +105,15 @@ def delegate_to_iceberg(spark: SparkSession) -> bool:
         return False
     cached = getattr(spark, "_graft_iceberg_delegate", None)
     if cached is None:
-        try:
-            exts = spark.conf.get("spark.sql.extensions", "") or ""
-        except Exception:
-            exts = ""
-        try:
-            conf = dict(spark.sparkContext.getConf().getAll())
-        except Exception:
-            conf = {}
-        cached = iceberg_runtime_configured(exts, conf)
+        cached = iceberg_runtime_configured(
+            spark.conf.get("spark.sql.extensions", "") or "",
+            dict(spark.sparkContext.getConf().getAll()))
         spark._graft_iceberg_delegate = cached
     return cached
 
-_ALTER_ADD_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<name>[\w.]+)\s+ADD\s+COLUMNS?\s*"
-    r"\(?\s*(?P<cols>[^()]+?)\s*\)?\s*$", re.IGNORECASE | re.DOTALL)
-_ALTER_RENAME_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<name>[\w.]+)\s+RENAME\s+COLUMN\s+"
-    r"(?P<old>\w+)\s+TO\s+(?P<new>\w+)\s*$", re.IGNORECASE)
-_ALTER_DROP_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<name>[\w.]+)\s+DROP\s+COLUMNS?\s*"
-    r"\(?\s*(?P<cols>[\w\s,]+?)\s*\)?\s*$", re.IGNORECASE)
 
+# Iceberg's SQL-extension grammar, which Spark's parser lacks: tried only
+# after the parser rejects a statement
 _ALTER_ADD_PART_RE = re.compile(
     r"^\s*ALTER\s+TABLE\s+(?P<name>[\w.]+)\s+ADD\s+PARTITION\s+FIELD\s+"
     r"(?P<field>.+?)\s*$", re.IGNORECASE)
@@ -118,34 +122,6 @@ _ALTER_REF_RE = re.compile(
     r"^\s*ALTER\s+TABLE\s+(?P<name>[\w.]+)\s+"
     r"(?P<op>CREATE|DROP)\s+(?P<kind>BRANCH|TAG)\s+(?P<ref>\w+)"
     r"(?:\s+AS\s+OF\s+VERSION\s+(?P<v>\d+))?\s*$", re.IGNORECASE)
-
-_CALL_RE = re.compile(
-    r"^\s*CALL\s+(?:[\w.]*\bsystem\.)?(?P<proc>\w+)\s*\((?P<args>.*)\)\s*$",
-    re.IGNORECASE | re.DOTALL)
-
-_CREATE_RE = re.compile(
-    r"^\s*CREATE\s+TABLE\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?P<name>[\w.]+)\s*"
-    r"\((?P<cols>.*)\)\s*USING\s+ICEBERG\s*$",
-    re.IGNORECASE | re.DOTALL)
-_CTAS_RE = re.compile(
-    r"^\s*CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(?P<name>[\w.]+)\s+"
-    r"USING\s+ICEBERG\s+AS\s+(?P<select>.+)$",
-    re.IGNORECASE | re.DOTALL)
-_DROP_RE = re.compile(
-    r"^\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?(?P<name>[\w.]+)\s*$",
-    re.IGNORECASE)
-_INSERT_RE = re.compile(
-    r"^\s*INSERT\s+(?:INTO|(?P<ow>OVERWRITE)(?:\s+TABLE)?)\s+(?P<name>[\w.]+)"
-    r"\s+(?P<body>(?:VALUES|SELECT)\b.+)$",
-    re.IGNORECASE | re.DOTALL)
-_CACHE_RE = re.compile(
-    r"^\s*(?P<un>UN)?CACHE\s+TABLE\s+(?P<name>[\w.]+)\s*$", re.IGNORECASE)
-
-_DML_TARGET_RES = (
-    re.compile(r"^\s*UPDATE\s+(?P<name>[\w.]+)\b", re.IGNORECASE),
-    re.compile(r"^\s*DELETE\s+FROM\s+(?P<name>[\w.]+)\b", re.IGNORECASE),
-    re.compile(r"^\s*MERGE\s+INTO\s+(?P<name>[\w.]+)\b", re.IGNORECASE),
-)
 
 
 def _view_name(name: str) -> str:
@@ -200,165 +176,63 @@ def snapshot_frame(spark: SparkSession, view: str):
     return ent["frame"], ent["hidden"]
 
 
-def _split_top(s: str, sep: str = ",") -> list:
-    parts, depth, start = [], 0, 0
-    for i, c in enumerate(s):
-        if c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif c == sep and depth == 0:
-            parts.append(s[start:i].strip())
-            start = i + 1
-    parts.append(s[start:].strip())
-    return [p for p in parts if p]
-
-
-def _schema_ddl(cols: str) -> Tuple[str, List[str]]:
-    """Column list of a CREATE statement → (Spark DDL schema string, the
-    GEOMETRY columns); GEOMETRY becomes BINARY (the engine's WKB
-    representation)."""
-    out, geo = [], []
-    for c in _split_top(cols):
-        m = re.match(r"^(\w+)\s+(.+)$", c.strip(), re.DOTALL)
-        if not m:
-            raise ValueError(f"unparseable column definition {c!r}")
-        typ = m.group(2).strip()
-        if typ.upper() == "GEOMETRY":
-            typ = "BINARY"
-            geo.append(m.group(1))
-        out.append(f"{m.group(1)} {typ}")
-    return ", ".join(out), geo
-
-
-def _align(df: DataFrame, spark: SparkSession, name: str) -> DataFrame:
-    """Positionally align an insert source to the table schema (names and
-    types), the way SQL INSERT resolves columns.  The schema is the
-    registered view's; a source column's metadata (``geom_shape``) is kept,
-    which is how a ``BINARY`` column learns it holds geometry."""
+def _align(df: DataFrame, spark: SparkSession, name: str,
+           columns: Optional[List[str]] = None) -> DataFrame:
+    """Align an insert source to the table schema (names and types) the way
+    SQL INSERT resolves columns: by position, or by name through an INSERT
+    column list (a table column it leaves out reads NULL).  The schema is
+    the registered view's; a source column's metadata (``geom_shape``) is
+    kept, which is how a ``BINARY`` column learns it holds geometry."""
     schema = _state(spark)["views"][_view_name(name).lower()]["schema"]
-    if len(df.columns) != len(schema):
-        raise ValueError(
-            f"INSERT column count {len(df.columns)} != table arity {len(schema)}")
+    names = columns or schema.fieldNames()
+    if len(df.columns) != len(names):
+        raise ValueError(f"INSERT column count {len(df.columns)} != "
+                         f"{'column list' if columns else 'table'} arity "
+                         f"{len(names)}")
     # by position: a VALUES source may repeat a column name (``0.0, 0.0``)
-    df = df.toDF(*[f"_c{i}" for i in range(len(schema))])
+    df = df.toDF(*[f"_c{i}" for i in range(len(names))])
+    src = {n.lower(): f for n, f in zip(names, df.schema.fields)}
+    unknown = set(src) - {n.lower() for n in schema.fieldNames()}
+    if unknown:
+        raise ValueError(f"INSERT names unknown column(s) {sorted(unknown)}")
     return df.select(*[
-        F.col(s.name).cast(f.dataType).alias(f.name, metadata=s.metadata or None)
-        for s, f in zip(df.schema.fields, schema.fields)])
-
-
-def _values_to_select(body: str) -> str:
-    """``VALUES (a, b), (c, d)`` → ``SELECT a, b UNION ALL SELECT c, d``.
-    Spark's inline VALUES requires foldable expressions; the reference
-    inserts UDF calls (``IcebergSTGeomFromText('POINT ...')``,
-    App.scala:46-52), which a SELECT evaluates fine."""
-    rest = body[len("VALUES"):].strip()
-    selects = []
-    i, n = 0, len(rest)
-    while i < n:
-        c = rest[i]
-        if c == "'":
-            # skip string literal (SQL escapes ' as '' — each pair re-opens)
-            i += 1
-            while i < n and rest[i] != "'":
-                i += 1
-            i += 1
-        elif c == "(":
-            depth, j = 1, i + 1
-            while j < n and depth:
-                cj = rest[j]
-                if cj == "'":
-                    j += 1
-                    while j < n and rest[j] != "'":
-                        j += 1
-                elif cj == "(":
-                    depth += 1
-                elif cj == ")":
-                    depth -= 1
-                j += 1
-            if depth:
-                raise ValueError("unbalanced VALUES tuple")
-            selects.append("SELECT " + rest[i + 1:j - 1])
-            i = j
-        else:
-            i += 1
-    if not selects:
-        raise ValueError("empty VALUES list")
-    return " UNION ALL ".join(selects)
-
-
-def dml_target(statement: str,
-               spark: Optional[SparkSession] = None) -> Optional[str]:
-    """Catalog table name targeted by an UPDATE/DELETE/MERGE, if any."""
-    cat = _catalog(spark)
-    for rx in _DML_TARGET_RES:
-        m = rx.match(statement)
-        if m and m.group("name") in cat:
-            return m.group("name")
-    return None
+        F.col(src[f.name.lower()].name).cast(f.dataType).alias(
+            f.name, metadata=src[f.name.lower()].metadata or None)
+        if f.name.lower() in src else F.lit(None).cast(f.dataType).alias(f.name)
+        for f in schema.fields])
 
 
 def table(name: str, spark: Optional[SparkSession] = None) -> SnapshotTable:
     return _catalog(spark)[name]
 
 
-def is_ddl(statement: str) -> bool:
-    return any(rx.match(statement) for rx in
-               (_CTAS_RE, _CREATE_RE, _DROP_RE, _INSERT_RE, _CACHE_RE,
-                _ALTER_ADD_RE, _ALTER_RENAME_RE, _ALTER_DROP_RE,
-                _ALTER_ADD_PART_RE, _ALTER_REF_RE, _CALL_RE))
+def _column(expr) -> Optional[str]:
+    ref = T.attribute(expr)
+    return ref[0] if ref and len(ref) == 1 else None
 
 
-def _call_arg(s: str):
-    s = s.strip()
-    if s.startswith("'") and s.endswith("'"):
-        return s[1:-1]
-    try:
-        return int(s)
-    except ValueError:
-        return s
+def _partition_field(spark: SparkSession, field: str) -> Tuple[str, str]:
+    """(source column, transform) of an Iceberg partition field: ``col``,
+    ``bucket(N, col)``, ``truncate(W, col)``, ``year|month|day(col)``."""
+    expr = T.parse(spark, field, expression=True)
+    if _column(expr):
+        return _column(expr), "identity"
+    fn, args = T.call(expr) or (None, [])
+    if fn in ("bucket", "truncate") and len(args) == 2 \
+            and args[0].nodeName() == "Literal" and _column(args[1]):
+        return _column(args[1]), f"{fn}[{T.literal(args[0])}]"
+    if fn and fn.rstrip("s") in ("year", "month", "day") and len(args) == 1 \
+            and _column(args[0]):
+        return _column(args[0]), fn.rstrip("s")
+    raise ValueError(f"unsupported partition field {field!r}")
 
 
-def _parse_call_args(argstr: str):
-    """Iceberg procedure argument syntax: positional and/or
-    ``name => value`` named arguments."""
-    pos, named = [], {}
-    for part in _split_top(argstr):
-        if "=>" in part:
-            k, v = part.split("=>", 1)
-            named[k.strip().lower()] = _call_arg(v)
-        else:
-            pos.append(_call_arg(part))
-    return pos, named
-
-
-def show_tables(spark: SparkSession) -> DataFrame:
-    """``SHOW TABLES`` over the snapshot catalog — Spark's result shape
-    (namespace, tableName, isTemporary), with dotted catalog names split
-    into their namespace and table parts."""
-    rows = []
-    for name in sorted(_catalog(spark)):
-        ns, _, tbl = name.rpartition(".")
-        rows.append((ns, tbl, False))
-    return spark.createDataFrame(
-        rows, "namespace string, tableName string, isTemporary boolean")
-
-
-def describe_table(spark: SparkSession, name: str) -> DataFrame:
-    """``DESCRIBE TABLE t`` over the snapshot catalog — Spark's result
-    shape (col_name, data_type, comment), resolved from the table's
-    CURRENT logical schema (post-ALTER evolution); the active partition
-    spec follows Spark's "# Partition Information" section convention."""
-    tbl = _catalog(spark)[name]
-    schema = _state(spark)["views"][_view_name(name).lower()]["schema"]
-    rows = [(f.name, f.dataType.simpleString(), None) for f in schema.fields]
-    spec = tbl.partition_spec()
-    if spec:
-        rows.append(("# Partition Information", "", None))
-        for fld in spec:
-            rows.append((fld["name"], fld["transform"], None))
-    return spark.createDataFrame(
-        rows, "col_name string, data_type string, comment string")
+# procedures that move the table to a snapshot: (its argument, the move)
+_MOVES = {"rollback_to_snapshot": ("to_snapshot_id", SnapshotTable.rollback),
+          "set_current_snapshot": ("snapshot_id", SnapshotTable.set_current),
+          "cherrypick_snapshot": ("snapshot_id", SnapshotTable.cherrypick)}
+_PROCEDURES = (*_MOVES, "expire_snapshots", "remove_orphan_files",
+               "rewrite_data_files", "fast_forward")
 
 
 def run_procedure(spark: SparkSession, proc: str, pos: list,
@@ -367,390 +241,401 @@ def run_procedure(spark: SparkSession, proc: str, pos: list,
     SparkProcedures surface) over the snapshot layer: rollback_to_snapshot,
     expire_snapshots, rewrite_data_files (binpack default; ``strategy =>
     'sort', sort_order => 'zorder(a, b)'`` routes to the Z-order rewrite),
-    set_current_snapshot, cherrypick_snapshot, remove_orphan_files."""
+    set_current_snapshot, cherrypick_snapshot, remove_orphan_files,
+    fast_forward."""
+    if proc not in _PROCEDURES:
+        raise ValueError(f"unknown procedure {proc!r} (supported: "
+                         f"{', '.join(_PROCEDURES)})")
     name = named.get("table") or (pos[0] if pos else None)
     if name is None:
         raise ValueError(f"CALL {proc}: missing table argument")
+    name = _lookup(spark, str(name)) or name
     tbl = _catalog(spark)[name]
-    if proc == "rollback_to_snapshot":
-        v = named.get("to_snapshot_id")
-        if v is None:
-            v = pos[1] if len(pos) > 1 else None
-        if v is None:
-            raise ValueError("rollback_to_snapshot needs to_snapshot_id")
-        newv = tbl.rollback(int(v))
-        _register(spark, name)
-        return {"proc": proc, "table": name, "version": newv}
+
+    def arg(key, i, default=None):
+        return named.get(key, pos[i] if len(pos) > i else default)
+
+    out = {"proc": proc, "table": name}
     if proc == "expire_snapshots":
-        keep = named.get("retain_last",
-                         pos[1] if len(pos) > 1 else 2)
-        res = tbl.expire(int(keep))
-        return {"proc": proc, "table": name, **res}
-    if proc == "rewrite_data_files":
-        order = str(named.get("sort_order", ""))
-        zm = re.match(r"^\s*zorder\s*\(([\w\s,]+)\)\s*$", order,
-                      re.IGNORECASE)
-        if str(named.get("strategy", "")).lower() == "sort" and zm:
-            cols = [c.strip() for c in zm.group(1).split(",")]
-            res = tbl.rewrite_zorder(spark, cols)
-        else:
-            target = int(named.get("target_file_size_bytes",
-                                   128 * 1024 * 1024))
-            res = tbl.compact(spark, target_file_bytes=target)
-        _register(spark, name)
-        return {"proc": proc, "table": name, **res}
-    if proc == "set_current_snapshot":
-        v = named.get("snapshot_id")
-        if v is None:
-            v = pos[1] if len(pos) > 1 else None
-        if v is None:
-            raise ValueError("set_current_snapshot needs snapshot_id")
-        newv = tbl.set_current(int(v))
-        _register(spark, name)
-        return {"proc": proc, "table": name, "version": newv}
-    if proc == "cherrypick_snapshot":
-        v = named.get("snapshot_id")
-        if v is None:
-            v = pos[1] if len(pos) > 1 else None
-        if v is None:
-            raise ValueError("cherrypick_snapshot needs snapshot_id")
-        newv = tbl.cherrypick(int(v))
-        _register(spark, name)
-        return {"proc": proc, "table": name, "version": newv}
+        return {**out, **tbl.expire(int(arg("retain_last", 1, 2)))}
     if proc == "remove_orphan_files":
         grace = named.get("older_than_seconds")
-        if grace is None:
-            res = tbl.remove_orphans()
+        return {**out, **tbl.remove_orphans(**(
+            {} if grace is None else {"older_than_seconds": float(grace)}))}
+    if proc in _MOVES:
+        key, move = _MOVES[proc]
+        if arg(key, 1) is None:
+            raise ValueError(f"{proc} needs {key}")
+        out["version"] = move(tbl, int(arg(key, 1)))
+    elif proc == "rewrite_data_files":
+        if str(named.get("strategy", "")).lower() == "sort":
+            order = str(named.get("sort_order", ""))
+            fn, args = T.call(T.parse(spark, order, expression=True)) or ("", [])
+            cols = [_column(a) for a in args]
+            if fn != "zorder" or not cols or None in cols:
+                raise ValueError(f"unsupported sort_order {order!r} (this "
+                                 "engine sorts by zorder(col, ...))")
+            out.update(tbl.rewrite_zorder(spark, cols))
         else:
-            res = tbl.remove_orphans(older_than_seconds=float(grace))
-        return {"proc": proc, "table": name, **res}
-    if proc == "fast_forward":
-        branch = named.get("branch", pos[1] if len(pos) > 1 else None)
-        to = named.get("to", pos[2] if len(pos) > 2 else None)
+            out.update(tbl.compact(spark, target_file_bytes=int(named.get(
+                "target_file_size_bytes", 128 * 1024 * 1024))))
+    else:
+        branch, to = arg("branch", 1), arg("to", 2)
         if branch is None or to is None:
             raise ValueError("fast_forward needs branch and to")
-        v = tbl.fast_forward(str(branch), str(to))
-        _register(spark, name)
-        return {"proc": proc, "table": name, "branch": branch,
-                "version": v}
-    raise ValueError(f"unknown procedure {proc!r} (supported: "
-                     "rollback_to_snapshot, expire_snapshots, "
-                     "rewrite_data_files, set_current_snapshot, "
-                     "cherrypick_snapshot, remove_orphan_files, "
-                     "fast_forward)")
+        out.update(branch=branch, version=tbl.fast_forward(str(branch), str(to)))
+    _register(spark, name)
+    return out
 
 
-def run_ddl(spark: SparkSession, statement: str,
-            run_select=None) -> dict:
-    """Execute one DDL statement against the snapshot-table warehouse.
-    ``run_select``: callable used for embedded SELECTs (the session front
-    door passes ``spatial_sql`` so CTAS joins get the planner upgrade)."""
-    run_select = run_select or (lambda sp, s: sp.sql(s))
+class Statement:
+    """One statement as Spark's parser reads it.  ``sql`` is the text with
+    each bare ``GEOMETRY`` column type spliced to ``BINARY`` at the span the
+    parser's ``UNSUPPORTED_DATATYPE`` error gives (``geometry``: those
+    offsets); the spans of ``tree`` index ``sql``.  ``original`` is the text
+    as written; ``tables`` maps plain parquet table names to paths (DML)."""
 
-    m = _CTAS_RE.match(statement)
-    if m and not _CREATE_RE.match(statement):
-        name = m.group("name")
-        df = run_select(spark, resolve_names(m.group("select").strip(), spark))
-        path = os.path.join(_warehouse(spark), _view_name(name))
-        _catalog(spark)[name] = SnapshotTable.create(spark, path, df)
-        _register(spark, name)
-        return {"ddl": "ctas", "table": name, "rows": df.count()}
-
-    m = _CREATE_RE.match(statement)
-    if m:
-        name = m.group("name")
-        if name in _catalog(spark):
-            if not m.group("ine"):
-                # Spark/Iceberg raise TABLE_ALREADY_EXISTS for a plain
-                # CREATE TABLE — a silent no-op would keep stale data
-                raise ValueError(
-                    f"[TABLE_OR_VIEW_ALREADY_EXISTS] Cannot create table "
-                    f"{name} because it already exists. Use CREATE TABLE "
-                    f"IF NOT EXISTS to tolerate a pre-existing table.")
-            return {"ddl": "create", "table": name, "existed": True}
-        schema, geo = _schema_ddl(m.group("cols"))
-        empty = spark.createDataFrame([], schema)
-        path = os.path.join(_warehouse(spark), _view_name(name))
-        _catalog(spark)[name] = SnapshotTable.create(spark, path, empty,
-                                                     geometry=geo)
-        _register(spark, name)
-        return {"ddl": "create", "table": name, "existed": False}
-
-    m = _DROP_RE.match(statement)
-    if m:
-        name = m.group("name")
-        tbl = _catalog(spark).pop(name, None)
-        if tbl is not None:
-            spark.catalog.dropTempView(_view_name(name))
-            _state(spark)["views"].pop(_view_name(name).lower(), None)
-        else:
-            # a real Spark-managed table may own the name (the statement
-            # carries IF EXISTS semantics itself)
+    def __init__(self, spark: SparkSession, original: str,
+                 tables: Optional[Dict[str, str]] = None):
+        self.spark, self.original, self.tables = spark, original, tables or {}
+        self.sql, self.geometry = original, []
+        while True:
             try:
-                spark.sql(statement)
-            except Exception:
-                pass
-        return {"ddl": "drop", "table": name, "existed": tbl is not None}
+                self.tree = T.parse(spark, self.sql)
+                return
+            except ParseException as e:
+                ctx = e.getQueryContext()
+                if e.getCondition() != "UNSUPPORTED_DATATYPE" or not ctx \
+                        or ctx[0].fragment().upper() != "GEOMETRY":
+                    raise
+                start = ctx[0].startIndex()
+                self.sql = (self.sql[:start] + "BINARY"
+                            + self.sql[ctx[0].stopIndex() + 1:])
+                self.geometry.append(start)
 
-    m = _INSERT_RE.match(statement)
-    if m:
-        name = m.group("name")
-        if name not in _catalog(spark):
-            # not a catalog table — a real Spark-managed table may own the
-            # name; delegate the statement unchanged
-            spark.sql(statement)
-            return {"ddl": "insert", "table": name, "delegated": True}
-        body = resolve_names(m.group("body").strip(), spark)
-        if body.upper().startswith("VALUES"):
-            src = spark.sql(_values_to_select(body))
+    def declares_geometry(self, node) -> bool:
+        start, stop = T.span(node)
+        return any(start <= g < stop for g in self.geometry)
+
+    def table(self, node) -> Tuple[str, Optional[str]]:
+        """(dotted name, catalog name or None) of a name-carrying node."""
+        name = ".".join(T.parts(node))
+        return name, _lookup(self.spark, name)
+
+    def select(self, node) -> DataFrame:
+        """A query node's rows, through the spatial join planner."""
+        from .sql_join import spatial_sql
+
+        start, stop = T.query_span(node)
+        return spatial_sql(self.spark,
+                           T.splice(self.sql, self.edits(node), start, stop))
+
+    def edits(self, node) -> List[Tuple[int, int, str]]:
+        """Splices for the relations under ``node`` naming catalog tables."""
+        low, out = self.sql.lower(), []
+        if any(n.rpartition(".")[2].lower() in low
+               for n in _catalog(self.spark)):
+            self._relations(node, out)
+        return out
+
+    def _relations(self, node, out: list) -> None:
+        kind = node.nodeName()
+        if kind == "UnresolvedRelation":
+            view = self._view(T.parts(node))
+            if view:
+                out.append((*T.span(node), view))
+        elif kind == "RelationTimeTravel":
+            _, name = self.table(node.relation())
+            if name:
+                out.append((T.span(node.relation())[0], T.span(node)[1],
+                            self._travel(name, node)))
+        else:   # CTE definitions are inner children, subqueries expressions
+            for sub in (T.seq(node.children()) + T.seq(node.innerChildren())
+                        + T.seq(node.subqueries())):
+                self._relations(sub, out)
+
+    def _view(self, parts: List[str]) -> Optional[str]:
+        """A dotted catalog table's view, or its ``history``/``files``
+        metadata table registered on demand; None: no rewrite."""
+        name = _lookup(self.spark, ".".join(parts))
+        if name is not None:
+            return _view_name(name) if "." in name else None
+        meta = parts[-1].lower()
+        base = _lookup(self.spark, ".".join(parts[:-1])) \
+            if len(parts) > 1 and meta in ("history", "files") else None
+        if base is None:
+            return None
+        tbl, view = _catalog(self.spark)[base], f"{_view_name(base)}__{meta}"
+        (tbl.history_df if meta == "history" else tbl.files_df)(
+            self.spark).createOrReplaceTempView(view)
+        return view
+
+    def _travel(self, name: str, node) -> str:
+        """The view of the snapshot ``VERSION AS OF <n|'ref'>`` or
+        ``TIMESTAMP AS OF '<ts>'`` selects, registered on demand."""
+        tbl = _catalog(self.spark)[name]
+        if node.version().isDefined():
+            ref = str(node.version().get())
+            v = int(ref) if ref.isdigit() else tbl.resolve_ref(ref)
+            if v is None:
+                raise ValueError(f"unknown branch/tag {ref!r} on {name!r}")
         else:
-            src = run_select(spark, body)
-        tbl = _catalog(spark)[name]
-        aligned = _align(src, spark, name)
-        if m.group("ow"):
-            tbl.overwrite(spark, aligned)
-        else:
-            tbl.append(spark, aligned)
-        _register(spark, name)
-        return {"ddl": "insert_overwrite" if m.group("ow") else "insert",
-                "table": name, "version": tbl.versions()[-1]}
-
-    m = _CACHE_RE.match(statement)
-    if m:
-        name = m.group("name")
-        view = _view_name(name) if name in _catalog(spark) else name
-        if m.group("un"):
-            spark.catalog.uncacheTable(view)
-        else:
-            spark.catalog.cacheTable(view)
-        return {"ddl": "uncache" if m.group("un") else "cache", "table": name}
-
-    m = _CALL_RE.match(statement)
-    if m:
-        pos, named = _parse_call_args(m.group("args"))
-        target = named.get("table") or (pos[0] if pos else None)
-        if target not in _catalog(spark):
-            # not a catalog table — a real Iceberg runtime may own it
-            spark.sql(statement)
-            return {"proc": m.group("proc").lower(), "delegated": True}
-        return run_procedure(spark, m.group("proc").lower(), pos, named)
-
-    m = _ALTER_REF_RE.match(statement)
-    if m:
-        name = m.group("name")
-        if name not in _catalog(spark):
-            spark.sql(statement)
-            return {"ddl": "alter_ref", "table": name, "delegated": True}
-        tbl = _catalog(spark)[name]
-        kind = m.group("kind").lower()
-        ref = m.group("ref")
-        if m.group("op").upper() == "CREATE":
-            v = tbl.create_ref(ref, kind,
-                               int(m.group("v")) if m.group("v") else None)
-            return {"ddl": "alter_ref", "table": name, "op": "create",
-                    "kind": kind, "ref": ref, "version": v}
-        tbl.drop_ref(ref, kind=kind)
-        return {"ddl": "alter_ref", "table": name, "op": "drop",
-                "kind": kind, "ref": ref}
-
-    m = _ALTER_ADD_PART_RE.match(statement)
-    if m:
-        name = m.group("name")
-        if name not in _catalog(spark):
-            spark.sql(statement)
-            return {"ddl": "alter_partition", "table": name,
-                    "delegated": True}
-        tbl = _catalog(spark)[name]
-        fld = m.group("field").strip()
-        fm = re.match(r"^(?i:bucket)\s*\(\s*(\d+)\s*,\s*(\w+)\s*\)$", fld)
-        if fm:
-            v = tbl.add_partition_field(fm.group(2), f"bucket[{fm.group(1)}]")
-        else:
-            fm = re.match(r"^(?i:truncate)\s*\(\s*(\d+)\s*,\s*(\w+)\s*\)$",
-                          fld)
-            if fm:
-                v = tbl.add_partition_field(fm.group(2),
-                                            f"truncate[{fm.group(1)}]")
-            else:
-                fm = re.match(r"^(?i:years?|months?|days?)\s*\(\s*(\w+)\s*\)$",
-                              fld)
-                if fm:
-                    tr = fld.split("(")[0].strip().lower().rstrip("s")
-                    v = tbl.add_partition_field(fm.group(1), tr)
-                elif re.match(r"^\w+$", fld):
-                    v = tbl.add_partition_field(fld, "identity")
-                else:
-                    raise ValueError(f"unsupported partition field {fld!r}")
-        _register(spark, name)
-        return {"ddl": "alter_partition", "table": name, "version": v}
-
-    for rx, kind in ((_ALTER_RENAME_RE, "rename"), (_ALTER_DROP_RE, "drop"),
-                     (_ALTER_ADD_RE, "add")):
-        m = rx.match(statement)
-        if not m:
-            continue
-        name = m.group("name")
-        if name not in _catalog(spark):
-            # a real Spark-managed table may own the name — delegate
-            spark.sql(statement)
-            return {"ddl": "alter", "table": name, "delegated": True}
-        tbl = _catalog(spark)[name]
-        if kind == "rename":
-            v = tbl.rename_column(spark, m.group("old"), m.group("new"))
-        elif kind == "drop":
-            for c in _split_top(m.group("cols")):
-                v = tbl.drop_column(spark, c.strip())
-        else:
-            for c in _split_top(m.group("cols")):
-                cm = re.match(r"^(\w+)\s+(.+)$", c.strip(), re.DOTALL)
-                if not cm:
-                    raise ValueError(f"unparseable column definition {c!r}")
-                typ = cm.group(2).strip()
-                v = tbl.add_column(spark, cm.group(1),
-                                   "BINARY" if typ.upper() == "GEOMETRY"
-                                   else typ)
-        _register(spark, name)
-        return {"ddl": f"alter_{kind}", "table": name,
-                "version": tbl.versions()[-1]}
-
-    raise ValueError(f"not a DDL statement: {statement[:80]!r}")
+            ts = str(T.literal(node.timestamp().get()))
+            dt = datetime.fromisoformat(ts)
+            if dt.tzinfo is None:
+                dt = dt.replace(tzinfo=timezone.utc)
+            eligible = [h["version"] for h in tbl.history()
+                        if h["timestamp_ms"] <= dt.timestamp() * 1000]
+            if not eligible:
+                raise ValueError(f"no snapshot of {name!r} at or before {ts!r}")
+            v = max(eligible)
+        view = f"{_view_name(name)}__v{v}"
+        _publish(self.spark, view, tbl, v)
+        return view
 
 
-def run_catalog_dml(spark: SparkSession, statement: str) -> Optional[dict]:
-    """Route UPDATE/DELETE/MERGE that target a catalog table through the
-    snapshot table's versioned CoW DML (keeps time travel across the DML);
-    None when the target isn't a catalog table."""
-    name = dml_target(statement, spark)
-    if name is None:
-        return None
-    from .dml import _DELETE_RE, _MERGE_RE, _UPDATE_RE, _split_assignments
+# The handlers below return None for a statement naming no catalog table:
+# the front door runs it on Spark as written.
 
-    tbl = _catalog(spark)[name]
-    res = None
-    m = _UPDATE_RE.match(statement)
-    if m:
-        res = tbl.update_where(spark, _split_assignments(m.group("set")),
-                               m.group("w").strip())
-    if res is None:
-        m = _DELETE_RE.match(statement)
-        if m:
-            res = tbl.delete_where(spark, m.group("w").strip())
-    if res is None:
-        m = _MERGE_RE.match(statement)
-        if m:
-            set_clause = (m.group("set") or "").strip()
-            update_cols = None if set_clause in ("*", "") else [
-                p.split("=", 1)[0].strip().strip("`")
-                for p in set_clause.split(",")]
-            src_name = m.group("s")
-            if src_name in _catalog(spark):
-                src_name = _view_name(src_name)
-            res = tbl.merge_into(
-                spark, spark.table(src_name), on=m.group("k1"),
-                update_cols=update_cols,
-                insert_when_not_matched=bool(m.group("ins")))
-    if res is not None:
-        _register(spark, name)
+def run_query(spark: SparkSession, st: Statement):
+    """Any other statement: Spark's, with its catalog relations spliced to
+    their views, through the spatial join planner."""
+    from .sql_join import spatial_sql
+
+    if st.geometry:
+        return spark.sql(st.original)   # Spark reports the GEOMETRY type
+    edits = st.edits(st.tree)
+    if edits:
+        return spatial_sql(spark, T.splice(st.sql, edits))
+    return spatial_sql(spark, st.sql, st.tree)
+
+
+def _create(spark: SparkSession, st: Statement):
+    tree = st.tree
+    provider = tree.tableSpec().provider()
+    if not (provider.isDefined() and provider.get().lower() == "iceberg"):
+        return run_query(spark, st)
+    ctas = tree.nodeName() == "CreateTableAsSelect"
+    kind = "ctas" if ctas else "create"
+    name, known = st.table(tree.name())
+    if known is not None:
+        if not tree.ignoreIfExists():
+            # Spark/Iceberg raise TABLE_ALREADY_EXISTS for a plain CREATE
+            # TABLE — a silent no-op would keep stale data
+            raise ValueError(
+                f"[TABLE_OR_VIEW_ALREADY_EXISTS] Cannot create table {known} "
+                "because it already exists. Use CREATE TABLE IF NOT EXISTS "
+                "to tolerate a pre-existing table.")
+        return {"ddl": kind, "table": known, "existed": True}
+    if tree.partitioning().size():
+        raise ValueError("CREATE TABLE … PARTITIONED BY is not supported; "
+                         "use ALTER TABLE … ADD PARTITION FIELD")
+    path = os.path.join(_warehouse(spark), _view_name(name))
+    if ctas:
+        df = st.select(tree.query())
+        _catalog(spark)[name] = SnapshotTable.create(spark, path, df)
+        res = {"ddl": kind, "table": name, "rows": df.count()}
+    else:
+        cols = T.seq(tree.columns())
+        empty = spark.createDataFrame([], ", ".join(
+            f"`{c.name()}` {c.dataType().sql()}" for c in cols))
+        _catalog(spark)[name] = SnapshotTable.create(
+            spark, path, empty,
+            geometry=[c.name() for c in cols if st.declares_geometry(c)])
+        res = {"ddl": kind, "table": name, "existed": False}
+    _register(spark, name)
     return res
 
 
-def resolve_names(statement: str,
-                  spark: Optional[SparkSession] = None) -> str:
-    """Replace dotted catalog-table identifiers (``demo.db.t`` — the
-    reference test suite's spelling, TestSedonaIcebergExtension.scala:53+)
-    with their registered view names; Spark would otherwise resolve the
-    dots against a real catalog.  Undotted names already match their view
-    name and need nothing.  String literals are left untouched (a table
-    name occurring inside quoted data must not be rewritten)."""
-    cat = _catalog(spark)
-    parts = re.split(r"('(?:[^']|'')*')", statement)
-    for idx in range(0, len(parts), 2):   # even indices = outside literals
-        seg = parts[idx]
-        for name in sorted(cat, key=len, reverse=True):
-            if "." in name and name in seg:
-                seg = re.sub(rf"(?<![\w.]){re.escape(name)}(?![\w.])",
-                             _view_name(name), seg)
-        parts[idx] = seg
-    return "".join(parts)
+def _drop(spark: SparkSession, st: Statement):
+    """PURGE also deletes the table's files."""
+    name, known = st.table(st.tree.child())
+    if known is None:
+        if not st.tree.ifExists():
+            return None
+        try:
+            if spark.catalog.tableExists(name):
+                return None
+        except AnalysisException:
+            pass        # a name no Spark catalog can hold (``demo.db.t``)
+        return {"ddl": "drop", "table": name, "existed": False}
+    tbl = _catalog(spark).pop(known)
+    spark.catalog.dropTempView(_view_name(known))
+    _state(spark)["views"].pop(_view_name(known).lower(), None)
+    if st.tree.purge():
+        shutil.rmtree(tbl.path, ignore_errors=True)
+    return {"ddl": "drop", "table": known, "existed": True}
 
 
-def rewrite_metadata_tables(spark: SparkSession, statement: str) -> str:
-    """Iceberg's metadata-table spellings over catalog tables:
-    ``SELECT * FROM t.history`` / ``FROM t.files`` resolve to the snapshot
-    layer's history/files DataFrames, registered as views on demand."""
-    for name, tbl in list(_catalog(spark).items()):
-        for meta in ("history", "files"):
-            ref = rf"(?<![\w.]){re.escape(name)}\.{meta}(?![\w.])"
-            if re.search(ref, statement):
-                view = f"{_view_name(name)}__{meta}"
-                df = (tbl.history_df(spark) if meta == "history"
-                      else tbl.files_df(spark))
-                df.createOrReplaceTempView(view)
-                statement = re.sub(ref, view, statement)
-    return statement
+def _insert(spark: SparkSession, st: Statement):
+    """``INSERT INTO|OVERWRITE t [(cols)|BY NAME] VALUES …|<query>``."""
+    tree = st.tree
+    _, known = st.table(tree.table())
+    if known is None:
+        return None
+    if tree.partitionSpec().size():
+        raise ValueError("INSERT … PARTITION (…) is not supported: the "
+                         "table's partition spec places the rows")
+    query = tree.query()
+    if query.nodeName() == "UnresolvedInlineTable":
+        # an inline table cannot evaluate a Python UDF (the reference
+        # inserts IcebergSTGeomFromText(...) rows, App.scala:46-52)
+        src = spark.sql(" UNION ALL ".join(
+            "SELECT " + ", ".join(T.text(st.sql, e) for e in T.seq(row))
+            for row in T.seq(query.rows())))
+    else:
+        src = st.select(query)
+    cols = [str(c) for c in T.seq(tree.userSpecifiedCols())] \
+        or (src.columns if tree.byName() else None)
+    aligned = _align(src, spark, known, cols)
+    tbl = _catalog(spark)[known]
+    (tbl.overwrite if tree.overwrite() else tbl.append)(spark, aligned)
+    _register(spark, known)
+    return {"ddl": "insert_overwrite" if tree.overwrite() else "insert",
+            "table": known, "version": tbl.versions()[-1]}
 
 
-_TTV_RE = re.compile(
-    r"\bFROM\s+(?P<name>[\w.]+)\s+(?:FOR\s+)?(?:SYSTEM_VERSION|VERSION)"
-    r"\s+AS\s+OF\s+(?P<v>\d+)", re.IGNORECASE)
-_TTS_RE = re.compile(
-    r"\bFROM\s+(?P<name>[\w.]+)\s+(?:FOR\s+)?(?:SYSTEM_TIME|TIMESTAMP)"
-    r"\s+AS\s+OF\s+'(?P<ts>[^']+)'", re.IGNORECASE)
-_TTR_RE = re.compile(
-    r"\bFROM\s+(?P<name>[\w.]+)\s+(?:FOR\s+)?(?:SYSTEM_VERSION|VERSION)"
-    r"\s+AS\s+OF\s+'(?P<ref>\w+)'", re.IGNORECASE)
+def _cache(spark: SparkSession, st: Statement):
+    un = st.tree.nodeName() == "UncacheTable"
+    _, known = st.table(st.tree.table())
+    if known is None:
+        return None
+    (spark.catalog.uncacheTable if un else spark.catalog.cacheTable)(
+        _view_name(known))
+    return {"ddl": "uncache" if un else "cache", "table": known}
 
 
-def rewrite_time_travel(spark: SparkSession, statement: str) -> str:
-    """Iceberg's time-travel SQL spellings over catalog tables:
-    ``FROM t VERSION AS OF <n>`` / ``FROM t TIMESTAMP AS OF '<ts>'``
-    (also the ``FOR SYSTEM_VERSION/SYSTEM_TIME`` forms).  The referenced
-    snapshot is registered as a temp view and the clause rewritten to it;
-    non-catalog tables pass through untouched."""
-    def sub_version(m):
-        name = m.group("name")
-        if name not in _catalog(spark):
-            return m.group(0)
-        v = int(m.group("v"))
-        view = f"{_view_name(name)}__v{v}"
-        _publish(spark, view, _catalog(spark)[name], v)
-        return f"FROM {view}"
+def _call(spark: SparkSession, st: Statement):
+    """Positional and ``name =>`` literal arguments."""
+    pos, named = [], {}
+    for a in T.seq(st.tree.args()):
+        if a.nodeName() == "NamedArgumentExpression":
+            named[str(a.key()).lower()] = T.literal(a.value())
+        else:
+            pos.append(T.literal(a))
+    target = named.get("table", pos[0] if pos else None)
+    if target is None or _lookup(spark, str(target)) is None:
+        return None
+    return run_procedure(spark, T.parts(st.tree.procedure())[-1].lower(),
+                         pos, named)
 
-    def sub_timestamp(m):
-        name = m.group("name")
-        if name not in _catalog(spark):
-            return m.group(0)
-        from datetime import datetime, timezone
-        dt = datetime.fromisoformat(m.group("ts"))
-        if dt.tzinfo is None:
-            dt = dt.replace(tzinfo=timezone.utc)
-        target_ms = dt.timestamp() * 1000
-        eligible = [h["version"] for h in _catalog(spark)[name].history()
-                    if h["timestamp_ms"] <= target_ms]
-        if not eligible:
-            raise ValueError(
-                f"no snapshot of {name!r} at or before {m.group('ts')!r}")
-        v = max(eligible)
-        view = f"{_view_name(name)}__v{v}"
-        _publish(spark, view, _catalog(spark)[name], v)
-        return f"FROM {view}"
 
-    def sub_ref(m):
-        name = m.group("name")
-        if name not in _catalog(spark):
-            return m.group(0)
-        tbl = _catalog(spark)[name]
-        v = tbl.resolve_ref(m.group("ref"))
-        if v is None:
-            raise ValueError(f"unknown branch/tag {m.group('ref')!r} "
-                             f"on {name!r}")
-        view = f"{_view_name(name)}__v{v}"
-        _publish(spark, view, tbl, v)
-        return f"FROM {view}"
+def _field(parts: List[str]) -> str:
+    if len(parts) != 1:
+        raise ValueError(f"nested column {'.'.join(parts)!r} is not supported")
+    return parts[0]
 
-    statement = _TTV_RE.sub(sub_version, statement)
-    statement = _TTR_RE.sub(sub_ref, statement)
-    return _TTS_RE.sub(sub_timestamp, statement)
+
+def _alter(spark: SparkSession, st: Statement):
+    """``ADD COLUMN(S)``, ``RENAME COLUMN``, ``DROP COLUMN(S)``."""
+    tree, kind = st.tree, st.tree.nodeName()
+    _, known = st.table(tree.table())
+    if known is None:
+        return None
+    tbl = _catalog(spark)[known]
+    if kind == "RenameColumn":
+        tbl.rename_column(spark, _field(T.seq(tree.column().name())),
+                          tree.newName())
+    elif kind == "DropColumns":
+        for f in T.seq(tree.columnsToDrop()):
+            col = _field(T.seq(f.name()))
+            if not tree.ifExists() or col in tbl.read(spark).columns:
+                tbl.drop_column(spark, col)
+    else:
+        for c in T.seq(tree.columnsToAdd()):
+            tbl.add_column(spark, _field(T.seq(c.name())),
+                           c.dataType().sql(), st.declares_geometry(c))
+    _register(spark, known)
+    return {"ddl": "alter_" + {"RenameColumn": "rename", "DropColumns": "drop",
+                               "AddColumns": "add"}[kind],
+            "table": known, "version": tbl.versions()[-1]}
+
+
+def _dml(spark: SparkSession, st: Statement):
+    """A catalog table's versioned CoW (time travel spans the DML), or a
+    ``tables`` parquet path's (``dml.sql_dml``)."""
+    d = dml.read_dml(st.sql, st.tree)
+    known = _lookup(spark, d.target)
+    if known is None:
+        return dml.sql_dml(spark, st.original, st.tables) \
+            if d.target in st.tables else None
+    tbl = _catalog(spark)[known]
+    if d.kind == "update":
+        res = tbl.update_where(spark, d.assignments, d.condition)
+    elif d.kind == "delete":
+        res = tbl.delete_where(spark, d.condition)
+    else:
+        src = d.source and _lookup(spark, d.source)
+        source = st.select(d.query) if d.query is not None else \
+            spark.table(_view_name(src) if src else d.source)
+        res = tbl.merge_into(spark, source, d.on, update_cols=d.update_cols,
+                             insert_when_not_matched=d.insert,
+                             update_when_matched=d.update)
+    _register(spark, known)
+    return res
+
+
+def _show(spark: SparkSession, st: Statement):
+    """``SHOW TABLES`` over the snapshot catalog — Spark's result shape,
+    with dotted names split into their namespace and table parts."""
+    if st.tree.pattern().isDefined() \
+            or not st.tree.namespace().nodeName().startswith("CurrentNamespace"):
+        return None
+    return spark.createDataFrame(
+        [(*n.rpartition(".")[::2], False) for n in sorted(_catalog(spark))],
+        "namespace string, tableName string, isTemporary boolean")
+
+
+def _describe(spark: SparkSession, st: Statement):
+    """``DESCRIBE t`` — Spark's result shape, from the table's current
+    logical schema, then the partition spec under Spark's "# Partition
+    Information" heading."""
+    _, known = st.table(st.tree.relation())
+    if known is None or st.tree.partitionSpec().size():
+        return None
+    schema = _state(spark)["views"][_view_name(known).lower()]["schema"]
+    rows = [(f.name, f.dataType.simpleString(), None) for f in schema.fields]
+    spec = _catalog(spark)[known].partition_spec()
+    if spec:
+        rows += [("# Partition Information", "", None)] + [
+            (fld["name"], fld["transform"], None) for fld in spec]
+    return spark.createDataFrame(
+        rows, "col_name string, data_type string, comment string")
+
+
+# root node class -> handler; any other statement runs through run_query
+HANDLERS = {
+    "CreateTable": _create, "CreateTableAsSelect": _create,
+    "DropTable": _drop, "InsertIntoStatement": _insert,
+    "CacheTable": _cache, "UncacheTable": _cache, "Call": _call,
+    "AddColumns": _alter, "RenameColumn": _alter, "DropColumns": _alter,
+    "UpdateTable": _dml, "DeleteFromTable": _dml, "MergeIntoTable": _dml,
+    "ShowTables": _show, "DescribeRelation": _describe,
+}
+
+
+def run_extension(spark: SparkSession, statement: str) -> Optional[dict]:
+    """Iceberg's SQL-extension statements on a catalog table, which Spark's
+    parser rejects: ``ALTER TABLE t ADD PARTITION FIELD <field>`` and
+    ``ALTER TABLE t CREATE|DROP BRANCH|TAG <ref> [AS OF VERSION n]``."""
+    m = _ALTER_REF_RE.match(statement) or _ALTER_ADD_PART_RE.match(statement)
+    name = m and _lookup(spark, m.group("name"))
+    if not name:
+        return None
+    tbl = _catalog(spark)[name]
+    if m.re is _ALTER_ADD_PART_RE:
+        v = tbl.add_partition_field(*_partition_field(spark, m.group("field")))
+        _register(spark, name)
+        return {"ddl": "alter_partition", "table": name, "version": v}
+    kind, ref = m.group("kind").lower(), m.group("ref")
+    out = {"ddl": "alter_ref", "table": name, "op": m.group("op").lower(),
+           "kind": kind, "ref": ref}
+    if out["op"] == "create":
+        out["version"] = tbl.create_ref(
+            ref, kind, int(m.group("v")) if m.group("v") else None)
+    else:
+        tbl.drop_ref(ref, kind=kind)
+    return out
 
 
 def reset(spark: Optional[SparkSession] = None) -> None:

@@ -20,22 +20,25 @@ engine reproduces the same semantics over a plain parquet directory:
    (Single-writer semantics — full snapshot isolation needs a real table
    format; this mirrors what Iceberg's CoW writer does per file.)
 
-SQL surface: :func:`sql_dml` accepts the reference's literal statement shapes
-(``UPDATE t SET c = expr WHERE pred`` / ``DELETE FROM t WHERE pred``), plus
-the Iceberg MERGE shape (``MERGE INTO t USING s ON t.k = s.k WHEN MATCHED
-THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *``), and dispatches to the
-API, so the reference's example job lines run verbatim.
+SQL surface: :func:`read_dml` reads an UPDATE, DELETE or MERGE from Spark's
+parse tree (target name parts, the exact text of the condition and each
+assigned value, the MERGE key and clauses), so spelling is the parser's
+business; a MERGE clause this engine does not implement raises
+``ValueError`` naming it.  :func:`sql_dml` runs a statement on parquet
+paths; the session front door runs a catalog table's through its snapshots.
 """
 
 from __future__ import annotations
 
 import os
-import re
 import shutil
 import uuid
-from typing import Dict, Optional
+from dataclasses import dataclass, field
+from typing import Dict, List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
+
+from . import sqltree as T
 
 
 def _to_col(expr) -> Column:
@@ -76,9 +79,12 @@ def _table_files(spark: SparkSession, path: str, predicate) -> list:
         .select("_f").distinct(), "update/delete")
 
 
-def _swap_in(path: str, staged_dir: str, touched: list) -> int:
-    """Per-file rename commit: move staged part files into the table dir,
-    then drop the rewritten originals."""
+def _swap_in(path: str, df: DataFrame, touched: list) -> int:
+    """Per-file rename commit: write ``df`` to a staging dir, move its part
+    files into the table dir, then drop the rewritten originals."""
+    staged_dir = os.path.join(os.path.dirname(path.rstrip("/")),
+                              f".staged-{uuid.uuid4().hex}")
+    df.write.mode("overwrite").parquet(staged_dir)
     n_new = 0
     for name in os.listdir(staged_dir):
         if name.startswith("part-") or name.endswith(".parquet"):
@@ -119,12 +125,8 @@ def update_where(spark: SparkSession, path: str,
          .otherwise(F.col(c))).alias(c) if c in assignments else F.col(c)
         for c in df.columns
     ])
-    staged = os.path.join(os.path.dirname(path.rstrip("/")),
-                          f".staged-{uuid.uuid4().hex}")
-    updated.write.mode("overwrite").parquet(staged)
-    n_rows = obs.get["n"]
-    _swap_in(path, staged, touched)
-    return {"files_rewritten": len(touched), "rows_updated": n_rows}
+    _swap_in(path, updated, touched)
+    return {"files_rewritten": len(touched), "rows_updated": obs.get["n"]}
 
 
 def delete_where(spark: SparkSession, path: str, predicate) -> dict:
@@ -137,12 +139,8 @@ def delete_where(spark: SparkSession, path: str, predicate) -> dict:
     obs = Observation()
     dfo = df.observe(obs, F.count(F.when(pred, 1)).alias("n"))
     kept = dfo.filter(~pred | pred.isNull())
-    staged = os.path.join(os.path.dirname(path.rstrip("/")),
-                          f".staged-{uuid.uuid4().hex}")
-    kept.write.mode("overwrite").parquet(staged)
-    n_rows = obs.get["n"]
-    _swap_in(path, staged, touched)
-    return {"files_rewritten": len(touched), "rows_deleted": n_rows}
+    _swap_in(path, kept, touched)
+    return {"files_rewritten": len(touched), "rows_deleted": obs.get["n"]}
 
 
 def merge_into(spark: SparkSession, target_path: str, source: DataFrame,
@@ -205,110 +203,142 @@ def merge_into(spark: SparkSession, target_path: str, source: DataFrame,
         inserts = (src.join(target.select(on),
                             src[f"_src_{on}"] == F.col(on), "left_anti")
                    .observe(obs_i, F.count(F.lit(1)).alias("n"))
-                   # null-fill target columns the source lacks — the table's
-                   # schema must not drift per-file on insert
+                   # the table's types, NULL where the source lacks a column
+                   # — the schema must not drift per-file on insert
                    .select(*[(F.col(f"_src_{c}") if f"_src_{c}" in src.columns
-                              else F.lit(None).cast(target.schema[c].dataType))
+                              else F.lit(None)).cast(target.schema[c].dataType)
                              .alias(c) for c in cols]))
     if rewritten is None and inserts is None:
         return {"files_rewritten": 0, "rows_updated": 0, "rows_inserted": 0}
 
-    staged = os.path.join(os.path.dirname(target_path.rstrip("/")),
-                          f".staged-{uuid.uuid4().hex}")
     if rewritten is not None and inserts is not None:
         out = rewritten.unionByName(inserts, allowMissingColumns=True)
     else:
         out = rewritten if rewritten is not None else inserts
-    out.write.mode("overwrite").parquet(staged)
-    n_updated = obs_u.get["n"] if obs_u is not None else 0
-    n_inserted = obs_i.get["n"] if obs_i is not None else 0
-    _swap_in(target_path, staged, touched)
-    return {"files_rewritten": len(touched), "rows_updated": n_updated,
-            "rows_inserted": n_inserted}
+    _swap_in(target_path, out, touched)
+    return {"files_rewritten": len(touched),
+            "rows_updated": obs_u.get["n"] if obs_u is not None else 0,
+            "rows_inserted": obs_i.get["n"] if obs_i is not None else 0}
 
 
 # ---------------------------------------------------------------------------
-# SQL statement surface (the reference's literal UPDATE/DELETE shapes)
+# SQL statement surface, read from Spark's parse tree
 # ---------------------------------------------------------------------------
 
-_UPDATE_RE = re.compile(
-    r"^\s*UPDATE\s+(?P<t>\S+)\s+SET\s+(?P<set>.+?)\s+WHERE\s+(?P<w>.+?)\s*$",
-    re.IGNORECASE | re.DOTALL)
-_DELETE_RE = re.compile(
-    r"^\s*DELETE\s+FROM\s+(?P<t>\S+)\s+WHERE\s+(?P<w>.+?)\s*$",
-    re.IGNORECASE | re.DOTALL)
-# the Iceberg/ANSI MERGE shape the reference's substrate speaks:
-#   MERGE INTO t [AS a] USING s [AS b] ON <x>.k = <y>.k
-#   WHEN MATCHED THEN UPDATE SET * | c1 = src.c1 [, ...]
-#   [WHEN NOT MATCHED THEN INSERT *]
-_MERGE_RE = re.compile(
-    r"""^\s*MERGE\s+INTO\s+(?P<t>\S+)(?:\s+(?:AS\s+)?(?P<ta>\w+))?\s+
-        USING\s+(?P<s>\S+)(?:\s+(?:AS\s+)?(?P<sa>\w+))?\s+
-        ON\s+(?P<on1>\w+)\.(?P<k1>\w+)\s*=\s*(?P<on2>\w+)\.(?P<k2>\w+)\s+
-        (?:WHEN\s+MATCHED\s+THEN\s+UPDATE\s+SET\s+(?P<set>.+?)\s*)?
-        (?P<ins>WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s+\*\s*)?$""",
-    re.IGNORECASE | re.DOTALL | re.VERBOSE)
+@dataclass
+class Dml:
+    """What copy-on-write needs from one UPDATE, DELETE or MERGE: the
+    target's dotted name; the SQL text of the condition and of each
+    assigned value; for MERGE the key column ``on``, whether matched rows
+    update (``update_cols`` None: every column) and unmatched source rows
+    insert, and the source: a relation name, or its ``query`` node."""
+    kind: str
+    target: str
+    condition: str = "TRUE"
+    assignments: Dict[str, str] = field(default_factory=dict)
+    on: Optional[str] = None
+    update: bool = False
+    update_cols: Optional[List[str]] = None
+    insert: bool = False
+    source: Optional[str] = None
+    query: object = None
 
 
-def _split_assignments(s: str) -> Dict[str, str]:
-    """Split ``a = expr1, b = expr2`` at top-level commas."""
-    parts, depth, cur = [], 0, []
-    for ch in s:
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur)); cur = []
-        else:
-            cur.append(ch)
-    parts.append("".join(cur))
-    out = {}
-    for p in parts:
-        c, e = p.split("=", 1)
-        out[c.strip().strip("`")] = e.strip()
-    return out
+def _relation(node) -> Tuple[str, str]:
+    """(dotted name, alias) of a relation."""
+    alias = node.alias() if node.nodeName() == "SubqueryAlias" else None
+    parts = T.parts(node.child() if alias else node)
+    return ".".join(parts), alias or parts[-1]
+
+
+def read_dml(sql: str, tree) -> Dml:
+    """The :class:`Dml` of a parsed UPDATE, DELETE or MERGE."""
+    kind = tree.nodeName()
+    if kind not in ("UpdateTable", "DeleteFromTable", "MergeIntoTable"):
+        raise ValueError(f"unsupported DML statement: {sql[:80]}")
+    if kind == "MergeIntoTable":
+        return _read_merge(sql, tree)
+    cond = tree.condition()
+    if kind == "UpdateTable":
+        cond = cond.get() if cond.isDefined() else None
+    # no WHERE: no condition, or the literal TRUE with no text
+    d = Dml("update" if kind == "UpdateTable" else "delete",
+            _relation(tree.table())[0],
+            (T.text(sql, cond) if cond is not None else "") or "TRUE")
+    if kind == "UpdateTable":
+        d.assignments = {T.attribute(a.key())[-1]: T.text(sql, a.value())
+                         for a in T.seq(tree.assignments())}
+    return d
+
+
+def _refuse(clause: str):
+    raise ValueError(f"MERGE clause {clause} is not supported by this engine")
+
+
+def _read_merge(sql: str, tree) -> Dml:
+    target, talias = _relation(tree.targetTable())
+    src = tree.sourceTable()
+    if src.nodeName() == "SubqueryAlias" \
+            and src.child().nodeName() != "UnresolvedRelation":
+        d, salias = Dml("merge", target, query=src.child()), src.alias()
+    else:
+        name, salias = _relation(src)
+        d = Dml("merge", target, source=name)
+    cond = tree.mergeCondition()
+    refs = [T.attribute(c) for c in T.seq(cond.children())] \
+        if cond.nodeName() == "EqualTo" else []
+    if len(refs) != 2 or not all(r and len(r) > 1 for r in refs) \
+            or refs[0][-1].lower() != refs[1][-1].lower() \
+            or {r[-2].lower() for r in refs} != {talias.lower(), salias.lower()}:
+        _refuse(f"ON {T.text(sql, cond)} (it merges on target.k = source.k)")
+    d.on = refs[0][-1]
+    for when, actions in (("WHEN MATCHED", tree.matchedActions()),
+                          ("WHEN NOT MATCHED", tree.notMatchedActions()),
+                          ("WHEN NOT MATCHED BY SOURCE",
+                           tree.notMatchedBySourceActions())):
+        for a in T.seq(actions):
+            act = a.nodeName()
+            if a.condition().isDefined():
+                _refuse(f"{when} AND {T.text(sql, a.condition().get())}")
+            if (when, act) == ("WHEN MATCHED", "UpdateStarAction"):
+                d.update = True
+            elif (when, act) == ("WHEN MATCHED", "UpdateAction"):
+                d.update = True
+                d.update_cols = [_source_column(sql, x, salias)
+                                 for x in T.seq(a.assignments())]
+            elif (when, act) == ("WHEN NOT MATCHED", "InsertStarAction"):
+                d.insert = True
+            else:       # DeleteAction -> DELETE, InsertAction -> INSERT, ...
+                _refuse(f"{when} THEN {act[:-len('Action')].upper()}")
+    if tree.withSchemaEvolution():
+        _refuse("WITH SCHEMA EVOLUTION")
+    return d
+
+
+def _source_column(sql: str, assignment, salias: str) -> str:
+    """The column of ``c = s.c``: this engine's MERGE sets a column from the
+    source column of the same name."""
+    key, value = T.attribute(assignment.key()), T.attribute(assignment.value())
+    if value and value[-1].lower() == key[-1].lower() \
+            and (len(value) == 1 or value[-2].lower() == salias.lower()):
+        return key[-1]
+    _refuse(f"UPDATE SET {key[-1]} = {T.text(sql, assignment.value())} "
+            "(a column takes the source column of its name)")
 
 
 def sql_dml(spark: SparkSession, stmt: str,
             tables: Dict[str, str]) -> dict:
-    """Run an ``UPDATE``/``DELETE`` statement against parquet-backed tables.
-    ``tables`` maps table names used in the statement to directory paths."""
-    m = _UPDATE_RE.match(stmt)
-    if m:
-        return update_where(spark, tables[m.group("t")],
-                            _split_assignments(m.group("set")), m.group("w"))
-    m = _DELETE_RE.match(stmt)
-    if m:
-        return delete_where(spark, tables[m.group("t")], m.group("w"))
-    m = _MERGE_RE.match(stmt)
-    if m:
-        t_alias = m.group("ta") or m.group("t")
-        s_alias = m.group("sa") or m.group("s")
-        k1_side, k2_side = m.group("on1"), m.group("on2")
-        if {k1_side, k2_side} != {t_alias, s_alias}:
-            raise ValueError(
-                f"MERGE ON must equate target and source keys "
-                f"(got {k1_side}/{k2_side}, aliases {t_alias}/{s_alias})")
-        on = m.group("k1") if k1_side == t_alias else m.group("k2")
-        on_src = m.group("k2") if k1_side == t_alias else m.group("k1")
-        if on != on_src:
-            raise ValueError("MERGE ON key must have the same column name "
-                             "on both sides in this engine")
-        set_clause = (m.group("set") or "").strip()
-        if not set_clause and not m.group("ins"):
-            raise ValueError("MERGE needs WHEN MATCHED and/or WHEN NOT "
-                             "MATCHED clause")
-        if set_clause in ("*", ""):
-            update_cols = None
-        else:
-            # "c = src.c, d = src.d" — this engine's MERGE takes values from
-            # the source row, so only the column list matters
-            update_cols = [p.split("=", 1)[0].strip().strip("`")
-                           for p in set_clause.split(",")]
-        source = spark.table(m.group("s"))
-        return merge_into(spark, tables[m.group("t")], source, on,
-                          update_cols=update_cols,
-                          insert_when_not_matched=bool(m.group("ins")),
-                          update_when_matched=bool(set_clause))
-    raise ValueError(f"unsupported DML statement: {stmt[:80]}")
+    """Run an ``UPDATE``/``DELETE``/``MERGE`` statement against parquet-backed
+    tables.  ``tables`` maps table names used in the statement to directory
+    paths."""
+    d = read_dml(stmt, T.parse(spark, stmt))
+    path = tables[d.target]
+    if d.kind == "update":
+        return update_where(spark, path, d.assignments, d.condition)
+    if d.kind == "delete":
+        return delete_where(spark, path, d.condition)
+    source = spark.table(d.source) if d.source else \
+        spark.sql(stmt[slice(*T.query_span(d.query))])
+    return merge_into(spark, path, source, d.on, update_cols=d.update_cols,
+                      insert_when_not_matched=d.insert,
+                      update_when_matched=d.update)

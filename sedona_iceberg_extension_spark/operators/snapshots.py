@@ -461,7 +461,8 @@ class SnapshotTable:
 
     # -- schema evolution (ALTER TABLE) -------------------------------------
 
-    def _alter(self, spark: SparkSession, op: Dict) -> int:
+    def _alter(self, spark: SparkSession, op: Dict,
+               geometry: bool = False) -> int:
         m = self._manifest()
         cols = self.read(spark).columns
         kind = op["op"]
@@ -488,6 +489,13 @@ class SnapshotTable:
         ops = list(m.get("schema_ops", [])) + [op]
         extra = {"schema_ops": ops}
         g = op["from"] if kind == "rename" else op["name"]
+        if kind == "add" and geometry:
+            extra["geometry_columns"] = geo + [g]
+        if kind == "rename" and m.get("file_shapes"):
+            # shape classes are keyed by name: they follow the column
+            extra["file_shapes"] = {
+                f: {op["to"] if c == g else c: v for c, v in cls.items()}
+                for f, cls in m["file_shapes"].items()}
         if kind != "add" and g in geo:
             # the hidden envelope follows its geometry column
             if kind == "rename":
@@ -501,9 +509,12 @@ class SnapshotTable:
         return self._commit(m["files"], "alter", base_version=m["version"],
                             extra=extra)
 
-    def add_column(self, spark: SparkSession, name: str, type_ddl: str) -> int:
+    def add_column(self, spark: SparkSession, name: str, type_ddl: str,
+                   geometry: bool = False) -> int:
+        """``geometry``: the new ``BINARY`` (WKB) column is a geometry
+        column, so later writes store its envelope."""
         return self._alter(spark, {"op": "add", "name": name,
-                                   "type": type_ddl})
+                                   "type": type_ddl}, geometry)
 
     def rename_column(self, spark: SparkSession, old: str, new: str) -> int:
         return self._alter(spark, {"op": "rename", "from": old, "to": new})
@@ -681,10 +692,11 @@ class SnapshotTable:
 
     def merge_into(self, spark: SparkSession, source: DataFrame, on: str,
                    update_cols: Optional[List[str]] = None,
-                   insert_when_not_matched: bool = True) -> dict:
-        """Snapshot-isolated ``MERGE INTO``: WHEN MATCHED THEN UPDATE (all
-        or ``update_cols``), optional WHEN NOT MATCHED THEN INSERT — one new
-        snapshot, untouched files shared with the parent.
+                   insert_when_not_matched: bool = True,
+                   update_when_matched: bool = True) -> dict:
+        """Snapshot-isolated ``MERGE INTO``: optional WHEN MATCHED THEN
+        UPDATE (all or ``update_cols``), optional WHEN NOT MATCHED THEN
+        INSERT — one new snapshot, untouched files shared with the parent.
 
         Same scale shape as ``operators.dml.merge_into``: touched files are
         found by semi-joining the materialized file-name column against the
@@ -715,7 +727,7 @@ class SnapshotTable:
         keys = source.select(on).distinct()
 
         from .dml import bounded_file_list
-        touched = bounded_file_list(
+        touched = [] if not update_when_matched else bounded_file_list(
             target.withColumn("_f", F.input_file_name())
             .join(keys, on, "left_semi")
             .select("_f").distinct(), "merge")
@@ -744,10 +756,10 @@ class SnapshotTable:
                 src.join(target.select(on), src[f"_src_{on}"] == F.col(on),
                          "left_anti")
                 .observe(obs_i, F.count(F.lit(1)).alias("n"))
-                # null-fill target columns the source lacks — the table's
+                # the table's types, NULL where the source lacks a column — the
                 # schema must not drift per-file on insert
                 .select(*[(F.col(f"_src_{c}") if f"_src_{c}" in src.columns
-                           else F.lit(None).cast(target.schema[c].dataType))
+                           else F.lit(None)).cast(target.schema[c].dataType)
                           .alias(c) for c in cols]))
         if not parts:
             return {"version": m["version"], "files_rewritten": 0,

@@ -57,6 +57,7 @@ from pyspark.errors import AnalysisException, ParseException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
+from . import sqltree as T
 from .ddl import snapshot_frame
 from .spatial_join import spatial_join
 
@@ -132,12 +133,6 @@ class _Side:
         return alias.lower() in (a.lower() for a in self.aliases or ())
 
 
-def _span(node) -> Tuple[int, int]:
-    """[start, stop) of a parse-tree node in the statement text."""
-    o = node.origin()
-    return o.startIndex().get(), o.stopIndex().get() + 1
-
-
 def _quote(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
@@ -170,7 +165,7 @@ class _Rewrite:
             outer = self.ctes
             for d in defs:
                 self.walk(d._2().child())
-                start, stop = _span(d._2())
+                start, stop = T.span(d._2())
                 self.ctes = self.ctes + [(d._1().lower(), self.sql[start:stop])]
             self.walk(node.child())
             self.ctes = outer
@@ -202,10 +197,10 @@ class _Rewrite:
                 # the relation becomes its filtered frame, under its name
                 df = s.df.where(" AND ".join(s.pushed)).drop(*s.hidden)
                 if s.kind == "UnresolvedRelation":
-                    self.edits.append((*_span(s.node), f"{self.arg(df)} AS "
+                    self.edits.append((*T.span(s.node), f"{self.arg(df)} AS "
                                        f"{_quote(s.aliases[0])}"))
                 else:
-                    self.edits.append((*_span(s.node.child()), self.arg(df)))
+                    self.edits.append((*T.span(s.node.child()), self.arg(df)))
         return leaves, planned
 
     def arg(self, df: DataFrame) -> str:
@@ -268,9 +263,9 @@ class _Rewrite:
             return None
         if pick[0] in conjs:
             pick[0].consumed = True
-            self.edits.append((*_span(pick[0].expr), "TRUE"))
+            self.edits.append((*T.span(pick[0].expr), "TRUE"))
         lspan, rspan = self.span(left), self.span(right)
-        jstart, jstop = _span(node)
+        jstart, jstop = T.span(node)
         # an explicit JOIN node spans "JOIN r ON ..."; a comma join's
         # node spans the whole FROM clause, so its text ends at the right
         stop = jstop if jstart >= lspan[1] else rspan[1]
@@ -279,7 +274,7 @@ class _Rewrite:
 
     def span(self, side: _Side) -> Tuple[int, int]:
         if side._span is None:
-            side._span = _span(side.node)
+            side._span = T.span(side.node)
         return side._span
 
     def frame(self, side: _Side) -> DataFrame:
@@ -331,7 +326,7 @@ class _Rewrite:
             if any(s.aliases is None for s in leaves):
                 raise _Decline("* over an input without a qualifier")
             cols = ", ".join(f"{_quote(a)}.*" for s in leaves for a in s.aliases)
-            self.edits.append((*_span(it), cols))
+            self.edits.append((*T.span(it), cols))
 
     # --- conjuncts -------------------------------------------------------
 
@@ -340,12 +335,8 @@ class _Rewrite:
             return self.conjuncts(expr.left()) + self.conjuncts(expr.right())
         return [_Conj(expr)]
 
-    def text(self, expr) -> str:
-        start, stop = _span(expr)
-        return self.sql[start:stop]
-
     def and_text(self, conjs: List[_Conj]) -> str:
-        return " AND ".join(f"({self.text(c.expr)})" for c in conjs)
+        return " AND ".join(f"({T.text(self.sql, c.expr)})" for c in conjs)
 
     def st_call(self, c: _Conj, names) -> Optional[Tuple[str, list]]:
         if c.call is None:
@@ -417,14 +408,14 @@ class _Rewrite:
             native = _native_range(name, box, box_first, shape, env)
             if side is None or env not in side.hidden:
                 if native:
-                    self.edits.append((*_span(c.expr), f"({native})"))
+                    self.edits.append((*T.span(c.expr), f"({native})"))
                 continue
             if not side.reach or (ref[0] is None and len(leaves) > 1):
                 continue     # filtering the table would not filter the rows
             if native:
                 side.pushed.append(f"({native})")
                 c.consumed = True
-                self.edits.append((*_span(c.expr), "TRUE"))
+                self.edits.append((*T.span(c.expr), "TRUE"))
             else:
                 side.pushed.append(
                     f"({env}.xmin IS NULL OR "
@@ -460,24 +451,17 @@ class _Rewrite:
 
 
 def _call(expr) -> Optional[Tuple[str, list]]:
-    """(lower-case name, argument nodes) of a one-part function call."""
-    if expr.nodeName() != "UnresolvedFunction":
-        return None
-    name = expr.nameParts().mkString(".").lower()
-    if not name.startswith("st_"):
-        return None
-    args = expr.arguments()
-    return name, [args.apply(i) for i in range(args.size())]
+    """(lower-case name, argument nodes) of an ``ST_*`` call."""
+    call = T.call(expr)
+    return call if call and call[0].startswith("st_") else None
 
 
 def _colref(expr) -> Optional[Tuple[Optional[str], str]]:
     """(qualifier or None, column) of a ``col`` / ``alias.col`` reference."""
-    if expr.nodeName() != "UnresolvedAttribute":
+    parts = T.attribute(expr)
+    if not parts or len(parts) > 2:
         return None
-    parts = expr.nameParts().mkString("\x00").split("\x00")
-    if len(parts) == 1:
-        return None, parts[0]
-    return (parts[0], parts[1]) if len(parts) == 2 else None
+    return (None, parts[0]) if len(parts) == 1 else (parts[0], parts[1])
 
 
 def _number(expr) -> Optional[float]:
@@ -599,16 +583,18 @@ def plan_spatial_join_sql(ldf: DataFrame, left: _Side, rdf: DataFrame,
         rstruct)
 
 
-def _plan_statement(spark: SparkSession,
-                    sql: str) -> Optional[Tuple[str, Dict[str, DataFrame]]]:
+def _plan_statement(spark: SparkSession, sql: str, tree=None
+                    ) -> Optional[Tuple[str, Dict[str, DataFrame]]]:
     """The rewritten statement text and its DataFrame named args, or None
-    when the statement has nothing to plan."""
+    when the statement has nothing to plan (``tree``: its parse, if the
+    caller has it)."""
     if "st_" not in sql.lower():
         return None
-    try:
-        tree = spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)
-    except ParseException:
-        return None          # spark.sql reports the parse error itself
+    if tree is None:
+        try:
+            tree = T.parse(spark, sql)
+        except ParseException:
+            return None      # spark.sql reports the parse error itself
     rw = _Rewrite(spark, sql)
     try:
         rw.walk(tree)
@@ -616,27 +602,19 @@ def _plan_statement(spark: SparkSession,
         return None
     if not rw.edits:
         return None
-    out, pos = [], 0
-    for start, stop, text in sorted(rw.edits):
-        seg = sql[pos:start]
-        if rw.args:          # the named-arg formatter reads {...}
-            seg = seg.replace("{", "{{").replace("}", "}}")
-        out += [seg, text]
-        pos = stop
-    tail = sql[pos:]
-    if rw.args:
-        tail = tail.replace("{", "{{").replace("}", "}}")
-    return "".join(out) + tail, rw.args
+    # the named-arg formatter reads {...}
+    return T.splice(sql, rw.edits, escape=bool(rw.args)), rw.args
 
 
-def spatial_sql(spark: SparkSession, sql: str) -> DataFrame:
+def spatial_sql(spark: SparkSession, sql: str, tree=None) -> DataFrame:
     """Run a SQL statement, planning every recognized spatial join
     (``JOIN ... ON ST_pred``, ``FROM a, b WHERE ST_pred``, and chains of
     them) through the distributed spatial join instead of Spark's default
-    BroadcastNestedLoopJoin-over-UDF.
+    BroadcastNestedLoopJoin-over-UDF.  ``tree``: the statement's parse, when
+    the caller already has it.
 
     Unrecognized statements run unchanged (correct, unoptimized)."""
-    planned = _plan_statement(spark, sql)
+    planned = _plan_statement(spark, sql, tree)
     if planned is None:
         return spark.sql(sql)
     text, args = planned

@@ -38,57 +38,45 @@ def register_all(spark: SparkSession) -> SparkSession:
 def sql(spark: SparkSession, statement: str, tables: dict | None = None):
     """One SQL front door — the user-facing parity point with the
     reference, where after ``SedonaIcebergExtensions`` injection every
-    statement is just ``spark.sql(...)`` (App.scala:42-66 drives CREATE /
-    SELECT-with-spatial-join / UPDATE through the same entry point):
+    statement is just ``spark.sql(...)`` (App.scala:42-66).
 
-    - ``CREATE TABLE ... USING ICEBERG`` (plain + CTAS), ``DROP TABLE``,
-      ``INSERT INTO``, ``CACHE TABLE`` → ``operators.ddl`` (snapshot-table
-      warehouse: versioned manifests, CoW, time travel — the semantics the
-      DDL spelling implies, App.scala:42-52,76-79) — returns a result dict;
-    - ``UPDATE`` / ``DELETE`` / ``MERGE INTO`` on a DDL-created table →
-      the snapshot table's versioned CoW DML; on a plain parquet table →
-      ``operators.dml.sql_dml`` (``tables`` maps statement table names to
-      parquet paths) — returns the result dict;
-    - everything else → ``operators.sql_join.spatial_sql``, which reads
-      the statement's parse tree, plans any ``JOIN ... ON ST_pred`` /
-      ``FROM a, b WHERE ST_pred`` through the distributed spatial join and
-      runs everything else through plain ``spark.sql`` — returns a
-      DataFrame.
+    Spark's parser reads the statement once (``operators.ddl.Statement``)
+    and the root node's class picks its handler (``operators.ddl.HANDLERS``):
+    CREATE/CTAS ``USING ICEBERG``, DROP, INSERT, (UN)CACHE, CALL, ALTER TABLE
+    columns, SHOW TABLES and DESCRIBE run on the snapshot-table warehouse;
+    UPDATE / DELETE / MERGE on a catalog table's versioned CoW, or through
+    ``operators.dml`` on a ``tables`` parquet path.  Text the parser rejects
+    may be Iceberg extension grammar.  Anything else returns
+    ``operators.sql_join.spatial_sql``'s DataFrame, catalog relations
+    spliced to their views.  A statement naming no catalog table, or any
+    DDL/DML with a real Iceberg runtime configured, runs on Spark as written.
     """
-    import re as _re
+    from pyspark.errors import ParseException
 
     from .operators import ddl
-    from .operators.dml import sql_dml
     from .operators.sql_join import spatial_sql
 
-    if ddl.delegate_to_iceberg(spark):
-        # a REAL Iceberg runtime is on this session (jars + catalog — the
-        # reference's own launch shape): DDL/DML/time-travel belong to it
-        # verbatim; SELECTs still flow through the spatial-join planner
-        if ddl.is_ddl(statement) or _re.match(
-                r"^\s*(UPDATE|DELETE|MERGE)\b", statement, _re.IGNORECASE):
+    delegate = ddl.delegate_to_iceberg(spark)
+    try:
+        st = ddl.Statement(spark, statement, tables)
+    except ParseException:
+        if delegate:
             return spark.sql(statement)
-        return spatial_sql(spark, statement)
-    if _re.match(r"^\s*SHOW\s+TABLES\s*$", statement, _re.IGNORECASE):
-        return ddl.show_tables(spark)
-    dm = _re.match(r"^\s*DESC(?:RIBE)?\s+(?:TABLE\s+)?(?P<name>[\w.]+)\s*$",
-                   statement, _re.IGNORECASE)
-    if dm and dm.group("name") in ddl._catalog(spark):
-        return ddl.describe_table(spark, dm.group("name"))
-    if ddl.is_ddl(statement):
-        return ddl.run_ddl(spark, statement, run_select=spatial_sql)
-    # Iceberg time-travel spellings (VERSION AS OF / TIMESTAMP AS OF)
-    statement = ddl.rewrite_time_travel(spark, statement)
-    if _re.match(r"^\s*(UPDATE|DELETE|MERGE)\b", statement, _re.IGNORECASE):
-        res = ddl.run_catalog_dml(spark, statement)
-        if res is not None:
-            return res
-        return sql_dml(spark, statement, tables or {})
-    # metadata tables (t.history / t.files), then dotted catalog
-    # identifiers (demo.db.t) → registered views
-    statement = ddl.rewrite_metadata_tables(spark, statement)
-    statement = ddl.resolve_names(statement, spark)
-    return spatial_sql(spark, statement)
+        res = ddl.run_extension(spark, statement)
+        if res is None:
+            raise
+        return res
+    handler = ddl.HANDLERS.get(st.tree.nodeName())
+    if delegate:
+        # a REAL Iceberg runtime (the reference's launch shape) owns DDL/DML
+        # verbatim; queries still flow through the spatial-join planner
+        if handler is not None or st.geometry:
+            return spark.sql(statement)
+        return spatial_sql(spark, statement, st.tree)
+    if handler is None:
+        return ddl.run_query(spark, st)
+    res = handler(spark, st)
+    return spark.sql(statement) if res is None else res
 
 
 def get_session(app_name: str = "sedona-iceberg-extension-spark",

@@ -1812,3 +1812,30 @@ def test_scan_parallelism_probe_row_groups(spark, tmp_path):
         .optimizedPlan().toString()
     assert "Repartition" not in plan_many
     assert "Repartition" in plan_one
+
+
+def test_scan_parallelism_probe_reads_encoded_and_remote_uris(
+        spark, tmp_path, monkeypatch):
+    """The probe opens footers through the file URI's decoded path (a space
+    in a directory reads as ``%20``), and answers "not enough" for a file on
+    other storage without opening it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "rg plain"
+    d.mkdir()
+    pq.write_table(pa.table({"id": list(range(800))}), str(d / "f.parquet"),
+                   row_group_size=100)                  # 8 row groups
+    df = spark.read.parquet(str(d / "f.parquet"))
+    assert any("%20" in f for f in df.inputFiles())
+    assert dedup._scan_supplies_parallelism(df, 4)
+
+    class Remote:
+        def inputFiles(self):
+            return ["hdfs://nn/t/a.parquet", "s3a://b/t/b.parquet"]
+
+    def no_footer(path):
+        raise AssertionError(f"footer read of {path}")
+
+    monkeypatch.setattr(pq, "ParquetFile", no_footer)
+    assert not dedup._scan_supplies_parallelism(Remote(), 4)
