@@ -293,11 +293,10 @@ class Statement:
     each bare ``GEOMETRY`` column type spliced to ``BINARY`` at the span the
     parser's ``UNSUPPORTED_DATATYPE`` error gives (``geometry``: those
     offsets); the spans of ``tree`` index ``sql``.  ``original`` is the text
-    as written; ``tables`` maps plain parquet table names to paths (DML)."""
+    as written."""
 
-    def __init__(self, spark: SparkSession, original: str,
-                 tables: Optional[Dict[str, str]] = None):
-        self.spark, self.original, self.tables = spark, original, tables or {}
+    def __init__(self, spark: SparkSession, original: str):
+        self.spark, self.original = spark, original
         self.sql, self.geometry = original, []
         while True:
             try:
@@ -460,8 +459,15 @@ def _drop(spark: SparkSession, st: Statement):
             pass        # a name no Spark catalog can hold (``demo.db.t``)
         return {"ddl": "drop", "table": name, "existed": False}
     tbl = _catalog(spark).pop(known)
-    spark.catalog.dropTempView(_view_name(known))
-    _state(spark)["views"].pop(_view_name(known).lower(), None)
+    # the table's view and those its time-travel and metadata-table reads
+    # registered
+    view, views = _view_name(known), _state(spark)["views"]
+    travel = f"{view.lower()}__v"
+    for v in [view, f"{view}__history", f"{view}__files",
+              *[k for k in views
+                if k.startswith(travel) and k[len(travel):].isdigit()]]:
+        spark.catalog.dropTempView(v)
+        views.pop(v.lower(), None)
     if st.tree.purge():
         shutil.rmtree(tbl.path, ignore_errors=True)
     return {"ddl": "drop", "table": known, "existed": True}
@@ -552,13 +558,11 @@ def _alter(spark: SparkSession, st: Statement):
 
 
 def _dml(spark: SparkSession, st: Statement):
-    """A catalog table's versioned CoW (time travel spans the DML), or a
-    ``tables`` parquet path's (``dml.sql_dml``)."""
+    """A catalog table's versioned CoW (time travel spans the DML)."""
     d = dml.read_dml(st.sql, st.tree)
     known = _lookup(spark, d.target)
     if known is None:
-        return dml.sql_dml(spark, st.original, st.tables) \
-            if d.target in st.tables else None
+        return None
     tbl = _catalog(spark)[known]
     if d.kind == "update":
         res = tbl.update_where(spark, d.assignments, d.condition)

@@ -82,6 +82,39 @@ def _to_col(expr):
     return F.expr(expr) if isinstance(expr, str) else expr
 
 
+def _known(what: str, names, cols: List[str]) -> None:
+    unknown = set(names) - set(cols)
+    if unknown:
+        raise ValueError(f"{what} references unknown column(s) "
+                         f"{sorted(unknown)} (table has {sorted(cols)})")
+
+
+def bounded_file_list(live: DataFrame, changed,
+                      what: str) -> Tuple[List[str], int]:
+    """Names of the files of ``live`` holding a row ``changed(frame)``
+    keeps, and the number of those rows, for a copy-on-write commit: a
+    driver-side list, bounded.  The file name is materialized before
+    ``changed`` runs (a pandas-UDF filter re-batches rows across files).
+
+    The emulation layer keeps manifests driver-side, so the matched-file
+    set must land on the driver — but collected unbounded, a wide predicate
+    over a 100 TB table (millions of files) is a silent driver OOM that
+    real Iceberg avoids with distributed manifest reads.  A hard cap (env
+    ``SPARK_GRAFT_MAX_COW_FILES``, default 100k paths ≈ ~10 MB of strings)
+    turns that into a clear, actionable error instead of an OOM."""
+    cap = int(os.environ.get("SPARK_GRAFT_MAX_COW_FILES", "100000"))
+    rows = (changed(live.withColumn("_f", F.input_file_name()))
+            .groupBy("_f").count().limit(cap + 1).collect())
+    if len(rows) > cap:
+        raise RuntimeError(
+            f"copy-on-write {what} matches more than {cap} data files; "
+            "this snapshot emulation keeps the matched-file manifest on "
+            "the driver — raise SPARK_GRAFT_MAX_COW_FILES if the driver "
+            "has memory for it, or narrow the predicate")
+    return ([os.path.basename(r["_f"]) for r in rows],
+            sum(r["count"] for r in rows))
+
+
 def _project_schema(df: DataFrame, ops: List[Dict]) -> DataFrame:
     """Apply manifest schema ops (ALTER TABLE history) to a raw file-union
     DataFrame, yielding the table's logical schema — shared by read() and
@@ -329,8 +362,7 @@ class SnapshotTable:
         return names, parts
 
     def _stage(self, df: DataFrame) -> str:
-        # logical -> physical mapping for re-added columns (see read());
-        # inputs carrying physical names already (raw CoW rewrites) no-op
+        # logical -> physical mapping for re-added columns (see read())
         try:
             ops = self._manifest().get("schema_ops", [])
         except FileNotFoundError:
@@ -630,65 +662,61 @@ class SnapshotTable:
         return self.append(df.sparkSession, df,
                            _extra={"stream_batch_id": int(batch_id)})
 
+    # -- copy-on-write DML (UPDATE / DELETE / MERGE) -------------------------
+    # Each statement reads the live files once to find the files holding a
+    # changed row, and how many rows (the predicate, or a semi-join with the
+    # source keys, over a materialized ``input_file_name()``), reads just
+    # those files again, and writes and commits their rewrite: untouched
+    # files are shared with the previous snapshot.
+
+    def _rewrite(self, m: Dict, operation: str, replaced: List[str],
+                 df: DataFrame, stale=()) -> Tuple[int, int]:
+        """Write ``df`` as new files and commit them on manifest ``m`` in
+        place of its ``replaced`` files; returns (version, files written).
+        A geometry column in ``stale`` was given new values, so its stored
+        envelope is dropped and derived again."""
+        added, extra = self._write(df.drop(*[
+            _env(g) for g in m.get("geometry_columns", []) if g in stale]))
+        gone = set(replaced)
+        v = self._commit([f for f in m["files"] if f not in gone] + added,
+                         operation, base_version=m["version"],
+                         extra=extra or None)
+        return v, len(added)
+
     def update_where(self, spark: SparkSession,
                      assignments: Dict[str, object], predicate) -> dict:
         """Copy-on-write UPDATE: rewrite only files containing matches; the
         untouched files are *shared* with the previous snapshot."""
         pred = _to_col(predicate)
         m = self._manifest()
-        ops = m.get("schema_ops", [])
-        live = [os.path.join(self.path, f) for f in m["files"]]
-        df = _project_schema(
-            spark.read.option("mergeSchema", "true").parquet(*live), ops)
-        cols = _user(df, m).columns
-        unknown = set(assignments) - set(cols)
-        if unknown:
-            raise ValueError(f"UPDATE SET references unknown column(s) "
-                             f"{sorted(unknown)} (table has "
-                             f"{sorted(cols)})")
-        from .dml import bounded_file_list
-        touched = bounded_file_list(
-            df.withColumn("_f", F.input_file_name())
-            .filter(pred).select("_f").distinct(), "update")
+        live = self._frame(spark, m, m["files"])
+        _known("UPDATE SET", assignments, _user(live, m).columns)
+        touched, n = bounded_file_list(live, lambda d: d.filter(pred),
+                                       "update")
         if not touched:
-            return {"version": m["version"], "files_rewritten": 0}
-        sub = _project_schema(
-            spark.read.option("mergeSchema", "true").parquet(*touched), ops)
-        updated = sub.select(*[
-            (F.when(pred, _to_col(assignments[c]).cast(sub.schema[c].dataType))
-             .otherwise(F.col(c))).alias(c) if c in assignments else F.col(c)
-            for c in sub.columns])
-        # an assigned geometry's stored envelope would be stale: re-derived
-        added, extra = self._write(updated.drop(*[
-            _env(g) for g in m.get("geometry_columns", []) if g in assignments]))
-        touched_names = {os.path.basename(f) for f in touched}
-        kept = [f for f in m["files"] if f not in touched_names]
-        v = self._commit(kept + added, "update", base_version=m["version"],
-                         extra=extra or None)
-        return {"version": v, "files_rewritten": len(touched)}
+            return {"version": m["version"], "files_rewritten": 0,
+                    "rows_updated": 0}
+        sub = self._frame(spark, m, touched)
+        v, _ = self._rewrite(m, "update", touched, sub.select(*[
+            F.when(pred, _to_col(assignments[c]).cast(sub.schema[c].dataType))
+            .otherwise(F.col(c)).alias(c) if c in assignments else F.col(c)
+            for c in sub.columns]), stale=assignments)
+        return {"version": v, "files_rewritten": len(touched),
+                "rows_updated": n}
 
     def delete_where(self, spark: SparkSession, predicate) -> dict:
         pred = _to_col(predicate)
         m = self._manifest()
-        ops = m.get("schema_ops", [])
-        live = [os.path.join(self.path, f) for f in m["files"]]
-        df = _project_schema(
-            spark.read.option("mergeSchema", "true").parquet(*live), ops)
-        from .dml import bounded_file_list
-        touched = bounded_file_list(
-            df.withColumn("_f", F.input_file_name())
-            .filter(pred).select("_f").distinct(), "delete")
+        live = self._frame(spark, m, m["files"])
+        touched, n = bounded_file_list(live, lambda d: d.filter(pred),
+                                       "delete")
         if not touched:
-            return {"version": m["version"], "files_rewritten": 0}
-        sub = _project_schema(
-            spark.read.option("mergeSchema", "true").parquet(*touched), ops)
-        kept_rows = sub.filter(~pred | pred.isNull())
-        added, extra = self._write(kept_rows)
-        touched_names = {os.path.basename(f) for f in touched}
-        kept = [f for f in m["files"] if f not in touched_names]
-        v = self._commit(kept + added, "delete", base_version=m["version"],
-                         extra=extra or None)
-        return {"version": v, "files_rewritten": len(touched)}
+            return {"version": m["version"], "files_rewritten": 0,
+                    "rows_deleted": 0}
+        v, _ = self._rewrite(m, "delete", touched, self._frame(
+            spark, m, touched).filter(~pred | pred.isNull()))
+        return {"version": v, "files_rewritten": len(touched),
+                "rows_deleted": n}
 
     def merge_into(self, spark: SparkSession, source: DataFrame, on: str,
                    update_cols: Optional[List[str]] = None,
@@ -698,25 +726,16 @@ class SnapshotTable:
         UPDATE (all or ``update_cols``), optional WHEN NOT MATCHED THEN
         INSERT — one new snapshot, untouched files shared with the parent.
 
-        Same scale shape as ``operators.dml.merge_into``: touched files are
-        found by semi-joining the materialized file-name column against the
-        source keys (hash join at any key count — no driver-side key list,
-        no full-rewrite fallback), duplicate source keys raise per SQL MERGE
-        cardinality rules, and matched/inserted row counts ride the rewrite
-        job as ``Observation`` metrics (no second scan)."""
+        Touched files are found by semi-joining the materialized file-name
+        column against the source keys (hash join at any key count — no
+        driver-side key list, no full-rewrite fallback); duplicate source
+        keys raise per SQL MERGE cardinality rules."""
         m = self._manifest()
-        ops = m.get("schema_ops", [])
-        live = [os.path.join(self.path, f) for f in m["files"]]
-        target = _project_schema(
-            spark.read.option("mergeSchema", "true").parquet(*live), ops)
+        target = self._frame(spark, m, m["files"])
         cols = target.columns
         user = _user(target, m).columns
         update_cols = update_cols or [c for c in user if c != on]
-        unknown = set(update_cols) - set(user)
-        if unknown:
-            raise ValueError(
-                f"MERGE UPDATE SET references unknown column(s) "
-                f"{sorted(unknown)} (table has {sorted(user)})")
+        _known("MERGE UPDATE SET", update_cols, user)
 
         dup = (source.groupBy(on).agg(F.count(F.lit(1)).alias("_n"))
                .filter(F.col("_n") > 1).limit(1).collect())
@@ -725,25 +744,19 @@ class SnapshotTable:
                 f"MERGE: source has multiple rows for key {on}={dup[0][on]!r} "
                 "(SQL MERGE forbids multiple matches per target row)")
         keys = source.select(on).distinct()
-
-        from .dml import bounded_file_list
-        touched = [] if not update_when_matched else bounded_file_list(
-            target.withColumn("_f", F.input_file_name())
-            .join(keys, on, "left_semi")
-            .select("_f").distinct(), "merge")
+        # with no duplicate source key, each target row with a source key
+        # is updated once
+        touched, updated = bounded_file_list(
+            target, lambda d: d.join(keys, on, "left_semi"), "merge") \
+            if update_when_matched else ([], 0)
 
         src = source.select(*[F.col(c).alias(f"_src_{c}")
                               for c in source.columns])
         parts = []
-        obs_u = obs_i = None
+        obs_i = None
         if touched:
-            sub = _project_schema(
-                spark.read.option("mergeSchema", "true").parquet(*touched),
-                ops)
+            sub = self._frame(spark, m, touched)
             joined = sub.join(src, sub[on] == src[f"_src_{on}"], "left")
-            obs_u = Observation()
-            joined = joined.observe(obs_u,
-                                    F.count(F.col(f"_src_{on}")).alias("n"))
             parts.append(joined.select(*[
                 (F.when(F.col(f"_src_{on}").isNotNull(), F.col(f"_src_{c}"))
                  .otherwise(F.col(c))).alias(c)
@@ -768,17 +781,12 @@ class SnapshotTable:
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=True)
-        # an updated or inserted geometry has no valid stored envelope:
-        # re-derived
-        added, extra = self._write(out.drop(*[
-            _env(g) for g in m.get("geometry_columns", [])
-            if g in update_cols or insert_when_not_matched]))
-        touched_names = {os.path.basename(f) for f in touched}
-        kept = [f for f in m["files"] if f not in touched_names]
-        v = self._commit(kept + added, "merge", base_version=m["version"],
-                         extra=extra or None)
+        # an updated or inserted geometry has no valid stored envelope
+        v, _ = self._rewrite(m, "merge", touched, out,
+                             stale=user if insert_when_not_matched
+                             else update_cols)
         return {"version": v, "files_rewritten": len(touched),
-                "rows_updated": obs_u.get["n"] if obs_u else 0,
+                "rows_updated": updated,
                 "rows_inserted": obs_i.get["n"] if obs_i else 0}
 
     def compact(self, spark: SparkSession,
@@ -801,13 +809,10 @@ class SnapshotTable:
         n_out = max(1, -(-total // target_file_bytes))  # ceil
         # the logical frame: shape classes are keyed by the columns' current
         # names, and a column only some files carry is kept
-        df = self._frame(spark, m, small)
-        added, extra = self._write(df.repartition(n_out))
-        kept = [f for f in m["files"] if f not in set(small)]
-        v = self._commit(kept + added, "compact", base_version=m["version"],
-                         extra=extra or None)
+        v, written = self._rewrite(m, "compact", small, self._frame(
+            spark, m, small).repartition(n_out))
         return {"version": v, "files_compacted": len(small),
-                "files_written": len(added)}
+                "files_written": written}
 
     def rewrite_zorder(self, spark: SparkSession, cols: List[str],
                        bits: int = 10, n_files: Optional[int] = None) -> dict:
@@ -833,10 +838,8 @@ class SnapshotTable:
                .repartitionByRange(n_out, "_z")
                .sortWithinPartitions("_z")
                .drop("_z"))
-        added, extra = self._write(out)
-        v = self._commit(added, "zorder", base_version=m["version"],
-                         extra=extra or None)
-        return {"version": v, "files_written": len(added)}
+        v, written = self._rewrite(m, "zorder", m["files"], out)
+        return {"version": v, "files_written": written}
 
     # -- metadata tables (Iceberg's  t.history / t.files  surface) ----------
 
@@ -880,11 +883,7 @@ class SnapshotTable:
         only_to = sorted(set(m_to["files"]) - set(m_from["files"]))
 
         def read_files(names, m):
-            if not names:
-                return None
-            df = (spark.read.option("mergeSchema", "true")
-                  .parquet(*[os.path.join(self.path, f) for f in names]))
-            return _user(_project_schema(df, m.get("schema_ops", [])), m)
+            return _user(self._frame(spark, m, names), m) if names else None
 
         old = read_files(only_from, m_from)
         new = read_files(only_to, m_to)

@@ -35,7 +35,7 @@ def register_all(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def sql(spark: SparkSession, statement: str, tables: dict | None = None):
+def sql(spark: SparkSession, statement: str):
     """One SQL front door — the user-facing parity point with the
     reference, where after ``SedonaIcebergExtensions`` injection every
     statement is just ``spark.sql(...)`` (App.scala:42-66).
@@ -44,9 +44,9 @@ def sql(spark: SparkSession, statement: str, tables: dict | None = None):
     and the root node's class picks its handler (``operators.ddl.HANDLERS``):
     CREATE/CTAS ``USING ICEBERG``, DROP, INSERT, (UN)CACHE, CALL, ALTER TABLE
     columns, SHOW TABLES and DESCRIBE run on the snapshot-table warehouse;
-    UPDATE / DELETE / MERGE on a catalog table's versioned CoW, or through
-    ``operators.dml`` on a ``tables`` parquet path.  Text the parser rejects
-    may be Iceberg extension grammar.  Anything else returns
+    UPDATE / DELETE / MERGE on a catalog table's versioned copy-on-write
+    (``operators.snapshots``).  Text the parser rejects may be Iceberg
+    extension grammar.  Anything else returns
     ``operators.sql_join.spatial_sql``'s DataFrame, catalog relations
     spliced to their views.  A statement naming no catalog table, or any
     DDL/DML with a real Iceberg runtime configured, runs on Spark as written.
@@ -58,7 +58,7 @@ def sql(spark: SparkSession, statement: str, tables: dict | None = None):
 
     delegate = ddl.delegate_to_iceberg(spark)
     try:
-        st = ddl.Statement(spark, statement, tables)
+        st = ddl.Statement(spark, statement)
     except ParseException:
         if delegate:
             return spark.sql(statement)

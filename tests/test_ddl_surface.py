@@ -1,8 +1,9 @@
 """Table-management parity surface (reference Tier D sinks,
 App.scala:42-52,76-78): CREATE TABLE with a geometry (WKB binary) column,
 INSERT INTO with ST_ constructors, CTAS, dynamic partition overwrite, DROP —
-all through spark.sql over managed parquet tables (plain-parquet mode;
-Iceberg-runtime row-level DML is out of scope in this container, SURVEY §7.2 M6)."""
+all through spark.sql over Spark's own managed parquet tables.  Row-level
+DML (UPDATE/DELETE/MERGE) runs on the engine's catalog (snapshot) tables
+through ``session.sql``, as the front-door test below does."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -141,7 +142,7 @@ def test_cache_table_then_spatial_join(spark, sf_dir):
         cc.unpersist(); nc.unpersist()
 
 
-def test_unified_sql_front_door(spark, tmp_path):
+def test_unified_sql_front_door(spark, tmp_path, monkeypatch):
     """session.sql routes every statement family through one entry point —
     the reference's post-injection UX (App.scala:42-66: DDL, spatial-join
     SELECT, and UPDATE all through spark.sql)."""
@@ -162,10 +163,17 @@ def test_unified_sql_front_door(spark, tmp_path):
     assert "BroadcastNestedLoopJoin" not in plan
     assert [(r.id_p, r.id_b) for r in df.collect()] == [(1, 10), (2, 20)]
 
-    # DML -> copy-on-write result dict
-    path = str(tmp_path / "fd_tbl")
-    spark.range(0, 50).selectExpr("id", "CAST(id AS DOUBLE) AS v") \
-        .repartition(4).write.parquet(path)
-    res = sql(spark, "UPDATE fd_tbl SET v = 0.0 WHERE id < 10", {"fd_tbl": path})
-    assert res["rows_updated"] == 10
-    assert spark.read.parquet(path).filter("v = 0.0").count() == 10
+    # DML on a catalog table -> copy-on-write result dict
+    from sedona_iceberg_extension_spark.operators import ddl
+    monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE", str(tmp_path / "wh"))
+    ddl.reset()
+    try:
+        sql(spark, "CREATE TABLE demo.db.fd_tbl USING ICEBERG AS SELECT "
+                   "/*+ REPARTITION(4) */ id, CAST(id AS DOUBLE) AS v "
+                   "FROM RANGE(0, 50) t(id)")
+        res = sql(spark, "UPDATE demo.db.fd_tbl SET v = 0.0 WHERE id < 10")
+        assert res["rows_updated"] == 10
+        assert sql(spark, "SELECT * FROM demo.db.fd_tbl").filter(
+            "v = 0.0").count() == 10
+    finally:
+        ddl.reset()
