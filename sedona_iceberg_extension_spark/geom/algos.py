@@ -62,7 +62,9 @@ def _seg_intersect(a: Coord, b: Coord, c: Coord, d: Coord) -> bool:
     """Segments ab and cd share at least one point."""
     o1, o2 = _orient(a, b, c), _orient(a, b, d)
     o3, o4 = _orient(c, d, a), _orient(c, d, b)
-    if o1 != o2 and o3 != o4:
+    # strict sign changes only: an orientation within EPS of 0 is decided
+    # by the on-segment tests below, not counted as a side
+    if o1 * o2 < 0 and o3 * o4 < 0:
         return True
     return (
         (o1 == 0 and _on_segment(c, a, b))
@@ -373,14 +375,32 @@ def _atomic_covered_by(b: Geometry, a: Geometry) -> bool:
         if ka == WKB_POINT:
             return all(_dist_pt_pt(p, a.coords) <= EPS for p in b.coords)
         if ka == WKB_LINESTRING:
-            # each segment of b must lie within segments of a: endpoint+midpoint test
+            # each segment pq of b must be covered by the union of the
+            # segments of a collinear with it, projected onto pq as
+            # parameter intervals (sampled points can miss a gap)
             for i in range(len(b.coords) - 1):
                 p, q = b.coords[i], b.coords[i + 1]
-                m = ((p[0] + q[0]) / 2, (p[1] + q[1]) / 2)
-                for t in (p, q, m):
-                    if not any(_on_segment(t, a.coords[j], a.coords[j + 1])
+                dx, dy = q[0] - p[0], q[1] - p[1]
+                l2 = dx * dx + dy * dy
+                if l2 == 0:
+                    if not any(_on_segment(p, a.coords[j], a.coords[j + 1])
                                for j in range(len(a.coords) - 1)):
                         return False
+                    continue
+                spans = []
+                for j in range(len(a.coords) - 1):
+                    c, d = a.coords[j], a.coords[j + 1]
+                    if _orient(p, q, c) == 0 and _orient(p, q, d) == 0:
+                        tc = ((c[0] - p[0]) * dx + (c[1] - p[1]) * dy) / l2
+                        td = ((d[0] - p[0]) * dx + (d[1] - p[1]) * dy) / l2
+                        spans.append((min(tc, td), max(tc, td)))
+                reach = 0.0
+                for lo, hi in sorted(spans):
+                    if lo > reach + EPS:
+                        break
+                    reach = max(reach, hi)
+                if reach < 1 - EPS:
+                    return False
             return True
         # line within polygon: endpoints+midpoints inside, no proper exit crossings
         for i in range(len(b.coords) - 1):

@@ -521,7 +521,7 @@ def bpe_merge_rounds(v: DataFrame, rounds: int = 3) -> list:
     when start > stop), emitting two NULL pairs per 1-symbol word whose
     summed weight can win the argmax — a crash (NULL merge pair) and a
     divergence from any engine whose range(1, len) is simply empty."""
-    merges = []
+    merges, cached = [], []
     for rnd in range(1, rounds + 1):
         arr = F.split("ws", " ")
         pairs = (v.filter(F.size(arr) >= 2)
@@ -544,4 +544,7 @@ def bpe_merge_rounds(v: DataFrame, rounds: int = 3) -> list:
                 F.concat(F.lit(" "), F.col("ws"), F.lit(" ")),
                 F.lit(f" {pair} "), F.lit(f" {merged} "))).alias("ws"),
             "wf").persist()
+        cached.append(v)
+    for frame in cached:
+        frame.unpersist()
     return merges

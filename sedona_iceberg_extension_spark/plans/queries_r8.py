@@ -1186,6 +1186,7 @@ def q_bpe_merge_rounds(spark, sf_dir):
     # otherwise emit NULL pairs — see the helper's docstring) and is
     # property-tested against a pure-Python BPE mirror
     merges = T.bpe_merge_rounds(v, rounds=3)
+    v.unpersist()
     return spark.createDataFrame(
         merges, "round int, pair string, merged string, n long") \
         .orderBy("round")

@@ -113,12 +113,10 @@ def get_session(app_name: str = "sedona-iceberg-extension-spark",
         # driver testdata writes TIMESTAMP(NANOS) parquet — read as long,
         # converted back to timestamp by sources.tables.load_tables
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # UI off in production/bench sessions (driver-side cost and a port
-        # per JVM); tools/profile_query.py sets the env flag to read
-        # per-stage metrics over the UI's REST API while profiling
-        .config("spark.ui.enabled",
-                "true" if os.environ.get("SPARK_GRAFT_PROFILE_UI") == "1"
-                else "false")
+        # UI off (driver-side cost and a port per JVM); stage metrics are
+        # still read from the status store (sc.statusStore()), as
+        # tools/scan_budget.py and perfbench do
+        .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         # Initial heap = max heap (and G1, the long-service collector):
         # with the default tiny -Xms, the FIRST full-SF execution of every
@@ -158,10 +156,9 @@ def get_session(app_name: str = "sedona-iceberg-extension-spark",
         # to 1 makes local mode exercise the at-scale writer everywhere.
         # Known trade (round 10): the sort writer costs unprimed first
         # runs ~0.5-1 s on the heaviest query (sorting before the JIT
-        # warms) — SPARK_GRAFT_BYPASS_MERGE exists so the true_cold A/B
-        # can toggle it per fresh JVM (round-12 verdict watch item).
-        .config("spark.shuffle.sort.bypassMergeThreshold",
-                os.environ.get("SPARK_GRAFT_BYPASS_MERGE", "1"))
+        # warms); a fresh-JVM A/B found no true_cold effect, so the
+        # writer choice stays fixed (README, round 12).
+        .config("spark.shuffle.sort.bypassMergeThreshold", "1")
     )
     # Shuffle-local storage on tmpfs when available.  On this class of
     # virtualized host, profiling showed shuffle WRITES dominating task

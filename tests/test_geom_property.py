@@ -5,7 +5,7 @@ golden-cased."""
 
 import math
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from sedona_iceberg_extension_spark.geom import from_wkb, from_wkt, to_wkb, to_wkt
 from sedona_iceberg_extension_spark.geom.model import Geometry
@@ -168,6 +168,10 @@ def poly_lines(draw):
 
 @settings(max_examples=100, deadline=None)
 @given(poly_lines(), poly_lines())
+# lb's endpoints and midpoint lie on la, but (0, 4) does not: covers must
+# not be decided by sampling those three points
+@example(Geometry(2, [(0.0, 0.0), (0.0, -8.0), (1.0, 0.0), (-1.0, 16.0)]),
+         Geometry(2, [(0.0, 8.0), (0.0, -8.0)]))
 def test_line_line_difference_length_partition(la, lb):
     """length(A∩B) + length(A−B) == length(A) for line⊖line: the collinear
     overlap removal partitions A exactly (crossing points remove nothing).
@@ -352,6 +356,10 @@ def test_rotate_preserves_metrics(g, theta):
 
 @settings(max_examples=150, deadline=None)
 @given(geoms, geoms)
+# a near-degenerate segment whose orientation against the other is within
+# EPS of 0 at one end: 1 apart, not intersecting
+@example(Geometry(2, [(0.0, 0.0), (0.0, 2.220446049250313e-16)]),
+         Geometry(2, [(-1.0, 0.0), (-4505.0, 0.0)]))
 def test_nearest_points_agree_with_distance(g1, g2):
     from sedona_iceberg_extension_spark.geom import algos as A
     np_ = A.nearest_points(g1, g2)

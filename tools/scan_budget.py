@@ -7,8 +7,9 @@ propagation round (10-17 scans per query), the dedup funnel re-running its
 survivor stage per consumer, k-means re-sampling per Lloyd iteration.  The
 class recurs whenever a new iterative query is added, so this tool pins
 each one's TOTAL STAGE INPUT RECORDS (file-scan rows + re-read
-cache/checkpoint rows, from the UI REST stage metrics — the same counters
-tools/profile_query.py reads) against a declared budget at sf0.001.
+cache/checkpoint rows, read per completed stage attempt from Spark's
+status store, sc.statusStore(), which the session keeps with the UI off)
+against a declared budget at sf0.001.
 
 A corpus re-scan per round multiplies the dominant term by the round
 count, so budgets sit ~2x above the measured healthy value: a regression
@@ -28,17 +29,19 @@ Usage:  python tools/scan_budget.py [--check] [query ...]
     names.  Always exit 0 in discover mode: drift is adjudicated in
     tools/REHEARSALS.md (one line per round), not auto-failed —
     legitimate plan rewrites move these numbers.
-Run by tests/test_scan_budget.py as a subprocess (the gate needs its own
-session: the engine disables the UI outside SPARK_GRAFT_PROFILE_UI=1).
+tests/test_scan_budget.py runs the same gate (run_gate) in the test
+session.  Every gate entry first clears the cache, so an earlier query's
+persist() is not substituted into its plan.  Discover mode does not: its
+committed baseline was taken without clearing.
 
 Scoping: batch queries are job-group scoped (setJobGroup + statusTracker).
 Structured-Streaming micro-batch jobs run on the stream's OWN thread under
 the stream's runId job group, so the ``streaming_*`` entries are
-DELTA-scoped instead: new completed stages between a before/after snapshot
-of the REST stage table (sound here because the gate runs queries
-serially in one session).  A streaming regression that re-executes the
-static side per micro-batch — the class the r13 verdict named — shows up
-directly in the delta.
+DELTA-scoped instead: new completed stage attempts between a before/after
+read of the status store (sound because the gate runs queries serially
+in one session and asserts that no streaming query is active).  A
+streaming regression that re-executes the static side per micro-batch —
+the class the r13 verdict named — shows up directly in the delta.
 
 Watch note (r13 VERDICT item #5) — six queries were A/B'd and
 DELIBERATELY left redundant (every sharing mechanism measured slower
@@ -57,8 +60,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -138,38 +139,22 @@ BUDGETS = {
 }
 
 
-def _stage_snapshot(spark):
+def _completed_stages(spark):
     """{(stageId, attemptId): inputRecords} over every completed stage
-    attempt (REST).  Keyed per ATTEMPT (r14 ADVICE): the /stages endpoint
-    returns one entry per attempt, so a stageId-only dict collapsed
-    retried attempts to one arbitrary entry and undercounted the re-read
-    input records the retry paid."""
+    attempt in the status store.  Waits for the listener bus to deliver
+    every event posted so far first: the store is fed asynchronously, so
+    a read right after collect() could miss a just-completed stage.  Keyed
+    per attempt: a retried attempt pays its own input records."""
     sc = spark.sparkContext
-    url = (f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
-           "/stages?status=complete")
-    with urllib.request.urlopen(url) as fh:
-        stages = json.loads(fh.read())
-    return {(st["stageId"], st.get("attemptId", 0)): st.get("inputRecords", 0)
-            for st in stages}
-
-
-def _settled_stage_snapshot(spark, tries: int = 20, pause: float = 0.15):
-    """_stage_snapshot once the completed-stage set is STABLE across two
-    consecutive reads (r14 ADVICE): the status store is fed asynchronously
-    from the listener bus, so a snapshot taken immediately after collect()
-    can miss a just-completed stage — undercounting THIS query's delta and
-    misattributing the stragglers to the NEXT entry's.  Bounded: after
-    ``tries`` reads, return the last one (the gate's ~1.5x margins absorb
-    a straggler the bus holds for >3 s, and the final read is never
-    *older* than the naive immediate one)."""
-    prev = _stage_snapshot(spark)
-    for _ in range(tries):
-        time.sleep(pause)
-        cur = _stage_snapshot(spark)
-        if cur.keys() == prev.keys():
-            return cur
-        prev = cur
-    return prev
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(10_000)
+    jvm = sc._jvm
+    stages = jsc.statusStore().stageList(
+        [jvm.org.apache.spark.status.api.v1.StageStatus.COMPLETE],
+        False, False, sc._gateway.new_array(jvm.double, 0), [])
+    return {(st.stageId(), st.attemptId()): st.inputRecords()
+            for st in jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+                stages)}
 
 
 def delta_input_records(spark, fn, sf_dir: str) -> int:
@@ -178,35 +163,64 @@ def delta_input_records(spark, fn, sf_dir: str) -> int:
 
     Used for the streaming_* entries: availableNow micro-batch jobs run on
     the stream's own thread under the stream's runId job group, so the
-    job-group scoper above cannot see them.  Sound because the gate runs
-    queries serially in one session — every new completed stage between
-    the snapshots belongs to this query (its batch setup jobs AND every
-    micro-batch job, including foreachBatch work).  Both snapshots are
-    SETTLED reads (stable across two polls) so late listener-bus events
-    land in the right query's delta."""
-    before = _settled_stage_snapshot(spark)
+    job-group scoper below cannot see them.  Sound because entries run
+    serially and no streaming query is active before this one starts:
+    every new completed stage between the reads belongs to this query
+    (its batch setup jobs AND every micro-batch job, including
+    foreachBatch work)."""
+    if spark.streams.active:
+        raise RuntimeError("a streaming query is active: its stages would "
+                           "land in the delta")
+    before = _completed_stages(spark)
     fn(spark, sf_dir).collect()
-    after = _settled_stage_snapshot(spark)
+    after = _completed_stages(spark)
     return sum(v for key, v in after.items() if key not in before)
 
 
 def gated_input_records(spark, fn, sf_dir: str, group: str) -> int:
     """Total inputRecords over every stage of every job the callable ran,
-    scoped by job group via statusTracker + the UI REST stage table."""
+    scoped by job group via statusTracker + the status store.  Jobs the
+    group already held (a re-run in the same session) are left out."""
     sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    earlier = set(tracker.getJobIdsForGroup(group))
     sc.setJobGroup(group, group)
-    fn(spark, sf_dir).collect()
-    sc.setJobGroup("idle", "idle")
+    try:
+        fn(spark, sf_dir).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    stages = _completed_stages(spark)
     stage_ids = set()
-    for j in sc.statusTracker().getJobIdsForGroup(group) or []:
-        ji = sc.statusTracker().getJobInfo(j)
+    for j in set(tracker.getJobIdsForGroup(group)) - earlier:
+        ji = tracker.getJobInfo(j)
         if ji:
             stage_ids.update(ji.stageIds)
-    # settled read + per-attempt keys for the same reasons as the delta
-    # scoper: the REST table lags the listener bus, and retried attempts
-    # each pay their own input records
-    return sum(v for (sid, _att), v in _settled_stage_snapshot(spark).items()
-               if sid in stage_ids)
+    return sum(v for (sid, _att), v in stages.items() if sid in stage_ids)
+
+
+def input_records(spark, name: str, sf_dir: str) -> int:
+    """One declared query's input records: delta-scoped for streaming_*
+    names, job-group ``scan-budget-<name>`` scoped otherwise."""
+    from sedona_iceberg_extension_spark.plans.queries import QUERIES
+
+    if name.startswith("streaming_"):
+        return delta_input_records(spark, QUERIES[name].fn, sf_dir)
+    return gated_input_records(spark, QUERIES[name].fn, sf_dir,
+                               f"scan-budget-{name}")
+
+
+def run_gate(spark, sf_dir: str, names=None) -> list:
+    """One {"query", "input_records", "budget", "ok"} record per gated
+    query (every BUDGETS entry unless ``names`` is given).  Each entry
+    clears the cache first: in a shared session an earlier caller's
+    persist() would otherwise be substituted into its plan."""
+    out = []
+    for name in (names or list(BUDGETS)):
+        spark.catalog.clearCache()
+        got = input_records(spark, name, sf_dir)
+        out.append({"query": name, "input_records": got,
+                    "budget": BUDGETS[name], "ok": got <= BUDGETS[name]})
+    return out
 
 
 def compare_discover(rows, baseline_path, tol=0.25):
@@ -245,12 +259,13 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SCAN_BUDGET_SF_DIR",
                             "/root/testdata/sf0.001")
 
-    os.environ["SPARK_GRAFT_PROFILE_UI"] = "1"   # session.py UI hook
+    from py4j.protocol import Py4JError
+    from pyspark.errors import PySparkException
+
     from sedona_iceberg_extension_spark.plans.queries import QUERIES
     from sedona_iceberg_extension_spark.session import get_session
 
     spark = get_session(master="local[4]", shuffle_partitions=8)
-    assert spark.sparkContext.uiWebUrl, "gate needs the UI REST API"
 
     if discover:
         # Audit mode (not a gate): measure EVERY declared query and print
@@ -261,18 +276,8 @@ def main() -> int:
         rows = []
         for name in (names or QUERIES):
             try:
-                if name.startswith("streaming_"):
-                    # delta-scoped like the gate: micro-batch stages run
-                    # under the stream's own job group and would otherwise
-                    # be silently undercounted in the audit
-                    got = delta_input_records(spark, QUERIES[name].fn,
-                                              sf_dir)
-                else:
-                    got = gated_input_records(spark, QUERIES[name].fn,
-                                              sf_dir,
-                                              f"scan-discover-{name}")
-                rows.append((got, name))
-            except Exception as e:
+                rows.append((input_records(spark, name, sf_dir), name))
+            except (PySparkException, Py4JError) as e:
                 print(f"# {name} failed: {e}", file=sys.stderr)
         for got, name in sorted(rows, reverse=True):
             print(json.dumps({"query": name, "input_records": got}))
@@ -287,20 +292,11 @@ def main() -> int:
         spark.stop()
         return 0
 
-    failures = 0
-    for name in (names or list(BUDGETS)):
-        budget = BUDGETS[name]
-        if name.startswith("streaming_"):
-            got = delta_input_records(spark, QUERIES[name].fn, sf_dir)
-        else:
-            got = gated_input_records(spark, QUERIES[name].fn, sf_dir,
-                                      f"scan-budget-{name}")
-        ok = got <= budget
-        failures += 0 if ok else 1
-        print(json.dumps({"query": name, "input_records": got,
-                          "budget": budget, "ok": ok}))
+    records = run_gate(spark, sf_dir, names)
+    for rec in records:
+        print(json.dumps(rec))
     spark.stop()
-    return 1 if (check and failures) else 0
+    return 1 if (check and not all(r["ok"] for r in records)) else 0
 
 
 if __name__ == "__main__":
