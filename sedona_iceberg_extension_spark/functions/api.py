@@ -121,6 +121,12 @@ def st_geom(wkb_col: ColumnOrName, env_col: Optional[ColumnOrName] = None) -> Ge
 
 
 def st_lit(geom_or_wkt) -> GeomExpr:
+    """A constant geometry operand (a ``Geometry`` or WKT) — the DataFrame
+    API's spelling of a literal ``ST_GeomFromWKT('...')`` argument.  It is
+    the one constructor of the ``lit`` kind, whose envelope is a driver-side
+    constant: a literal rectangle or point compiles to pure envelope
+    algebra, any other literal to the envelope prefilter AND the exact
+    predicate (``test_wkb_with_env_prefilter`` pins that plan)."""
     g = geom_or_wkt
     if isinstance(g, str):
         from ..geom.io import from_wkt

@@ -44,36 +44,24 @@ def _has_checkpoint_dir(df: DataFrame) -> bool:
     """Whether the session has a reliable checkpoint dir configured.
 
     The ``SPARK_GRAFT_CHECKPOINT_DIR`` env override wins outright (see
-    above).  Otherwise probes the PUBLIC ``SparkContext.getCheckpointDir()``
-    first and keeps the ``_jsc`` JVM internal only as a fallback (r13
-    ADVICE: on runtimes where ``sparkContext`` itself is unavailable —
-    e.g. Spark Connect — a silent ``False`` would route a cluster WITH a
+    above).  Otherwise probes the public ``SparkContext.getCheckpointDir()``.
+    On runtimes without a ``sparkContext`` (Spark Connect raises
+    ``PySparkAttributeError``, an ``AttributeError``) it warns rather than
+    silently defaulting: a quiet ``False`` would route a cluster WITH a
     configured dir onto unreplicated localCheckpoint, the exact failure
-    mode this module exists to avoid; when both probes FAIL, warn rather
-    than silently defaulting)."""
+    mode this module exists to avoid (r13 ADVICE)."""
     if os.environ.get(FORCE_CHECKPOINT_ENV):
         return True
     try:
         sc = df.sparkSession.sparkContext
-    except Exception:
+    except AttributeError:
         warnings.warn(
             "truncate_lineage: sparkContext unavailable (Spark Connect?) — "
             "cannot probe for a checkpoint dir; falling back to "
             "localCheckpoint, which is UNREPLICATED executor-local state",
             RuntimeWarning, stacklevel=3)
         return False
-    try:
-        return sc.getCheckpointDir() is not None
-    except Exception:
-        pass
-    try:
-        return bool(sc._jsc.sc().getCheckpointDir().isDefined())
-    except Exception:
-        warnings.warn(
-            "truncate_lineage: checkpoint-dir probe failed on both the "
-            "public and JVM paths; falling back to localCheckpoint",
-            RuntimeWarning, stacklevel=3)
-        return False
+    return sc.getCheckpointDir() is not None
 
 
 def truncate_lineage(df: DataFrame, eager: bool = False) -> DataFrame:

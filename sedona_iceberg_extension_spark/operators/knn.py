@@ -22,6 +22,7 @@ from __future__ import annotations
 import math
 from typing import Optional, Tuple
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, functions as F
 
 from ..lineage import truncate_lineage
@@ -57,13 +58,17 @@ def knn_join(
     try:
         size = int(q._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         q_small = size <= bytes_cap
-    except Exception:
+    except Py4JJavaError:
+        # a plan whose statistics cannot be computed: fall to the probe
         pass
     if q_small is None:
         try:
             q_small = q.limit(broadcast_threshold_rows).count() < broadcast_threshold_rows
-        except Exception:
-            q_small = True
+        except Py4JJavaError:
+            # the probe job failed; grid is correct for any size (never
+            # broadcast an input of unknown size), and the join itself
+            # surfaces the input's failure when it runs
+            q_small = False
     if q_small:
         return _knn_broadcast(q, data, k, d_xy, tie_break)
     return _knn_grid(q, data, k, d_xy, initial_radius, max_rounds, tie_break)

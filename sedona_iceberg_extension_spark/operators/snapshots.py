@@ -12,8 +12,15 @@ module reproduces that mechanism over a plain parquet directory:
 - ``_snapshots/v{N}.json`` manifests record the live file set, operation,
   parent version, and commit timestamp (the manifest is metadata-scale:
   one name per file, like an Iceberg manifest list);
+- every manifest records under ``schema`` (Spark JSON, every field
+  nullable) the union of what its table's files hold, hidden envelopes
+  included: each commit carries the parent's forward and adds the written
+  frame's new fields, and refuses a column written in another type;
 - readers resolve a manifest (latest by default, any retained version for
-  time travel) and scan exactly its files;
+  time travel) and scan exactly its files in its recorded schema, so
+  planning a read opens no footer, as Iceberg plans from table metadata.
+  A manifest written before tables recorded a schema is read with the
+  footers' union, and commits on it record none;
 - ``rollback`` is a *new* commit whose file set equals an old version's
   (history is append-only, as in Iceberg);
 - ``expire`` removes old manifests and any data file no retained version
@@ -61,7 +68,8 @@ from typing import Dict, List, Optional, Tuple
 
 from pyspark.sql import (Column, DataFrame, Observation, SparkSession,
                          functions as F)
-from pyspark.sql.types import BinaryType
+from pyspark.sql.types import (ArrayType, BinaryType, DataType, MapType,
+                               StructField, StructType)
 
 from ..functions.api import add_geometry
 
@@ -146,6 +154,39 @@ def _project_schema(df: DataFrame, ops: List[Dict]) -> DataFrame:
             if op["name"] in df.columns:
                 df = df.drop(op["name"])
     return df
+
+
+def _nullable(dt: DataType, metadata: bool = True) -> DataType:
+    """``dt`` with every field, element and value nullable, nested ones
+    included; without field metadata unless ``metadata``."""
+    if isinstance(dt, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType, metadata),
+                                       True, f.metadata if metadata else None)
+                           for f in dt.fields])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType, metadata), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType, metadata),
+                       _nullable(dt.valueType, metadata), True)
+    return dt
+
+
+def _union(schema: Dict, written: Dict) -> Dict:
+    """The recorded ``schema`` (Spark JSON) plus the fields of ``written``
+    it lacks.  A written field whose type differs from the recorded one
+    (nullability and metadata aside) raises: no file may hold a column in a
+    type the table's reads cannot declare."""
+    have = {f.name: f for f in StructType.fromJson(schema).fields}
+    out = list(have.values())
+    for f in StructType.fromJson(written).fields:
+        old = have.get(f.name)
+        if old is None:
+            out.append(f)
+        elif _nullable(old.dataType, False) != _nullable(f.dataType, False):
+            raise ValueError(
+                f"column {f.name!r} is {old.dataType.simpleString()} in the "
+                f"table; cannot write it as {f.dataType.simpleString()}")
+    return _nullable(StructType(out)).jsonValue()
 
 
 def _env(col: str) -> str:
@@ -282,15 +323,19 @@ class SnapshotTable:
             "timestamp_ms": int(time.time() * 1000),
             "files": sorted(files),
         }
+        if latest is None:
+            manifest["schema"] = StructType().jsonValue()
         live = set(files)
         if latest is not None:
-            # schema evolution ops, the partition spec and the geometry
-            # columns are table metadata: carried forward by every commit
-            # (Iceberg: all live on the snapshot); per-file partition tuples
-            # and shape classes follow their files — entries for files no
-            # longer live are dropped
+            # the schema, its evolution ops, the partition spec and the
+            # geometry columns are table metadata: carried forward by every
+            # commit (Iceberg: all live on the snapshot); per-file partition
+            # tuples and shape classes follow their files — entries for
+            # files no longer live are dropped.  A parent without a schema
+            # (written before the table recorded one) passes none on.
             prev = self._manifest(latest)
-            for key in ("schema_ops", "partition_spec", "geometry_columns"):
+            for key in ("schema", "schema_ops", "partition_spec",
+                        "geometry_columns"):
                 if prev.get(key):
                     manifest[key] = prev[key]
             for key in ("file_partitions", "file_shapes"):
@@ -301,12 +346,17 @@ class SnapshotTable:
             extra = dict(extra)
             new = {"file_partitions": extra.pop("new_file_partitions", None),
                    "file_shapes": extra.pop("new_file_shapes", None)}
+            written = extra.pop("new_schema", None)
             manifest.update(extra)
+            if written and manifest.get("schema"):
+                manifest["schema"] = _union(manifest["schema"], written)
             for key, vals in new.items():
                 if vals:
                     manifest[key] = {**manifest.get(key, {}),
                                      **{f: v for f, v in vals.items()
                                         if f in live}}
+        if manifest.get("schema") is None:
+            manifest.pop("schema", None)
         tmp = os.path.join(self.snap_dir, f".v{v}.{uuid.uuid4().hex}.tmp")
         with open(tmp, "w") as fh:
             json.dump(manifest, fh)
@@ -361,8 +411,9 @@ class SnapshotTable:
         shutil.rmtree(staged, ignore_errors=True)
         return names, parts
 
-    def _stage(self, df: DataFrame) -> str:
-        # logical -> physical mapping for re-added columns (see read())
+    def _physical(self, df: DataFrame) -> DataFrame:
+        """``df`` under the physical names of re-added columns (see
+        ``_project_schema``)."""
         try:
             ops = self._manifest().get("schema_ops", [])
         except FileNotFoundError:
@@ -372,6 +423,9 @@ class SnapshotTable:
             if (op["op"] == "add" and phys and phys != op["name"]
                     and op["name"] in df.columns):
                 df = df.withColumnRenamed(op["name"], phys)
+        return df
+
+    def _stage(self, df: DataFrame) -> str:
         staged = os.path.join(os.path.dirname(self.path),
                               f".staged-{uuid.uuid4().hex}")
         spec = []
@@ -396,7 +450,8 @@ class SnapshotTable:
     def _write(self, df: DataFrame, partitions: bool = False,
                geometry: Optional[List[str]] = None) -> Tuple[List[str], Dict]:
         """Write ``df`` as new immutable data files; returns their names and
-        the commit metadata they bring: the geometry columns (the table's,
+        the commit metadata they bring: the schema the files hold, the
+        geometry columns (the table's,
         the declared ``geometry`` ones, and any ``BINARY`` column whose
         source carries ``geom_shape`` metadata), the files' shape classes
         and, with ``partitions``, their partition tuples.  A geometry
@@ -422,8 +477,9 @@ class SnapshotTable:
             obs = Observation()
             df = df.observe(obs, *[_shape_count(c, c in geo).alias(f"s{i}")
                                    for i, c in enumerate(binary)])
+        df = self._physical(df)
         names, parts = self._ingest_staged(self._stage(df))
-        extra: Dict = {}
+        extra: Dict = {"new_schema": df.schema.jsonValue()}
         if partitions and parts:
             extra["new_file_partitions"] = parts
         if geo:
@@ -435,12 +491,19 @@ class SnapshotTable:
             extra["new_file_shapes"] = {n: cls for n in names}
         return names, extra
 
-    def _frame(self, spark: SparkSession, m: Dict, files: List[str],
-               merge_schema: bool = True) -> DataFrame:
+    def _frame(self, spark: SparkSession, m: Dict,
+               files: List[str]) -> DataFrame:
         """Data files of manifest ``m`` in its logical schema, hidden
-        envelopes included, geometry columns stamped."""
-        df = (spark.read.option("mergeSchema", str(merge_schema).lower())
-              .parquet(*[os.path.join(self.path, f) for f in files]))
+        envelopes included, geometry columns stamped.  The files are read
+        in the schema the manifest records, so no footer is opened to plan
+        the read; a manifest written before the table recorded its schema
+        is read with the footers' union."""
+        paths = [os.path.join(self.path, f) for f in files]
+        if "schema" in m:
+            df = spark.read.schema(StructType.fromJson(m["schema"])) \
+                .parquet(*paths)
+        else:
+            df = spark.read.option("mergeSchema", "true").parquet(*paths)
         return _stamp(_project_schema(df, m.get("schema_ops", [])), m)
 
     # -- public surface -----------------------------------------------------
@@ -469,17 +532,17 @@ class SnapshotTable:
         df = self._frame(spark, m, m["files"])
         return df, _hidden(m, df.columns)
 
-    def read(self, spark: SparkSession, version: Optional[int] = None,
-             merge_schema: bool = True) -> DataFrame:
+    def read(self, spark: SparkSession,
+             version: Optional[int] = None) -> DataFrame:
         """The table as of ``version`` (latest when None) — time travel.
 
-        ``merge_schema=True`` gives additive schema evolution (Iceberg
-        add-column): an append may carry new columns, and older files read
-        them as NULL.  A version whose files predate the column doesn't
-        show it — evolution is part of history.  (Iceberg resolves the
-        schema from table metadata instead of file footers; over plain
-        parquet the footer union is the equivalent, at a small
-        footer-read cost per file.)
+        The version's manifest records the schema its files hold, as
+        Iceberg's table metadata does, and the read declares it: no footer
+        is read to plan it.  Additive schema evolution (Iceberg
+        add-column): an append may carry new columns, the commit adds them
+        to the recorded schema, and older files read them as NULL.  A
+        version committed before the column doesn't show it — evolution is
+        part of history.
 
         Manifest ``schema_ops`` (ALTER TABLE history) are applied on top:
         adds project a typed NULL until data carries the column, renames
@@ -489,7 +552,7 @@ class SnapshotTable:
         hide the column.  Ops are per-version: time travel to a
         pre-ALTER snapshot sees the old schema."""
         m = self._manifest(version)
-        return _user(self._frame(spark, m, m["files"], merge_schema), m)
+        return _user(self._frame(spark, m, m["files"]), m)
 
     # -- schema evolution (ALTER TABLE) -------------------------------------
 
@@ -505,11 +568,12 @@ class SnapshotTable:
         if kind == "add":
             if op["name"] in cols:
                 raise ValueError(f"column {op['name']!r} already exists")
-            # if any live file still carries the (previously dropped) name,
-            # new data must be written under a fresh physical name
-            raw = spark.read.option("mergeSchema", "true").parquet(
-                *[os.path.join(self.path, f) for f in m["files"]])
-            if op["name"] in raw.columns:
+            # a name the files may already hold (dropped, or renamed away)
+            # is written under a fresh physical name; without a recorded
+            # schema any name may be held
+            held = StructType.fromJson(m["schema"]).fieldNames() \
+                if "schema" in m else None
+            if held is None or op["name"] in held:
                 op = dict(op, physical=f"{op['name']}__g{m['version'] + 1}")
         if kind == "rename":
             if op["from"] not in cols:
@@ -521,6 +585,11 @@ class SnapshotTable:
         ops = list(m.get("schema_ops", [])) + [op]
         extra = {"schema_ops": ops}
         g = op["from"] if kind == "rename" else op["name"]
+        if kind == "add":
+            # the new column's field, under its physical name
+            extra["new_schema"] = spark.range(0).select(
+                F.lit(None).cast(op["type"])
+                .alias(op.get("physical", g))).schema.jsonValue()
         if kind == "add" and geometry:
             extra["geometry_columns"] = geo + [g]
         if kind == "rename" and m.get("file_shapes"):
@@ -913,7 +982,8 @@ class SnapshotTable:
         base = self._manifest()["version"]
         return self._commit(target["files"], f"rollback-to-{version}",
                             base_version=base,
-                            extra={"schema_ops": target.get("schema_ops", []),
+                            extra={"schema": target.get("schema"),
+                                   "schema_ops": target.get("schema_ops", []),
                                    "geometry_columns":
                                    target.get("geometry_columns", []),
                                    "new_file_shapes":
@@ -1014,7 +1084,8 @@ class SnapshotTable:
         base = self._manifest()["version"]
         return self._commit(target["files"], f"set-current-to-{version}",
                             base_version=base,
-                            extra={"schema_ops": target.get("schema_ops", []),
+                            extra={"schema": target.get("schema"),
+                                   "schema_ops": target.get("schema_ops", []),
                                    "geometry_columns":
                                    target.get("geometry_columns", []),
                                    "new_file_shapes":
@@ -1037,10 +1108,14 @@ class SnapshotTable:
         cur = self._manifest()
         new_files = ([f for f in cur["files"] if f not in removed]
                      + sorted(added - set(cur["files"])))
+        # the picked files' schema joins the current one; unknown when the
+        # picked snapshot recorded none
+        schema = ({"new_schema": picked["schema"]} if "schema" in picked
+                  else {"schema": None})
         return self._commit(new_files, f"cherrypick-{version}",
                             base_version=cur["version"],
                             extra={"new_file_shapes":
-                                   picked.get("file_shapes")})
+                                   picked.get("file_shapes"), **schema})
 
     def remove_orphans(self,
                        older_than_seconds: float = 3 * 24 * 3600) -> dict:

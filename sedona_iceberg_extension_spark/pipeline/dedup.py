@@ -912,7 +912,10 @@ def embedding_dup_pairs(df: DataFrame, id_col: str, vec_col: str,
 def embedding_dup_pairs_exact(df: DataFrame, id_col: str, vec_col: str,
                               threshold: float = 0.95) -> DataFrame:
     """All-pairs exact form — the verifier for the LSH path on small slices;
-    quadratic by construction, never the at-scale default."""
+    quadratic by construction, never the at-scale default.  No query calls
+    it: it is the ground truth that ``tests/test_pipeline.py`` compares
+    ``embedding_dup_pairs`` against, kept beside it so the verifier and the
+    operator share ``vec_norm``/``cosine_sim_prenorm``."""
     a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
                   vec_norm(F.col(vec_col)).alias("_na"))
     b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"),

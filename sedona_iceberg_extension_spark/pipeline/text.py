@@ -1,7 +1,7 @@
 """Text-analysis operators for large-scale training-data pipelines.
 
 Tier E of the engine (SURVEY.md §2 Tier E — beyond the reference's spatial
-surface): language-ID, quality scoring, token counting, fingerprinting.
+surface): language-ID, quality metrics, token counting, fingerprinting.
 
 Design rule for this whole module: **every operator is a native Catalyst
 expression** — no Python UDFs anywhere.  At 100 TB these run inside
@@ -69,32 +69,11 @@ def punct_ratio(col: Column) -> Column:
     return removed.cast("double") / F.greatest(F.length(col), F.lit(1)).cast("double")
 
 
-def digit_ratio(col: Column) -> Column:
-    removed = F.length(col) - F.length(F.regexp_replace(col, r"[0-9]", ""))
-    return removed.cast("double") / F.greatest(F.length(col), F.lit(1)).cast("double")
-
-
 def mean_token_len(col: Column) -> Column:
     toks = tokens(col)
     total = F.aggregate(F.transform(toks, F.length),
                         F.lit(0).cast("long"), lambda a, v: a + v.cast("long"))
     return total.cast("double") / F.greatest(F.size(toks), F.lit(1)).cast("double")
-
-
-def quality_score(col: Column) -> Column:
-    """Composite quality in [0,1]: favors mid-length docs with low punct/digit
-    noise and a healthy stopword ratio — the standard cheap pre-filter for
-    LLM corpus curation (C4/Gopher-style heuristics, simplified)."""
-    n_tok = F.size(tokens(col)).cast("double")
-    len_score = F.least(n_tok / F.lit(64.0), F.lit(1.0))
-    sw = stopword_ratio(col)
-    sw_score = F.least(sw * F.lit(4.0), F.lit(1.0))
-    noise = punct_ratio(col) + digit_ratio(col)
-    noise_score = F.greatest(F.lit(0.0), F.lit(1.0) - noise * F.lit(4.0))
-    mtl = mean_token_len(col)
-    mtl_score = F.when((mtl >= 2.0) & (mtl <= 12.0), F.lit(1.0)).otherwise(F.lit(0.5))
-    return (len_score * F.lit(0.3) + sw_score * F.lit(0.2)
-            + noise_score * F.lit(0.3) + mtl_score * F.lit(0.2))
 
 
 # -- language identification -------------------------------------------------

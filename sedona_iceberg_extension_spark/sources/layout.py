@@ -1,81 +1,17 @@
-"""Physical table layout for scale: bucketed writes (co-located joins) and
-spatial grid partitioning (partition-pruned spatial scans).
+"""Physical table layout for scale: the Z-order (Morton) value that
+``SnapshotTable.rewrite_data_files(sort_order=...)`` clusters files by.
 
 The reference gets file skipping from geolake-Iceberg stats and spatial
 partition pruning from Iceberg partition transforms (README.md:3-6 of the
-reference).  Over plain parquet the same two levers are:
-
-- **bucketing** (``bucketBy`` on the join key): two tables bucketed the same
-  way join with ZERO shuffle — the sort-merge join reads co-located buckets.
-  At 100 TB this removes the dominant exchange from every fact-fact join that
-  repeats a key (lineitem ⋈ orders on orderkey).
-- **grid partitioning** (``partitionBy`` on a geohash-like cell column):
-  spatial range predicates prune entire directories before any file is
-  opened (PartitionFilters), the analogue of Iceberg's partition-transform
-  pruning the reference relies on.
+reference).  Snapshot tables carry both levers: partition transforms live
+in the manifest's partition spec, and each geometry column's stored
+envelope gives range reads parquet min/max pruning.  Z-order sorting is
+what makes those min/max stats tight on several columns at once.
 """
 
 from __future__ import annotations
 
-from typing import Optional
-
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
-
-
-def write_bucketed(df: DataFrame, table_name: str, key: str,
-                   num_buckets: int = 32, sort_by: Optional[str] = None,
-                   path: Optional[str] = None) -> None:
-    """Persist as a bucketed table (saveAsTable — bucket metadata lives in
-    the session catalog / warehouse).  Joins between tables bucketed on the
-    same key with the same bucket count plan without an Exchange."""
-    w = df.write.mode("overwrite").bucketBy(num_buckets, key)
-    w = w.sortBy(sort_by or key)
-    if path:
-        w = w.option("path", path)
-    w.saveAsTable(table_name)
-
-
-def grid_cell(x: Column, y: Column, cell_deg: float = 10.0) -> Column:
-    """Integer grid cell id for a point — a native, order-preserving-enough
-    geohash analogue: cell = (floor((y+90)/d) * ceil(360/d)) + floor((x+180)/d)."""
-    import math
-    ncols = int(math.ceil(360.0 / cell_deg))
-    cx = F.floor((x + F.lit(180.0)) / F.lit(cell_deg)).cast("long")
-    cy = F.floor((y + F.lit(90.0)) / F.lit(cell_deg)).cast("long")
-    return (cy * ncols + cx).alias("grid_cell")
-
-
-def write_grid_partitioned(df: DataFrame, path: str, x_col: str, y_col: str,
-                           cell_deg: float = 10.0) -> None:
-    """Write parquet partitioned by spatial grid cell.  Range queries that
-    constrain the envelope to a handful of cells scan only those directories
-    (PartitionFilters at the scan — asserted in tests)."""
-    out = df.withColumn("grid_cell",
-                        grid_cell(F.col(x_col), F.col(y_col), cell_deg))
-    out.write.mode("overwrite").partitionBy("grid_cell").parquet(path)
-
-
-def cells_for_envelope(xmin: float, ymin: float, xmax: float, ymax: float,
-                       cell_deg: float = 10.0) -> list:
-    """All grid cells overlapping an envelope — the pruning predicate for a
-    spatial range query over a grid-partitioned table."""
-    import math
-    ncols = int(math.ceil(360.0 / cell_deg))
-    c0 = int(math.floor((xmin + 180.0) / cell_deg))
-    c1 = int(math.floor((xmax + 180.0) / cell_deg))
-    r0 = int(math.floor((ymin + 90.0) / cell_deg))
-    r1 = int(math.floor((ymax + 90.0) / cell_deg))
-    return [r * ncols + c for r in range(r0, r1 + 1) for c in range(c0, c1 + 1)]
-
-
-def read_grid_range(spark: SparkSession, path: str,
-                    xmin: float, ymin: float, xmax: float, ymax: float,
-                    cell_deg: float = 10.0) -> DataFrame:
-    """Scan of a grid-partitioned table pruned to the envelope's cells; the
-    exact spatial predicate still applies above (two-level relaxed+exact,
-    same contract as SURVEY.md §2 Tier B)."""
-    cells = cells_for_envelope(xmin, ymin, xmax, ymax, cell_deg)
-    return spark.read.parquet(path).filter(F.col("grid_cell").isin(cells))
+from pyspark.sql import Column, functions as F
 
 
 def zorder_value(cols, mins, maxs, bits: int = 10) -> Column:

@@ -245,9 +245,9 @@ def _jobs(spark, statement) -> int:
 
 def test_dml_job_counts(spark, table):
     """Each statement's Spark job count, pinned: copy-on-write must not
-    grow a job unnoticed (a read of the live files, the touched-file list,
-    a read of the touched files, the rewrite, the view refresh; MERGE adds
-    its duplicate-key check)."""
+    grow a job unnoticed (the touched-file list, the rewrite; MERGE adds
+    its duplicate-key check; INSERT is its write).  Reads declare the
+    manifest's schema, so planning one runs no footer job."""
     spark.sql("SELECT id, 'm' AS data, 0.0 AS x, 0.0 AS y, "
               "ST_Point(0.0D, 0.0D) AS geo FROM RANGE(95, 105) t(id)"
               ).createOrReplaceTempView("jobs_src")
@@ -259,5 +259,10 @@ def test_dml_job_counts(spark, table):
         "merge": _jobs(spark, f"MERGE INTO {TBL} t USING jobs_src s "
                        "ON t.id = s.id WHEN MATCHED THEN UPDATE SET * "
                        "WHEN NOT MATCHED THEN INSERT *"),
+        "insert": _jobs(spark, f"INSERT INTO {TBL} VALUES (200, 'i', 1.0, "
+                        "1.0, ST_Point(1.0D, 1.0D))"),
+        "rewrite": _jobs(spark, "CALL demo.system.rewrite_data_files("
+                         f"'{TBL}')"),
     }
-    assert got == {"update": 6, "delete": 6, "merge": 11}
+    assert got == {"update": 3, "delete": 3, "merge": 8, "insert": 1,
+                   "rewrite": 2}

@@ -14,10 +14,8 @@ class _FakeDF:
     """Records which checkpoint variant truncate_lineage picked."""
 
     def __init__(self, has_dir: bool):
-        opt = types.SimpleNamespace(isDefined=lambda: has_dir)
-        jsc_sc = types.SimpleNamespace(getCheckpointDir=lambda: opt)
-        jsc = types.SimpleNamespace(sc=lambda: jsc_sc)
-        ctx = types.SimpleNamespace(_jsc=jsc)
+        ctx = types.SimpleNamespace(
+            getCheckpointDir=lambda: "/ckpt" if has_dir else None)
         self.sparkSession = types.SimpleNamespace(sparkContext=ctx)
         self.calls = []
 

@@ -43,12 +43,11 @@ def test_token_count_native(spark, docs):
 def test_quality_and_ratios(spark, docs):
     out = docs.select(
         "doc_id",
-        text.quality_score(F.col("text")).alias("q"),
         text.stopword_ratio(F.col("text")).alias("sw"),
         text.punct_ratio(F.col("text")).alias("p"),
     ).collect()
-    assert all(0.0 <= r["q"] <= 1.0 for r in out)
     assert all(0.0 <= r["sw"] <= 1.0 for r in out)
+    assert all(0.0 <= r["p"] <= 1.0 for r in out)
 
 
 def test_lang_id_deterministic(spark, docs):

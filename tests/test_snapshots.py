@@ -495,3 +495,66 @@ def test_compact_keeps_a_column_only_some_files_carry(spark, tmp_path):
     got = t.read(spark)
     assert sorted(got.columns) == ["extra", "id"]
     assert got.filter("extra IS NOT NULL").count() == 5
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"snap-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "snapshot jobs")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_and_scan_run_no_job(spark, tmp_path):
+    """The manifest records the schema, so planning a read opens no
+    footer: building the frame runs no Spark job."""
+    t = SnapshotTable.create(spark, str(tmp_path / "j"),
+                             _points(spark, 0, 10).repartition(3))
+    t.append(spark, _points(spark, 10, 20).withColumn("tag", F.lit("n")))
+    assert _jobs(spark, lambda: (t.read(spark), t.scan(spark),
+                                 t.read(spark, version=1))) == 0
+    assert t.read(spark).columns == ["id", "x", "y", "geo", "tag"]
+    assert t.read(spark, version=1).columns == ["id", "x", "y", "geo"]
+    assert t.read(spark).filter("tag IS NULL").count() == 10
+
+
+def test_type_conflicting_append_is_refused(spark, tmp_path):
+    """A write holding a column in another type than the table's is
+    refused at commit: committed, it would leave no readable version."""
+    t = SnapshotTable.create(spark, str(tmp_path / "c"), spark.sql(
+        "SELECT id, CAST(id AS DOUBLE) AS v FROM RANGE(5)"))
+    bad = spark.sql("SELECT CAST(id AS STRING) AS id, CAST(id AS DOUBLE) "
+                    "AS v FROM RANGE(5, 8)")
+    with pytest.raises(ValueError, match=r"'id' is bigint .* as string"):
+        t.append(spark, bad)
+    assert t.versions() == [1]
+    assert t.read(spark).count() == 5
+
+
+def test_manifest_without_schema_reads_its_footers(spark, table):
+    """A manifest written before the table recorded its schema is read
+    with the footers' union; commits on it record none, so such a table
+    keeps reading as it did."""
+    import json
+
+    path = os.path.join(table.snap_dir, "v1.json")
+    with open(path) as fh:
+        m = json.load(fh)
+    del m["schema"]
+    with open(path, "w") as fh:
+        json.dump(m, fh)
+    assert table.read(spark).count() == 100
+    r = table.update_where(spark, {"val": "-val"}, "grp = 3")
+    assert r["rows_updated"] == 10
+    assert "schema" not in table._manifest()
+    got = {(row["id"], row["val"]) for row in table.read(spark).collect()}
+    assert got == {(i, -i * 1.5 if i % 10 == 3 else i * 1.5)
+                   for i in range(100)}

@@ -30,9 +30,10 @@ Usage:  python tools/scan_budget.py [--check] [query ...]
     tools/REHEARSALS.md (one line per round), not auto-failed —
     legitimate plan rewrites move these numbers.
 tests/test_scan_budget.py runs the same gate (run_gate) in the test
-session.  Every gate entry first clears the cache, so an earlier query's
-persist() is not substituted into its plan.  Discover mode does not: its
-committed baseline was taken without clearing.
+session.  Every entry, gated or discovered, first clears the cache, so an
+earlier query's persist() is not substituted into its plan.  The
+committed discover baseline was taken before discover cleared, so
+minhash_threshold_pr_curve reads about 2x its figure there.
 
 Scoping: batch queries are job-group scoped (setJobGroup + statusTracker).
 Structured-Streaming micro-batch jobs run on the stream's OWN thread under
@@ -200,9 +201,12 @@ def gated_input_records(spark, fn, sf_dir: str, group: str) -> int:
 
 def input_records(spark, name: str, sf_dir: str) -> int:
     """One declared query's input records: delta-scoped for streaming_*
-    names, job-group ``scan-budget-<name>`` scoped otherwise."""
+    names, job-group ``scan-budget-<name>`` scoped otherwise.  Clears the
+    cache first: in a shared session an earlier caller's persist() would
+    otherwise be substituted into its plan."""
     from sedona_iceberg_extension_spark.plans.queries import QUERIES
 
+    spark.catalog.clearCache()
     if name.startswith("streaming_"):
         return delta_input_records(spark, QUERIES[name].fn, sf_dir)
     return gated_input_records(spark, QUERIES[name].fn, sf_dir,
@@ -211,12 +215,9 @@ def input_records(spark, name: str, sf_dir: str) -> int:
 
 def run_gate(spark, sf_dir: str, names=None) -> list:
     """One {"query", "input_records", "budget", "ok"} record per gated
-    query (every BUDGETS entry unless ``names`` is given).  Each entry
-    clears the cache first: in a shared session an earlier caller's
-    persist() would otherwise be substituted into its plan."""
+    query (every BUDGETS entry unless ``names`` is given)."""
     out = []
     for name in (names or list(BUDGETS)):
-        spark.catalog.clearCache()
         got = input_records(spark, name, sf_dir)
         out.append({"query": name, "input_records": got,
                     "budget": BUDGETS[name], "ok": got <= BUDGETS[name]})
